@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, floor}
 import graft.engine.{CdcEngine, EngineConf, MicroBatchRunner}
 import graft.icelite.IceliteTable
@@ -9,21 +8,13 @@ import graft.synth.Synth
   * plus the north-rule headline metric — sustained change-events/sec of a
   * deterministic CDC replay (seed=42 synthetic log, hot-repo skew) through
   * the MERGE engine into an icelite table. Prints ONE JSON line.
-  * Scaling evidence across parallelism levels lives in
-  * graft.tools.ScalingBench -> BENCH.md. */
+  * Per-layer CDC figures (replay, binlog, streaming sink) come from
+  * `python3 cdcbench/run.py`. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.sql.IceliteSqlExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus.toInt)
     // session warmup so the alphabetically-first query is not billed for
     // JVM/scheduler/codegen initialization (~3-5s)
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -75,7 +66,7 @@ object Bench {
     val per = (n + k - 1) / k
     // pre-split by micro-batch directory (binlog offset range); a per-batch
     // lsn filter would embed fresh literals -> serial codegen recompile per
-    // batch (see graft.tools.ScalingBench.replay)
+    // batch
     Synth.events(spark, n, seed = 42, repos = 200, pathsPerRepo = 2000,
       hotPct = 30, parts = cpus.toInt * 2)
       .withColumn("__batch", floor(col("commit_lsn") / per))

@@ -22,4 +22,19 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     graft.queries.Relational.oracles ++ graft.queries.TrainingData.oracles ++
       graft.queries.Multimodal.oracles ++ graft.queries.SqlSurface.oracles
+
+  /** The session the runnable mains share: `local[cores]`, one shuffle
+    * partition per core, the icelite SQL extensions, UTC, no UI. */
+  def session(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .withExtensions(new graft.sql.IceliteSqlExtensions)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

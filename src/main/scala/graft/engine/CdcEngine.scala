@@ -21,14 +21,11 @@ import graft.model.ChangeEvent
   *                       aggregates — see docs/DESIGN notes in README).
   * @param writeSaltPerBucket  parallel writer tasks per affected bucket — a hot
   *                       bucket writes multiple data files instead of one big one.
-  * @param mergeShufflePartitions  shuffle partitions for the merge aggregation;
-  *                       0 = leave session setting.
   */
 case class EngineConf(
     buckets: Int = 64,
     saltBuckets: Int = 0,
     writeSaltPerBucket: Int = 1,
-    mergeShufflePartitions: Int = 0,
     // merge-on-read tables only: auto-compact a bucket back to one file
     // once its delta-file count reaches this (0 = manual compaction only).
     // Write-mode guidance for sustained ingest: on a GROWING table (new
@@ -77,11 +74,6 @@ case class EngineConf(
     // recently-written uncommitted files (in-flight writers).
     vacuumAfterExpire: Boolean = false,
     vacuumGraceMillis: Long = 3600000L,
-    // multi-writer optimistic concurrency: how many consecutive commit
-    // races (CommitConflictException) a copy-on-write applyBatch re-merges
-    // through before giving up. Each retry recomputes the merge against
-    // the fresh snapshot; the loser's data files are vacuum-grace orphans.
-    maxCommitRetries: Int = 8,
     // key-fingerprint bitmap width (bits) stored per merge-on-read delta
     // file in the manifest (Iceberg Puffin-bloom analog; 0 = disabled).
     // Computed INSIDE the existing per-bucket lineage aggregation — zero
@@ -482,18 +474,6 @@ class CdcEngine(
     // Merge-on-read appends and branch commits don't need it: an append
     // folds the PARENT's file lists inside the commit lock, and a branch
     // commit validates its own head.
-    def attempt(): CommitResult = {
-      if (conf.mergeShufflePartitions <= 0) return applyBatchInner(epoch, batchRaw, stage, branch)
-      // merge-width override is scoped to this batch: leaking it into the
-      // shared session would silently re-plan every later query on it
-      val saved = spark.conf.getOption("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", conf.mergeShufflePartitions)
-      try applyBatchInner(epoch, batchRaw, stage, branch)
-      finally saved match {
-        case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
-        case None => spark.conf.unset("spark.sql.shuffle.partitions")
-      }
-    }
     // The CAS pin has a second loss mode besides the conflict at commit
     // time: the merge READS the pinned snapshot unprotected, so a
     // concurrent winner whose commit triggers retention/vacuum can expire
@@ -520,17 +500,17 @@ class CdcEngine(
       val headBefore = table.currentSnapshotId
       def loseRace(detail: String): Option[CommitResult] = {
         conflicts += 1
-        if (conflicts > conf.maxCommitRetries)
+        if (conflicts > CdcEngine.MaxCommitRetries)
           throw new Icelite.CommitConflictException(
             s"epoch $epoch lost ${conflicts} consecutive commit races " +
-              s"(maxCommitRetries=${conf.maxCommitRetries}): $detail")
+              s"(maxCommitRetries=${CdcEngine.MaxCommitRetries}): $detail")
         // the winner may have BEEN this epoch (re-delivery race):
         // exactly-once resolves it as a skip, not a re-merge
         if (branch.isEmpty && table.committedEpochs.contains(epoch))
           Some(CommitResult(epoch, table.currentSnapshotId, skipped = true, 0, 0, 0))
         else None
       }
-      try return attempt()
+      try return applyBatchInner(epoch, batchRaw, stage, branch)
       catch {
         case e: Icelite.CommitConflictException =>
           loseRace(e.getMessage).foreach(return _)
@@ -1926,6 +1906,11 @@ object CdcEngine {
   val OpCell = "_op"
   val TsCell = "_ts"
   private val SaltCol = "__salt"
+  /** Multi-writer optimistic concurrency: how many consecutive commit
+    * races (CommitConflictException) a copy-on-write applyBatch re-merges
+    * through before giving up. Each retry recomputes the merge against the
+    * fresh snapshot; the loser's data files are vacuum-grace orphans. */
+  private val MaxCommitRetries = 8
 
   /** Marks a FULL (un-bucket-pruned) state read — current or time-travel —
     * as a candidate for metadata-only global aggregates: [[IceliteMetaAggRule

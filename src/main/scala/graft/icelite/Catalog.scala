@@ -85,14 +85,21 @@ class IceliteCatalog(val root: Path) {
     * them, so a committer crash (or a racing read) can leave HEAD lagging
     * by one: heal by probing forward — versions are dense integers, so one
     * existence miss ends the probe. Healing rewrites the hint so the probe
-    * stays O(1) amortized. */
+    * stays O(1) amortized — best-effort, so a reader that cannot write
+    * (read-only mount, reduced permissions) still gets the right answer. */
   def version: Long = lock.synchronized {
     var v = if (Files.exists(headFile)) Files.readString(headFile).trim.toLong else 0L
     var healed = false
     while (Files.exists(versionFile(v + 1))) { v += 1; healed = true }
-    if (healed) Icelite.write(headFile, v.toString)
+    if (healed)
+      try writeHeadHint(v)
+      catch { case scala.util.control.NonFatal(_) => }
     v
   }
+
+  /** Write the HEAD hint (a cache of the newest version, never the truth). */
+  protected def writeHeadHint(version: Long): Unit =
+    Icelite.write(headFile, version.toString)
 
   private val versionCache =
     new java.util.concurrent.ConcurrentHashMap[Long, CatalogVersion]()
@@ -180,7 +187,7 @@ class IceliteCatalog(val root: Path) {
       throw new CatalogConflictException(
         s"catalog version ${next.version} was committed by a concurrent " +
           "process; re-read and retry")
-    Icelite.write(headFile, next.version.toString)
+    writeHeadHint(next.version)
     next
   }
 

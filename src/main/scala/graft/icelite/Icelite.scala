@@ -302,8 +302,11 @@ class IceliteTable private (val root: Path) {
       write(pointer, childId.toString)
     } else {
       val theirs = Files.readString(claim).trim.toLong
-      if (theirs == childId) { write(pointer, childId.toString); return }
+      // both completions write only while the pointer still sits on the
+      // parent: a late duplicate must not move it back past later commits
+      // (the check-to-write window stays open cross-process)
       if (currentSnapshotId == parentId) write(pointer, theirs.toString)
+      if (theirs == childId) return
       throw new CommitConflictException(
         s"concurrent committer won the transition from snapshot $parentId " +
           s"(to $theirs); re-read and retry")
@@ -840,7 +843,7 @@ class IceliteTable private (val root: Path) {
     // accumulated carried set, and the next expiry evicts that root — a
     // `batchEpoch`-only carry silently dropped the whole accumulated
     // ledger there, so an epoch two retention-windows old re-APPLIED on
-    // re-delivery (double data). Caught by StreamIngestBench's 500-epoch
+    // re-delivery (double data). Caught by a 500-epoch streaming-sink
     // ledger assert after ~12 expiry cycles; pinned by the repeated-expiry
     // re-delivery test in IceliteSpec.
     val epochsToCarry = expired.flatMap(_.carriedEpochs) ++

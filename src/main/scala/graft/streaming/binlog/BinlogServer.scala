@@ -37,11 +37,14 @@ import scala.collection.mutable.ArrayBuffer
   * base64-encoded so payloads may contain any character):
   *   LATEST                       ->  "<hw0> <hw1> ... <hwP-1>"
   *   EARLIEST                     ->  "<start0> <start1> ... <startP-1>"
-  *   FETCH <part> <from> <until>  ->  one "<offset> <base64>" line per
-  *                                    surviving record, then "END"; or one
-  *                                    "ERR ..." line when the range starts
-  *                                    below log-start (retention truncated
-  *                                    it) or ends past the high-water
+  *   FETCH <part> <from> <until>  ->  one "B <base64>" line per block of
+  *                                    up to BatchRecs surviving records,
+  *                                    each block repeated
+  *                                    [offset:8][len:4][payload] — then
+  *                                    "END"; or one "ERR ..." line when the
+  *                                    range starts below log-start
+  *                                    (retention truncated it) or ends past
+  *                                    the high-water
   *   PUBLISH <part> <b64value>            ->  "<assigned offset>" (unkeyed)
   *   PUBLISH <part> <b64key> <b64value>   ->  "<assigned offset>" (keyed)
   *   TRUNCATE <part> <newStart>   ->  "<new log-start>" (retention: drops
@@ -57,7 +60,7 @@ import scala.collection.mutable.ArrayBuffer
   * 10^10-event replay cannot afford content-dedup on read.
   */
 object BinlogServer {
-  /** Records per FETCHB block (see the FETCHB handler). */
+  /** Records per FETCH block (see the FETCH handler). */
   val BatchRecs = 512
 }
 
@@ -190,38 +193,14 @@ final class BinlogServer(val partitions: Int, host: String = null) {
           case "LATEST" =>
             out.write(latest.mkString(" ")); out.newLine(); out.flush()
           case "FETCH" =>
+            // records travel packed — blocks of up to BatchRecs records,
+            // each block one base64 line of repeated
+            // [offset:8][len:4][payload] — so the client pays one readLine
+            // + one base64 decode per block, not per record.
             val (p, from, until) = (parts(1).toInt, parts(2).toLong, parts(3).toLong)
             val log = logs(p)
             // Either an ERR line or the records — never both, so the client
             // can treat the first line as the verdict.
-            val sliceOrErr = log.synchronized {
-              if (from < logStart(p))
-                Left(s"ERR truncated: partition $p starts at ${logStart(p)}, fetch from $from")
-              else if (until > nextOffset(p))
-                Left(s"ERR past high-water: partition $p ends at ${nextOffset(p)}, fetch until $until")
-              else Right(log.view.slice(lowerBound(log, from), lowerBound(log, until)).toVector)
-            }
-            sliceOrErr match {
-              case Left(err) =>
-                out.write(err); out.newLine(); out.flush()
-              case Right(slice) =>
-                slice.foreach { rec =>
-                  out.write(rec.offset.toString); out.write(' ')
-                  out.write(Base64.getEncoder.encodeToString(rec.payload)); out.newLine()
-                }
-                out.write("END"); out.newLine(); out.flush()
-                synchronized { recordsServed += slice.size }
-            }
-          case "FETCHB" =>
-            // batched framing: same range contract as FETCH, but records
-            // travel packed — blocks of up to BatchRecs records, each block
-            // one base64 line of repeated [offset:8][len:4][payload] —
-            // so the client pays one readLine + one base64 decode per
-            // block instead of per record. At 6M-record benches the
-            // per-record line framing was a measurable slice of the
-            // consumer-side CPU that capped ingest scaling.
-            val (p, from, until) = (parts(1).toInt, parts(2).toLong, parts(3).toLong)
-            val log = logs(p)
             val sliceOrErr = log.synchronized {
               if (from < logStart(p))
                 Left(s"ERR truncated: partition $p starts at ${logStart(p)}, fetch from $from")
@@ -330,42 +309,14 @@ final class BinlogClient(host: String, port: Int) extends AutoCloseable {
   }
 
   /** Stream the surviving records of [from, until) lazily as
-    * (offset, payload) — the reader pulls rows off the socket as Spark
-    * consumes them, never materializing the range. Offsets are explicit on
-    * the wire because compaction leaves gaps. Throws IllegalStateException
-    * if the server reports the range truncated (below log-start) or past
-    * the high-water mark — the Kafka offset-out-of-range analog, surfaced
-    * loudly rather than as silent data loss. */
+    * (offset, payload) — blocks decode as Spark pulls rows, never
+    * materializing the range. Offsets are explicit on the wire because
+    * compaction leaves gaps. Throws IllegalStateException if the server
+    * reports the range truncated (below log-start) or past the high-water
+    * mark — the Kafka offset-out-of-range analog, surfaced loudly rather
+    * than as silent data loss. */
   def fetch(partition: Int, from: Long, until: Long): Iterator[(Long, String)] = {
     send(s"FETCH $partition $from $until")
-    new Iterator[(Long, String)] {
-      private var nextLine: String = advance()
-      private def advance(): String = {
-        val l = in.readLine()
-        if (l != null && l.startsWith("ERR "))
-          throw new IllegalStateException(s"binlog fetch failed: ${l.drop(4)}")
-        if (l == null || l == "END") null else l
-      }
-      def hasNext: Boolean = nextLine != null
-      def next(): (Long, String) = {
-        val sp = nextLine.indexOf(' ')
-        val off = nextLine.substring(0, sp).toLong
-        val r = new String(Base64.getDecoder.decode(nextLine.substring(sp + 1)),
-          StandardCharsets.UTF_8)
-        nextLine = advance()
-        (off, r)
-      }
-    }
-  }
-
-  /** Batched-framing fetch (FETCHB): same contract and result shape as
-    * [[fetch]], but the wire carries packed blocks of up to
-    * [[BinlogServer.BatchRecs]] records — one readLine + one base64
-    * decode per block instead of per record, which is the consumer-side
-    * CPU that matters at millions of records per trigger. Blocks decode
-    * lazily as Spark pulls rows. */
-  def fetchBatched(partition: Int, from: Long, until: Long): Iterator[(Long, String)] = {
-    send(s"FETCHB $partition $from $until")
     new Iterator[(Long, String)] {
       private var block: java.nio.ByteBuffer = null
       private var done = false

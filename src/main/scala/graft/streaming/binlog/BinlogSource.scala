@@ -69,8 +69,8 @@ private[binlog] final class BinlogTable(options: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
   /** Broker endpoints. Either a single `host`/`port` pair, or `brokers` =
     * "host:port,host:port,..." for a SHARDED log: broker i owns every
-    * partition p with p % nBrokers == i (the loader side,
-    * [[graft.tools.BinlogBroker]], applies the same rule). Sharding is the
+    * partition p with p % nBrokers == i (whoever loads the brokers applies
+    * the same rule). Sharding is the
     * production topology — a Kafka cluster IS many brokers each owning a
     * partition subset — and it removes the single-accept-loop/handler-JVM
     * bottleneck that capped ingest scaling when one broker served all 16
@@ -254,7 +254,7 @@ private[binlog] object BinlogReaderFactory extends PartitionReaderFactory {
     val p = partition.asInstanceOf[BinlogInputPartition]
     new PartitionReader[InternalRow] {
       private val client = new BinlogClient(p.host, p.port)
-      private val records = client.fetchBatched(p.partition, p.from, p.until)
+      private val records = client.fetch(p.partition, p.from, p.until)
       private var current: InternalRow = _
 
       override def next(): Boolean = {

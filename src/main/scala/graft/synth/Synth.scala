@@ -25,7 +25,7 @@ object Synth {
 
   /** Per-repo rollup of a change batch, shaped as change events for a
     * table keyed (repo): the dim-table side of a dim+fact multi-table
-    * transaction (CatalogSpec, CdcDemo, TxnBench, q86). One row per repo:
+    * transaction (CatalogSpec, CdcDemo, q86). One row per repo:
     * `commit_lsn` = the batch's max LSN for the repo (so LWW across
     * epochs keeps the latest rollup), `content` = the batch's row count. */
   def repoRollup(batch: DataFrame): DataFrame =
@@ -87,7 +87,7 @@ object Synth {
     * stage per batch — a serial driver cost (~seconds/batch) that caps
     * scaling. Benches must deliver batches as separate parquet DIRECTORIES
     * (`events/__batch=N`, identical plan per batch → janino cache hit), as
-    * Bench/ScalingBench/MorBench do. */
+    * Bench and cdcbench do. */
   def batches(df: DataFrame, k: Int, n: Long, seed: Long = 42L,
       shuffleDelivery: Boolean = false): Seq[DataFrame] = {
     if (k <= 1) Seq(df)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
 import graft.streaming.CdcStream
@@ -18,16 +17,7 @@ object CdcDemo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("cdcdemo").toString)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("cdc-demo")
-      .withExtensions(new graft.sql.IceliteSqlExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session(8)
 
     val input = s"$work/stream"
     val ckpt = s"$work/ckpt"

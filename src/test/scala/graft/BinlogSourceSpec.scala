@@ -174,8 +174,8 @@ class BinlogSourceSpec extends AnyFunSuite {
         out.println("PUBLISH 99 cGF5bG9hZA==") // partition out of range
         assert(in.readLine().startsWith("ERR"))
         out.println("FETCH 0 0 1") // the SAME connection still works
-        assert(in.readLine() === "0 " + java.util.Base64.getEncoder
-          .encodeToString("x".getBytes("UTF-8")))
+        val block = java.nio.ByteBuffer.allocate(13).putLong(0L).putInt(1).put("x".getBytes("UTF-8"))
+        assert(in.readLine() === "B " + java.util.Base64.getEncoder.encodeToString(block.array()))
         assert(in.readLine() === "END")
       } finally sock.close()
     } finally server.stop()
@@ -329,28 +329,34 @@ class BinlogSourceSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
-  test("batched fetch framing returns exactly the per-record frames, " +
-      "blocks and gaps included") {
+  test("block-framed fetch returns exactly the appended records, gaps included") {
     val server = new BinlogServer(1)
     try {
-      // more records than one FETCHB block, including empty and spacey
-      // payloads, then compact so the range has offset gaps
+      // more records than two FETCH blocks, including empty and spacey
+      // payloads; fetched whole, then again after compaction left gaps
       val n = BinlogServer.BatchRecs * 2 + 37
-      (0 until n).foreach(i => server.append(0, s"k${i % 50}", s"payload $i é"))
-      server.append(0, "")
-      server.compact(0)
+      val appended = (0 until n).map { i =>
+        val key = s"k${i % 50}"
+        val payload = s"payload $i é"
+        (server.append(0, key, payload), key, payload)
+      } :+ ((server.append(0, ""), null, ""))
       val c = new BinlogClient(server.address, server.port)
       try {
-        val plain = c.fetch(0, 0, n + 1).toVector
-        val batched = c.fetchBatched(0, 0, n + 1).toVector
-        assert(batched === plain, "FETCHB must frame exactly FETCH's records")
-        assert(batched.size === 51, "compaction left last-per-key + unkeyed")
+        assert(c.fetch(0, 0, n + 1).toVector === appended.map(r => (r._1, r._3)))
+        server.compact(0)
+        // survivors: the last record of each of the 50 keys, plus the
+        // unkeyed empty record, in offset order
+        val lastPerKey = appended.filter(_._2 != null).groupBy(_._2).values.map(_.last._1).toSet
+        val survivors = appended.filter(r => r._2 == null || lastPerKey(r._1))
+          .map(r => (r._1, r._3))
+        assert(survivors.size === 51)
+        assert(c.fetch(0, 0, n + 1).toVector === survivors)
       } finally c.close()
     } finally server.stop()
   }
 
   test("sharded broker fleet: owner-routed fetches reassemble the full log") {
-    // two servers, each owning p % 2 == idx (the BinlogBroker loader rule):
+    // two servers, each owning p % 2 == idx (the brokers option's owner rule):
     // the source's merged control plane + routing must yield exactly the
     // single-server result through the stock streaming path
     val all = eventsAsJson(4000)

@@ -390,6 +390,24 @@ class CatalogSpec extends AnyFunSuite {
       !java.nio.file.Files.exists(cat.root.resolve(s"cat-$ev0.json"))))
   }
 
+  test("a reader that cannot write the HEAD hint still reads the healed version") {
+    val work = SparkTestBase.tmpDir("cat-ro")
+    val (_, _, cat) = mkPair(work)
+    val v = cat.version
+    // a committer died between its version file and the HEAD hint
+    val head = java.nio.file.Paths.get(s"$work/cat/HEAD")
+    java.nio.file.Files.writeString(head, (v - 1).toString)
+    val readOnly = new IceliteCatalog(java.nio.file.Paths.get(s"$work/cat")) {
+      override protected def writeHeadHint(version: Long): Unit =
+        throw new java.nio.file.AccessDeniedException(head.toString)
+    }
+    assert(readOnly.version === v)
+    assert(readOnly.refs().keySet === Set("files", "repos"))
+    assert(java.nio.file.Files.readString(head).trim === (v - 1).toString)
+    assert(cat.version === v) // a writer still heals the hint
+    assert(java.nio.file.Files.readString(head).trim === v.toString)
+  }
+
   test("catalog versions give cross-table consistent time travel") {
     val work = SparkTestBase.tmpDir("cat-tt")
     val (files, repos, cat) = mkPair(work)

@@ -656,17 +656,6 @@ class EngineSpec extends AnyFunSuite {
     assert(boot.filter(col("repo") === "old-repo").count() === 40)
   }
 
-  test("applyBatch's merge shuffle-partition override does not leak into the session") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val engine = newEngine(EngineConf(buckets = 4, mergeShufflePartitions = 7))
-    engine.applyBatch(0, Synth.events(spark, 200, seed = 44))
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before,
-      "session shuffle.partitions must round-trip across applyBatch")
-    // and the override is applied again (and restored again) on the next batch
-    engine.applyBatch(1, Synth.events(spark, 200, seed = 45))
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
-  }
-
   test("lineage records source offset ranges per bucket") {
     val ev = Synth.events(spark, 500, seed = 6)
     val engine = newEngine(EngineConf(buckets = 4))

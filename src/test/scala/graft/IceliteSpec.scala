@@ -162,7 +162,7 @@ class IceliteSpec extends AnyFunSuite {
     // batchEpochs — once the first expiry's root (holding the accumulated
     // carriedEpochs) was itself expired, the whole earlier ledger vanished
     // and an ancient re-delivery re-APPLIED (double data). Surfaced by
-    // StreamIngestBench's 500-epoch ledger assert after ~12 expiry cycles.
+    // a 500-epoch streaming-sink ledger assert after ~12 expiry cycles.
     val t = mkTable()
     val sid = t.ensureSchema(schemaA)
     var next = 0L
@@ -222,6 +222,21 @@ class IceliteSpec extends AnyFunSuite {
     assert(b.bucketFilesOf(s)("0").map(_.path) === List("a0.parquet"))
     assert(b.bucketFilesOf(s)("1").map(_.path) === List("b0.parquet"))
     assert(b.committedEpochs === Set(0L, 1L))
+  }
+
+  test("a late duplicate completion of a claimed transition cannot move the pointer back") {
+    val t = mkTable()
+    val sid = t.ensureSchema(schemaA)
+    val s0 = t.commit(0, sid, Map(0 -> List(f("a.parquet"))), Nil, 1)
+    val s1 = t.commit(1, sid, Map(0 -> List(f("b.parquet"))), Nil, 1) // claims s0 -> s1
+    val s2 = t.commit(2, sid, Map(0 -> List(f("c.parquet"))), Nil, 1)
+    // a second publisher of s0 -> s1 that passed its freshness check before
+    // s2 landed (another process, so no shared lock) completes it late
+    val advance = classOf[IceliteTable].getDeclaredMethod("advancePointer",
+      classOf[Long], classOf[Long])
+    advance.setAccessible(true)
+    advance.invoke(t, Long.box(s0.snapshotId), Long.box(s1.snapshotId))
+    assert(t.currentSnapshotId === s2.snapshotId, "the pointer regressed to a superseded snapshot")
   }
 
   test("vacuum grace period protects recently-written uncommitted files") {
