@@ -113,6 +113,6 @@ object Bench {
     // sweep the CDC work dir (~0.5 GB/run; leaked dirs from repeated driver
     // rounds once filled the disk). SPARK_GRAFT_KEEP_WORK keeps it.
     if (!sys.env.contains("SPARK_GRAFT_KEEP_WORK"))
-      graft.tools.ScalingBench.deleteRecursivelyPublic(java.nio.file.Paths.get(work))
+      graft.icelite.Icelite.deleteTree(java.nio.file.Paths.get(work))
   }
 }

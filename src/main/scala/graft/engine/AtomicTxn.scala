@@ -85,12 +85,17 @@ object AtomicTxn {
       // exactly what this attempt staged instead of leaking invisible
       // orphans until an opt-in recover(sweepOrphans = true)
       val staged = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      // set once commitTxn returns: from then on the catalog may pin the
+      // stages, so no failure may drop them — completion belongs to
+      // publishPending (next commit) or recover
+      var pastCommit = false
       try {
         writes.foreach { case (name, engine, batch) =>
           staged(name) = engine.stageBatch(epoch, batch).snapshotId
         }
         // 2. the ATOMIC point: one catalog version names every staged id
         val committed = catalog.commitTxn(epoch, staged.toMap, expected)
+        pastCommit = true
         // a FOREIGN committer may have applied this txn between our replay
         // check and the commit (commitTxn then no-ops, returning the
         // foreign version): our stages are redundant, the foreign
@@ -107,16 +112,17 @@ object AtomicTxn {
         staged.foreach { case (name, sid) => engines(name).publishStaged(sid) }
         return committed.version
       } catch {
-        case _: CatalogConflictException =>
+        case _: CatalogConflictException if !pastCommit =>
           // lost the CAS race: our staged merges are stale — drop and redo
           dropStale(engines, staged.toMap)
           attempt += 1
           if (attempt > maxRetries)
             throw new CatalogConflictException(
               s"txn $epoch lost the catalog race $attempt times; giving up")
-        case scala.util.control.NonFatal(e) =>
-          // terminal failure: same cleanup, then rethrow — the attempt's
-          // stages must not sit invisible awaiting a manual sweep
+        case scala.util.control.NonFatal(e) if !pastCommit =>
+          // terminal failure before the commit point: same cleanup, then
+          // rethrow — the attempt's stages must not sit invisible awaiting
+          // a manual sweep
           dropStale(engines, staged.toMap)
           throw e
       }

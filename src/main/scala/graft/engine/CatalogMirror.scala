@@ -1,10 +1,8 @@
 package graft.engine
 
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
-import graft.icelite.IceliteCatalog
+import graft.icelite.{Icelite, IceliteCatalog}
 
 /** Catalog-level downstream consumer: mirrors an entire TABLE SET behind an
   * [[graft.icelite.IceliteCatalog]], driven by its transaction-aligned
@@ -32,9 +30,10 @@ import graft.icelite.IceliteCatalog
   *
   * Exactly-once composes catalog-wide with no new machinery: the source
   * version is the transaction id, so a crashed/re-run sync replays as an
-  * AtomicTxn no-op; the checkpoint file is only a fast path (the mirror
-  * catalog's own txn ledger is the durable record, same discipline as
-  * FeedConsumer's snapshot-id epochs).
+  * AtomicTxn no-op, and the mirror catalog's own txn ledger is the durable
+  * record of progress (same discipline as FeedConsumer's snapshot-id
+  * epochs). The checkpoint file adds what no ledger holds: the DDL-only
+  * windows, which commit no mirror transaction.
   *
   * A table enrolled in the source AFTER `from` arrives with window
   * `(-1, snap]` — a bootstrap full delivery (the caller registers its
@@ -59,9 +58,9 @@ class CatalogMirror(
       e
     })
 
-  /** Highest source catalog version this mirror holds: the durable answer
-    * is the mirror catalog's own txn ledger (txn ids ARE source versions);
-    * the checkpoint file only short-circuits the common case. */
+  /** Highest source catalog version this mirror holds: the mirror
+    * catalog's own txn ledger (txn ids ARE source versions), or the
+    * checkpoint when a later DDL-only window committed nothing. */
   def lastSynced: Long = {
     val fromFile =
       if (Files.exists(ckpt)) Files.readString(ckpt).trim.toLong else 0L
@@ -105,30 +104,13 @@ class CatalogMirror(
         throw new IllegalArgumentException(s"no source engine for table '$name'"))
       val mirror = ensureMirror(name)
       if (toSnap < 0 || toSnap == fromSnap) None
-      else {
-        val feed = src.changesSince(fromSnap, toSnapshotId = toSnap)
-        val envelope = Set("_op", "_lsn", "_seq", "_ts", "content_sha256")
-        val keys = mirror.table.meta.keyCols
-        val payload = feed.columns.filterNot(c =>
-          envelope.contains(c) || keys.contains(c))
-        val batch = feed.select(
-          keys.map(col) ++ payload.map(col) ++ Seq(
-            col("_op").as("op"),
-            lit(toSnap).as("commit_lsn"), // per-sync stamp, FeedConsumer rule
-            lit(0).as("seq"),
-            col("_ts").as("ts")): _*)
-        Some((name, mirror, batch))
-      }
+      else Some((name, mirror, FeedConsumer.windowBatch(src, mirror, fromSnap, toSnap)))
     }
     if (writes.nonEmpty)
       AtomicTxn.commit(mirrorCat, toVersion, writes)
     // a DDL-only or empty window still advances the checkpoint: nothing to
     // apply, and replaying it later would no-op anyway
-    val tmp = ckpt.resolveSibling("mirror-checkpoint.txt.tmp")
-    Files.writeString(tmp, toVersion.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, ckpt, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Icelite.write(ckpt, toVersion.toString)
     toVersion
   }
 }

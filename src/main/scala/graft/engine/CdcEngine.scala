@@ -139,6 +139,34 @@ case class EngineConf(
     // when enabled) and counts come from parquet footers driver-side.
     dlqDir: String = "")
 
+object EngineConf {
+
+  /** A comma-separated column list ("repo, path"), blanks dropped. */
+  def columnList(s: String): Seq[String] = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** Engine settings from string options (the `icelite` sink's
+    * `.option(...)`s): the defaults at the table's current layout, with
+    * each option that is present overriding its field. */
+  def fromOptions(table: IceliteTable, opts: Map[String, String]): EngineConf = {
+    val d = EngineConf(buckets = table.currentBuckets)
+    def opt[T](name: String, default: T)(parse: String => T): T =
+      opts.get(name).fold(default)(parse)
+    d.copy(
+      writeSaltPerBucket = opt("writeSaltPerBucket", d.writeSaltPerBucket)(_.toInt),
+      morCompactThreshold = opt("morCompactThreshold", d.morCompactThreshold)(_.toInt),
+      morMinorRatio = opt("morMinorRatio", d.morMinorRatio)(_.toDouble),
+      zorderCols = opt("zorderCols", d.zorderCols)(columnList),
+      tombstonePurgeLagLsn = opt("tombstonePurgeLagLsn", d.tombstonePurgeLagLsn)(_.toLong),
+      retainSnapshots = opt("retainSnapshots", d.retainSnapshots)(_.toInt),
+      vacuumAfterExpire = opt("vacuumAfterExpire", d.vacuumAfterExpire)(_.toBoolean),
+      vacuumGraceMillis = opt("vacuumGraceMillis", d.vacuumGraceMillis)(_.toLong),
+      statsCols = opt("statsCols", d.statsCols)(columnList),
+      writeSortCols = opt("writeSortCols", d.writeSortCols)(columnList),
+      writeMaxFileRows = opt("writeMaxFileRows", d.writeMaxFileRows)(_.toLong),
+      dlqDir = opt("dlqDir", d.dlqDir)(identity))
+  }
+}
+
 case class CommitResult(
     epoch: Long,
     snapshotId: Long,
@@ -525,7 +553,7 @@ class CdcEngine(
   }
 
   private def applyBatchInner(epoch: Long, batchRaw: DataFrame, stage: Boolean,
-      branch: Option[String] = None): CommitResult = {
+      branch: Option[String]): CommitResult = {
     val t0 = System.nanoTime()
     def ms(since: Long): Long = (System.nanoTime() - since) / 1000000
 
@@ -917,15 +945,8 @@ class CdcEngine(
     * the commit, so an uncommitted epoch must not leave a stale quarantine
     * directory behind. A corrected re-delivery rewrites it. */
   private def dropDlqEpochs(epochs: Iterable[Long]): Unit =
-    if (conf.dlqDir.nonEmpty) epochs.foreach { e =>
-      val dir = Paths.get(conf.dlqDir).resolve(s"epoch=$e")
-      if (Files.exists(dir)) {
-        val stream = Files.walk(dir)
-        try stream.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally stream.close()
-      }
-    }
+    if (conf.dlqDir.nonEmpty)
+      epochs.foreach(e => Icelite.deleteTree(Paths.get(conf.dlqDir).resolve(s"epoch=$e")))
 
   /** Audit failed: discard the staged snapshot — manifest and the data files
     * only it references — leaving the table as if the batch never arrived.
@@ -1535,31 +1556,6 @@ class CdcEngine(
     }
   }
 
-  /** Compaction: rewrite each selected bucket's file list into one file
-    * (Iceberg's rewrite_data_files). The MERGE is copy-on-write per bucket,
-    * so multiple files per bucket arise from salted hot-bucket writes
-    * (`writeSaltPerBucket` > 1) — compaction folds them back to one file per
-    * bucket for cheaper state reads. Commits a new snapshot (batchEpoch=-1 —
-    * not an ingest epoch); older snapshots keep referencing the old files,
-    * so time travel is unaffected and `vacuum` (which walks the whole chain)
-    * keeps them until snapshots are expired. Returns the new snapshot id.
-    *
-    * `sortBy` (Iceberg's rewrite with a SORT ORDER): cluster each bucket's
-    * rows by the named payload columns (then key, for stable output) before
-    * writing, and `maxFileRows` splits the sorted bucket into several files
-    * of at most that many rows — consecutive, so their `sortBy` value
-    * ranges are DISJOINT. Combined with `EngineConf.statsCols` covering the
-    * same columns, that turns the harvested per-file bounds into a tight
-    * skip index: `scanRange` on the sorted column opens ~selectivity
-    * × files instead of all of them. The split files are all `merged`
-    * (key-unique and key-disjoint — a sequential cut of one key-unique
-    * sorted partition), so reads stay raw (no LWW re-merge) and point
-    * lookups still prune by bucket + parquet key blooms.
-    *
-    * `zorderBy` (mutually exclusive with `sortBy`): cluster on the MORTON
-    * key of 2-4 payload columns instead — see [[zorderKey]] — so after the
-    * maxFileRows split a predicate on ANY named column prunes files, not
-    * just the lexicographic leading one. */
   /** Threshold auto-compaction ([[EngineConf.morCompactThreshold]]):
     * [[compact]] restricted to the over-threshold buckets, applying the
     * table's DECLARED sort order (`writeSortCols`/`writeMaxFileRows` —
@@ -1629,7 +1625,33 @@ class CdcEngine(
     graft.functions.VecOps.interleaveBits(codes)
   }
 
-  /** Rewrite buckets back to one merged file each (all of them by default).
+  /** Compaction: rewrite each selected bucket's file list (all buckets by
+    * default) into one file (Iceberg's rewrite_data_files). The MERGE is
+    * copy-on-write per bucket, so multiple files per bucket arise from
+    * salted hot-bucket writes (`writeSaltPerBucket` > 1) — compaction folds
+    * them back to one file per bucket for cheaper state reads. Commits a
+    * new snapshot (batchEpoch=-1 — not an ingest epoch); older snapshots
+    * keep referencing the old files, so time travel is unaffected and
+    * `vacuum` (which walks the whole chain) keeps them until snapshots are
+    * expired. Returns the new snapshot id.
+    *
+    * `sortBy` (Iceberg's rewrite with a SORT ORDER): cluster each bucket's
+    * rows by the named payload columns (then key, for stable output) before
+    * writing, and `maxFileRows` splits the sorted bucket into several files
+    * of at most that many rows — consecutive, so their `sortBy` value
+    * ranges are DISJOINT. Combined with `EngineConf.statsCols` covering the
+    * same columns, that turns the harvested per-file bounds into a tight
+    * skip index: `scanRange` on the sorted column opens ~selectivity
+    * × files instead of all of them. The split files are all `merged`
+    * (key-unique and key-disjoint — a sequential cut of one key-unique
+    * sorted partition), so reads stay raw (no LWW re-merge) and point
+    * lookups still prune by bucket + parquet key blooms.
+    *
+    * `zorderBy` (mutually exclusive with `sortBy`): cluster on the MORTON
+    * key of 2-4 payload columns instead — see [[zorderKey]] — so after the
+    * maxFileRows split a predicate on ANY named column prunes files, not
+    * just the lexicographic leading one.
+    *
     * `purgeTombstonesBelowLsn` >= 0 additionally DROPS tombstone rows whose
     * delete LSN is below the line — visible state is unchanged (tombstoned
     * keys were already hidden) and value-level change feeds diff states so
@@ -1893,7 +1915,7 @@ class CdcEngine(
   // ---------------------------------------------------------------- misc
 
   private def appendMetrics(epoch: Long, snapId: Long, events: Long, buckets: Int,
-      ms: Long, extra: String = ""): Unit = {
+      ms: Long, extra: String): Unit = {
     val line = s"""{"epoch":$epoch,"snapshotId":$snapId,"events":$events,""" +
       s""""buckets":$buckets,"millis":$ms,"eventsPerSec":${if (ms > 0) events * 1000.0 / ms else 0.0}$extra}"""
     val p = table.root.resolve("metrics.jsonl")
@@ -1946,25 +1968,6 @@ object CdcEngine {
     * thread pool: sequential they cost ~10 ms x file count per commit, a
     * SERIAL (Amdahl) term that visibly caps replay scaling efficiency at
     * high parallelism. */
-  /** Total row count of every parquet file under `dir`, from footers only
-    * (driver-side metadata reads — no Spark job). */
-  private[engine] def footerRows(dir: Path,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Long = {
-    if (!Files.exists(dir)) return 0L
-    val stream = Files.walk(dir)
-    val paths =
-      try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .toList
-      finally stream.close()
-    paths.map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), hadoopConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
-
   private[engine] def collectBucketFiles(dir: Path, table: IceliteTable, schemaId: Int,
       hadoopConf: org.apache.hadoop.conf.Configuration,
       merged: Boolean = false,

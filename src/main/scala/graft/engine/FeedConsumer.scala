@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Downstream consumer of a table's logical change feed — the analog of the
@@ -23,28 +23,26 @@ import org.apache.spark.sql.functions._
   * CHANGE a value without raising the row's visible `_lsn`; re-stamping by
   * `_lsn` would tie with the previous sync's cell and lose the update).
   *
-  * Exactly-once: the applied epoch IS the source snapshot id, so a crashed/
-  * re-run sync re-applies idempotently; the checkpoint file is only a fast
-  * path (like MicroBatchRunner's).
+  * Exactly-once and resume: the applied epoch IS the source snapshot id,
+  * and snapshot ids only grow along a chain, so the mirror's highest
+  * committed epoch is the last synced snapshot — the mirror's own ledger
+  * is the checkpoint, and a crashed/re-run sync re-applies idempotently.
   */
 class FeedConsumer(val source: CdcEngine, val mirror: CdcEngine) {
-
-  private val ckpt = mirror.table.root.resolve("feed-checkpoint.txt")
 
   /** Manifest reads spent walking the source chain to enumerate a backlog
     * (observability: asserts the drain's walk is O(backlog) total, not
     * O(backlog²/step) from re-walking the remainder on every step). */
   private[graft] var backlogWalkReads: Long = 0L
 
-  def lastSynced: Long =
-    if (Files.exists(ckpt)) Files.readString(ckpt).trim.toLong else -1L
+  def lastSynced: Long = mirror.table.lastEpoch
 
   /** Pull the feed up to the source's current snapshot and apply it.
     * Returns the number of changed rows applied (0 = already in sync). */
   def sync(): Long = syncTo(source.table.currentSnapshotId)
 
   /** Drain a backlog in BOUNDED steps: each step syncs a window of at most
-    * `maxSnapshotsPerStep` source snapshots and commits mirror + checkpoint
+    * `maxSnapshotsPerStep` source snapshots and commits it to the mirror
     * before the next, so a crash mid-backlog resumes from the last
     * completed step instead of re-diffing everything — the pacing knob a
     * consumer weeks behind a 10^10-event table needs. Each step's diff is
@@ -103,22 +101,27 @@ class FeedConsumer(val source: CdcEngine, val mirror: CdcEngine) {
     // window pinned to the snapshot observed above: a source commit landing
     // between the read and the apply cannot leak into this sync (it is
     // delivered, completely, by the next one)
+    mirror.applyBatch(upTo, FeedConsumer.windowBatch(source, mirror, since, upTo)).events
+  }
+}
+
+object FeedConsumer {
+
+  /** The change batch that replays the source feed window `(since, upTo]`
+    * onto `mirror`: one event per changed key (the mirror's key columns,
+    * then the payload), stamped `commit_lsn = upTo`, `seq = 0` — the
+    * per-sync stamp the class doc explains. Shared with [[CatalogMirror]],
+    * so both consumers turn a window into a batch by one rule. */
+  private[engine] def windowBatch(source: CdcEngine, mirror: CdcEngine,
+      since: Long, upTo: Long): DataFrame = {
     val feed = source.changesSince(since, toSnapshotId = upTo)
+    val keys = mirror.table.meta.keyCols
     val envelope = Set("_op", "_lsn", "_seq", "_ts", "content_sha256")
-    val payload = feed.columns.filterNot(c =>
-      envelope.contains(c) || c == "repo" || c == "path")
-    val batch = feed.select(
-      Seq(col("repo"), col("path")) ++ payload.map(col) ++ Seq(
-        col("_op").as("op"),
-        lit(upTo).as("commit_lsn"), // per-sync stamp: see class doc
-        lit(0).as("seq"),
-        col("_ts").as("ts")): _*)
-    val applied = mirror.applyBatch(upTo, batch)
-    val tmp = ckpt.resolveSibling("feed-checkpoint.txt.tmp")
-    Files.writeString(tmp, upTo.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, ckpt, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    applied.events
+    val payload = feed.columns.filterNot(c => envelope.contains(c) || keys.contains(c))
+    feed.select(keys.map(col) ++ payload.map(col) ++ Seq(
+      col("_op").as("op"),
+      lit(upTo).as("commit_lsn"),
+      lit(0).as("seq"),
+      col("_ts").as("ts")): _*)
   }
 }

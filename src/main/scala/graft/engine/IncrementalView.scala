@@ -1,11 +1,11 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
-import java.util.Comparator
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.icelite.Icelite
 import graft.model.ChangeEvent
 
 /** Incrementally maintained materialized aggregate over an icelite table —
@@ -166,11 +166,7 @@ class IncrementalView(
       }
     val dir = root.resolve(s"v$upTo")
     next.write.mode("overwrite").parquet(dir.toString)
-    val tmp = ckpt.resolveSibling("view-checkpoint.txt.tmp")
-    Files.writeString(tmp, upTo.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, ckpt, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Icelite.write(ckpt, upTo.toString)
     prune(keep = Set(upTo, since))
     if (changedGroups >= 0) changedGroups
     else spark.read.parquet(dir.toString).count()
@@ -183,15 +179,8 @@ class IncrementalView(
     val listing = Files.list(root)
     try listing.forEach { p =>
       val n = p.getFileName.toString
-      if (n.startsWith("v") && !live.contains(n) && Files.isDirectory(p)) {
-        val walk = Files.walk(p)
-        // streams closed explicitly: prune runs once per refresh, and a
-        // per-batch refresh loop would otherwise leak two directory fds
-        // per call until "Too many open files"
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
+      if (n.startsWith("v") && !live.contains(n) && Files.isDirectory(p))
+        Icelite.deleteTree(p)
     } finally listing.close()
   }
 }

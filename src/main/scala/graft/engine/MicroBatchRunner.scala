@@ -1,13 +1,12 @@
 package graft.engine
 
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
 import org.apache.spark.sql.DataFrame
 
-/** Deterministic micro-batch driver: applies (epoch, batch) pairs in order,
-  * maintaining a checkpoint file so a restarted driver resumes where it left
-  * off without recomputing (the table's epoch set remains the authoritative
-  * idempotency guard — the checkpoint is only a fast path; losing it is safe,
-  * replaying through it is safe).
+/** Deterministic micro-batch driver: applies (epoch, batch) pairs in order.
+  * The table's epoch ledger is the only record of progress — a restarted
+  * driver simply replays its batches, and `applyBatch` skips each epoch
+  * already committed before any Spark job runs. So any epoch missing from
+  * the ledger is applied, whatever higher epochs landed before it.
   *
   * Mirrors the reference's replay loop over sorted snapshot folders with
   * commit-every-N (/root/reference/ingestion.py:114-127,
@@ -16,33 +15,6 @@ import org.apache.spark.sql.DataFrame
   */
 class MicroBatchRunner(val engine: CdcEngine) {
 
-  private val ckptPath = engine.table.root.resolve("checkpoint.json")
-
-  def checkpointEpoch: Long =
-    if (Files.exists(ckptPath))
-      "\"lastEpoch\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(Files.readString(ckptPath))
-        .map(_.group(1).toLong).getOrElse(-1L)
-    else -1L
-
-  private def writeCheckpoint(epoch: Long, snapshotId: Long): Unit = {
-    val tmp = ckptPath.resolveSibling("checkpoint.json.tmp")
-    Files.writeString(tmp, s"""{"lastEpoch":$epoch,"snapshotId":$snapshotId}""",
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, ckptPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Run batches; epochs at or below the checkpoint are skipped without
-    * touching Spark at all (fast resume). */
-  def run(batches: Seq[(Long, DataFrame)]): Seq[CommitResult] = {
-    val from = checkpointEpoch
-    batches.map { case (epoch, df) =>
-      if (epoch <= from)
-        CommitResult(epoch, engine.table.currentSnapshotId, skipped = true, 0, 0, 0)
-      else {
-        val r = engine.applyBatch(epoch, df)
-        writeCheckpoint(epoch, r.snapshotId)
-        r
-      }
-    }
-  }
+  def run(batches: Seq[(Long, DataFrame)]): Seq[CommitResult] =
+    batches.map { case (epoch, df) => engine.applyBatch(epoch, df) }
 }

@@ -2,7 +2,6 @@ package graft.icelite
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.json4s._
 import org.json4s.jackson.Serialization
 
 /** A versioned multi-table CATALOG: the missing piece that makes commits

@@ -1,6 +1,6 @@
 package graft.icelite
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
@@ -221,7 +221,10 @@ object Icelite {
     (arr(i >> 3) & (1 << (i & 7))) != 0
   }
 
-  private[icelite] def write(p: Path, s: String): Unit = {
+  /** Atomically replace `p` with content `s`: write a uniquely named temp
+    * sibling, then rename it over `p`, so concurrent writers never share a
+    * temp file and readers see either the old or the new content. */
+  private[graft] def write(p: Path, s: String): Unit = {
     Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp" + System.nanoTime())
     Files.writeString(tmp, s, StandardOpenOption.CREATE_NEW)
@@ -255,11 +258,11 @@ object Icelite {
     finally Files.deleteIfExists(tmp)
   }
 
-  /** Recursively delete a table directory (DROP TABLE PURGE). Lives with
-    * the table format's own file handling so callers (SQL DDL, tools) do
-    * not depend on test/bench utilities for a core operation. */
+  /** Recursively delete a directory (DROP TABLE PURGE, staged-commit and
+    * view-version sweeps, work dirs). A symlink is deleted as a link, never
+    * followed: purging a table must not reach files outside it. */
   def deleteTree(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
       val s = Files.list(p)
       try s.forEach(deleteTree(_)) finally s.close()
     }
@@ -424,7 +427,8 @@ class IceliteTable private (val root: Path) {
     set
   }
 
-  /** Highest committed epoch, or -1. Used for checkpoint resume. */
+  /** Highest committed epoch, or -1. The resume point of a consumer whose
+    * epochs only grow (FeedConsumer's source snapshot ids). */
   def lastEpoch: Long = {
     val e = committedEpochs
     if (e.isEmpty) -1L else e.max
@@ -1116,12 +1120,6 @@ class IceliteTable private (val root: Path) {
     }
   }
 
-  private def nextSchemaId: Int = {
-    var i = 0
-    while (Files.exists(metaDir.resolve(s"schema-$i.json"))) i += 1
-    i
-  }
-
   /** Register a (possibly evolved) schema; returns its id. Reuses the current
     * id if the schema is unchanged. Append-only, like Iceberg's schema list. */
   def ensureSchema(s: StructType): Int = rootLock.synchronized {
@@ -1329,22 +1327,12 @@ class IceliteTable private (val root: Path) {
     val writeDirs = doomed.map(rel => Paths.get(rel).getName(1).toString).toSet
     writeDirs.foreach { d =>
       val hasLive = referenced.exists(p => Paths.get(p).getName(1).toString == d)
-      if (!hasLive) {
-        val dir = root.resolve("data").resolve(d)
-        if (Files.exists(dir)) {
-          val s = Files.walk(dir)
-          val all = try s.iterator().asScala.toList.reverse finally s.close()
-          all.foreach(Files.deleteIfExists(_))
-        }
-      }
+      if (!hasLive) deleteTree(root.resolve("data").resolve(d))
     }
     Files.deleteIfExists(snapPath)
     deregisterStaged(stagedId)
     doomed
   }
-
-  /** Directory that a new commit should write bucket data files into. */
-  def newDataDir(snapshotId: Long): Path = root.resolve("data").resolve(s"snap-$snapshotId")
 
   def relativize(abs: Path): String = root.relativize(abs).toString
 }

@@ -29,7 +29,7 @@ object SqlSurface {
     private val dirs = new scala.collection.mutable.ListBuffer[java.nio.file.Path]
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       dirs.synchronized(dirs.toList).foreach { p =>
-        try graft.tools.ScalingBench.deleteRecursivelyPublic(p)
+        try graft.icelite.Icelite.deleteTree(p)
         catch { case _: Exception => () }
       }))
     def tmp(prefix: String): String = {
@@ -66,7 +66,7 @@ object SqlSurface {
     * root-relative). Orders of magnitude cheaper than re-running the
     * replay that built it. */
   private def cloneTable(src: java.nio.file.Path, dstRoot: String): String = {
-    import java.nio.file.{Files, Path}
+    import java.nio.file.Files
     val dst = java.nio.file.Paths.get(dstRoot)
     val s = Files.walk(src)
     try s.forEach { p =>

@@ -363,7 +363,6 @@ object TrainingData {
     * `connectedComponents`, so the two are interchangeable (and q54 proves
     * it against q42's recursive-closure oracle). */
   def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
-    val s = pairs.sparkSession
     // full endpoint set BEFORE self-loops are dropped: a node appearing
     // only as (a, a) must still come out labeled with itself, exactly as
     // connectedComponents labels it — the "identical contract" claim

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.CdcEngine
+import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
 
 /** SQL maintenance surface: Iceberg-style stored procedures, invoked as
@@ -162,12 +162,10 @@ object IceliteProcedures {
         if (IceliteSql.lookup(spark, name).nonEmpty)
           IceliteSql.fail(s"create_table: ice.$name is already registered")
         val location = input.getUTF8String(1).toString
-        val keys = input.getUTF8String(2).toString.split(",")
-          .map(_.trim).filter(_.nonEmpty).toSeq
+        val keys = EngineConf.columnList(input.getUTF8String(2).toString)
         if (keys.isEmpty) IceliteSql.fail("create_table: key_cols must name at least one column")
         val buckets = input.getInt(3)
-        val statsCols = input.getUTF8String(5).toString.split(",")
-          .map(_.trim).filter(_.nonEmpty).toSeq
+        val statsCols = EngineConf.columnList(input.getUTF8String(5).toString)
         // validate EVERYTHING before touching disk: a failed CALL must not
         // leave an orphan table that blocks the corrected retry
         val colsDdl = input.getUTF8String(6).toString.trim
@@ -189,7 +187,7 @@ object IceliteProcedures {
           t.commit(-1L, sid, Map.empty, Nil, rowDelta = 0) // empty genesis pins schema-0
         }
         IceliteSql.register(spark, name,
-          new CdcEngine(spark, t, graft.engine.EngineConf(
+          new CdcEngine(spark, t, EngineConf(
             buckets = buckets, statsCols = statsCols)))
         Seq(row(name, location, buckets))
       }),
@@ -207,10 +205,9 @@ object IceliteProcedures {
         if (IceliteSql.lookup(spark, name).nonEmpty)
           IceliteSql.fail(s"register_table: ice.$name is already registered")
         val t = IceliteTable.load(input.getUTF8String(1).toString)
-        val statsCols = input.getUTF8String(2).toString.split(",")
-          .map(_.trim).filter(_.nonEmpty).toSeq
+        val statsCols = EngineConf.columnList(input.getUTF8String(2).toString)
         IceliteSql.register(spark, name,
-          new CdcEngine(spark, t, graft.engine.EngineConf(
+          new CdcEngine(spark, t, EngineConf(
             buckets = t.currentBuckets, statsCols = statsCols)))
         Seq(row(name, t.root.toString, t.currentBuckets, t.currentSnapshotId))
       }),
@@ -286,8 +283,7 @@ object IceliteProcedures {
         inD("min_input_files", I, "2", "binpack only: skip buckets with fewer delta files than this")),
       schema("snapshot_id" -> L, "files_before" -> I, "files_after" -> I),
       (_, _, engine, input) => {
-        def cols(ord: Int) = input.getUTF8String(ord).toString.split(",")
-          .map(_.trim).filter(_.nonEmpty).toSeq
+        def cols(ord: Int) = EngineConf.columnList(input.getUTF8String(ord).toString)
         val before = engine.table.currentFiles().size
         val sid = input.getUTF8String(5).toString match {
           case "full" =>

@@ -325,7 +325,7 @@ class IceliteResolveRule(session: SparkSession) extends Rule[LogicalPlan] {
       IceliteMergeCommand(name, alias, Raw(source), Raw(cond),
         Raw(matched), Raw(notMatched), Raw(bySource))
 
-    case i @ InsertIntoStatement(DmlTarget(name, _, _),
+    case InsertIntoStatement(DmlTarget(name, _, _),
         partitionSpec, cols, query, overwrite, _, byName) =>
       if (partitionSpec.nonEmpty)
         fail(s"$Catalog.$name: PARTITION clauses do not apply — physical " +

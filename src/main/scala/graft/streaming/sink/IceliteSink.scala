@@ -70,9 +70,7 @@ class IceliteSink(sqlContext: SQLContext, params: Map[String, String]) extends S
   // silently inventing keys would bake a wrong MERGE identity into the table
   locally {
     if (!IceliteTable.exists(root)) {
-      val keys = params.get("keyCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .filter(_.nonEmpty)
+      val keys = params.get("keyCols").map(EngineConf.columnList).filter(_.nonEmpty)
         .getOrElse(throw new IllegalArgumentException(
           s"icelite sink: no table at $root — pass .option(\"keyCols\", \"repo,path\") " +
             "(plus optional buckets/mergeOnRead) to create it, or create it up front " +
@@ -83,46 +81,13 @@ class IceliteSink(sqlContext: SQLContext, params: Map[String, String]) extends S
     }
   }
 
-  private def engineFor(): CdcEngine = {
-    val t = IceliteTable.load(root)
-    new CdcEngine(sqlContext.sparkSession, t, EngineConf(
-      buckets = t.currentBuckets,
-      writeSaltPerBucket = params.get("writeSaltPerBucket").map(_.toInt).getOrElse(1),
-      morCompactThreshold = params.get("morCompactThreshold").map(_.toInt).getOrElse(0),
-      // size-tiered maintenance: fold deltas (minor) while the pile is
-      // under ratio x base rows, full-rewrite when it rivals the base
-      // (see EngineConf.morMinorRatio)
-      morMinorRatio = params.get("morMinorRatio").map(_.toDouble).getOrElse(0.0),
-      // declared Z-order (see EngineConf.zorderCols): auto-compaction
-      // clusters maintenance output on the Morton key of these columns
-      zorderCols = params.get("zorderCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-      tombstonePurgeLagLsn =
-        params.get("tombstonePurgeLagLsn").map(_.toLong).getOrElse(-1L),
-      retainSnapshots = params.get("retainSnapshots").map(_.toInt).getOrElse(0),
-      vacuumAfterExpire = params.get("vacuumAfterExpire").exists(_.toBoolean),
-      // orphan-file grace for those vacuums (EngineConf default: 1 hour —
-      // safe, but a sustained-ingest run shorter than the grace reclaims
-      // NOTHING and disk grows by the full write volume; set it to a few
-      // multiples of the batch write time, same contract as remove_orphan_files)
-      vacuumGraceMillis = params.get("vacuumGraceMillis").map(_.toLong)
-        .getOrElse(EngineConf().vacuumGraceMillis),
-      // comma-separated payload columns to harvest [min,max] bounds for on
-      // merged writes (column-stats file skipping; see EngineConf.statsCols)
-      statsCols = params.get("statsCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-      // write-time clustering (see EngineConf.writeSortCols)
-      writeSortCols = params.get("writeSortCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
-      writeMaxFileRows = params.get("writeMaxFileRows").map(_.toLong).getOrElse(0L),
-      dlqDir = params.getOrElse("dlqDir", "")))
-  }
-
   override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
     // the frame Spark hands a V1 sink is streaming-tagged; re-wrap it as a
     // batch frame (ForeachBatchSink's trick) so the MERGE can run on it
     val batch: DataFrame = GraftStreamingBridge.asBatchFrame(data.toDF())
-    engineFor().applyBatch(batchId, batch)
+    val t = IceliteTable.load(root)
+    new CdcEngine(sqlContext.sparkSession, t, EngineConf.fromOptions(t, params))
+      .applyBatch(batchId, batch)
   }
 
   override def toString: String = s"IceliteSink[$root]"

@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.nio.file.Files
-
-/** Host helpers shared by the bench entry points: the pure-CPU ceiling
-  * calibration and a recursive delete for their work directories.
+/** The pure-CPU host ceiling calibration shared by the bench entry points.
   * Replay scaling itself is measured by `python3 cdcbench/run.py`.
   */
 object ScalingBench {
@@ -29,14 +26,5 @@ object ScalingBench {
     futures.foreach(_.get())
     pool.shutdown()
     (System.nanoTime() - t0) / 1e9
-  }
-
-  private[graft] def deleteRecursivelyPublic(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      try stream.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally stream.close()
-    }
   }
 }

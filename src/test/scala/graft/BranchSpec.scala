@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite

@@ -108,6 +108,31 @@ class CatalogSpec extends AnyFunSuite {
       "recover must be idempotent")
   }
 
+  test("a publish failure after the catalog commit keeps the pinned stages; recover completes them") {
+    val work = SparkTestBase.tmpDir("cat-publishfail")
+    val (files, repos0, cat) = mkPair(work)
+    // the repos engine fails its first publish — after commitTxn succeeded
+    var failNext = true
+    val repos = new CdcEngine(spark, repos0.table, repos0.conf) {
+      override def publishStaged(stagedId: Long): Long =
+        if (failNext) { failNext = false; throw new IllegalStateException("publish died") }
+        else super.publishStaged(stagedId)
+    }
+    val ev = Synth.events(spark, 2000, seed = 415, repos = 10, pathsPerRepo = 40)
+    intercept[IllegalStateException](
+      AtomicTxn.commit(cat, 0L, Seq(("files", files, ev), ("repos", repos, repoAgg(ev)))))
+    val pinned = cat.refs()("repos").snapshotId
+    assert(cat.versionOfTxn(0L).nonEmpty, "the transaction committed before the failure")
+    assert(repos.table.stagedSnapshotIds.contains(pinned),
+      "the stage the catalog pins was dropped by the failure handler")
+    AtomicTxn.recover(cat, Map("files" -> files, "repos" -> repos))
+    // every table shows the batch, at exactly the snapshot the catalog pins
+    Seq(files, repos).zip(Seq("files", "repos")).foreach { case (e, name) =>
+      assert(e.table.currentSnapshotId === cat.refs()(name).snapshotId, name)
+      assert(e.table.committedEpochs.contains(0L) && stateOf(e).nonEmpty, name)
+    }
+  }
+
   test("a NEXT-epoch commit straight after a torn crash completes the predecessor first") {
     val work = SparkTestBase.tmpDir("cat-torn2")
     val (files, repos, cat) = mkPair(work)
@@ -356,7 +381,7 @@ class CatalogSpec extends AnyFunSuite {
         assert(before.get(k) === after.get(k), s"$name: unchanged key $k drifted"))
     }
     // a table enrolled AFTER fromVersion bootstraps from -1
-    val extra = IceliteTable.create(s"$work/extra", Seq("repo"), 2)
+    IceliteTable.create(s"$work/extra", Seq("repo"), 2)
     cat.registerTable("extra", s"$work/extra")
     assert(cat.changeWindows(v1)("extra")._1 === -1L)
   }

@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{AtomicTxn, CdcEngine, EngineConf}
-import graft.icelite.{Icelite, IceliteCatalog, IceliteTable}
+import graft.icelite.{IceliteCatalog, IceliteTable}
 import graft.tools.RaceWriter
 
 /** The cross-PROCESS concurrency proof: every race in ConcurrencySpec /

@@ -10,7 +10,6 @@ import graft.synth.Synth
 
 class EngineSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
-  import spark.implicits._
 
   val N = 5000L
   val basePayload = Seq("commit", "lang", "content")
@@ -89,7 +88,7 @@ class EngineSpec extends AnyFunSuite {
     val batches = Synth.batches(ev, 4, N).zipWithIndex.map { case (b, i) => (i.toLong, b) }
     val runner = new MicroBatchRunner(engine)
     runner.run(batches.take(2))
-    assert(runner.checkpointEpoch === 1L)
+    assert(engine.table.lastEpoch === 1L)
     // "crash", new runner + engine over the same table
     val engine2 = new CdcEngine(spark, IceliteTable.load(engine.table.root.toString),
       engine.conf)
@@ -113,6 +112,17 @@ class EngineSpec extends AnyFunSuite {
       assert(results.take(cut).forall(_.skipped), s"cut=$cut: committed epochs re-applied")
       assertEquivalent(engine2, ev)
     }
+  }
+
+  test("runner applies a lower epoch that arrives after a higher one") {
+    val ev = Synth.events(spark, 2000, seed = 13)
+    val bs = Synth.batches(ev, 3, 2000)
+    val runner = new MicroBatchRunner(newEngine(EngineConf(buckets = 8)))
+    runner.run(Seq(0L -> bs(0), 2L -> bs(2)))
+    val late = runner.run(Seq(1L -> bs(1))).head
+    assert(!late.skipped && late.events > 0, "epoch 1 is not in the ledger: it must apply")
+    assert(runner.engine.table.committedEpochs === Set(0L, 1L, 2L))
+    assertEquivalent(runner.engine, ev)
   }
 
   test("salted two-phase merge produces identical state under hot-key skew") {
@@ -188,7 +198,6 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("tombstone delete and revival by a later event") {
-    import org.apache.spark.sql.types._
     val engine = newEngine(EngineConf(buckets = 4))
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val rows = Seq(

@@ -241,7 +241,7 @@ class IceliteSpec extends AnyFunSuite {
 
   test("vacuum grace period protects recently-written uncommitted files") {
     val t = mkTable()
-    val sid = t.ensureSchema(schemaA)
+    t.ensureSchema(schemaA)
     // an in-flight writer's file: written, not yet committed
     val inflight = t.root.resolve("data").resolve("pending").resolve("part-0.parquet")
     java.nio.file.Files.createDirectories(inflight.getParent)
@@ -250,6 +250,19 @@ class IceliteSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(inflight))
     assert(t.vacuum(graceMillis = 0).nonEmpty) // past the grace: collected
     assert(!java.nio.file.Files.exists(inflight))
+  }
+
+  test("deleteTree deletes a symlink inside the tree, not the files it points to") {
+    import java.nio.file.Files
+    val dir = java.nio.file.Paths.get(SparkTestBase.tmpDir("deltree"))
+    val outside = Files.createDirectories(dir.resolve("outside"))
+    val kept = Files.writeString(outside.resolve("keep.txt"), "keep")
+    val tree = Files.createDirectories(dir.resolve("tree").resolve("data"))
+    Files.writeString(tree.resolve("part-0.parquet"), "x")
+    Files.createSymbolicLink(tree.resolve("link"), outside)
+    Icelite.deleteTree(dir.resolve("tree"))
+    assert(!Files.exists(dir.resolve("tree")))
+    assert(Files.exists(kept), "deleteTree followed a symlink out of the tree")
   }
 
   test("per-file schema ids group reads by writer schema") {

@@ -23,17 +23,8 @@ object SparkTestBase {
   private val created = new scala.collection.mutable.ListBuffer[java.nio.file.Path]
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     created.synchronized(created.toList).foreach { p =>
-      try deleteRecursively(p) catch { case _: Exception => () }
+      try graft.icelite.Icelite.deleteTree(p) catch { case _: Exception => () }
     }))
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(deleteRecursively(_)) finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
 
   def tmpDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)

@@ -17,7 +17,7 @@ class SqlDmlSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
   private var n = 0
-  private def freshTable(events: Int = 1000, seed: Long = 7): (CdcEngine, String) =
+  private def freshTable(events: Int = 1000, seed: Long): (CdcEngine, String) =
     synchronized {
       n += 1
       val name = s"dml$n"

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{CdcEngine, EngineConf}
