@@ -41,9 +41,11 @@ import graft.icelite.{CatalogConflictException, Icelite, IceliteCatalog}
   * v+1 — the loser's commitTxn raises, it drops its stale stages, first
   * completes the winner's pending publishes (publishPending at the loop
   * head), and retries from the winner's state. The stale-stage publish
-  * hazard the in-JVM lock prevents cannot bite cross-process either:
-  * publishing a snapshot staged against a superseded head fails the
-  * table's own per-parent claim CAS, and the retry loop re-stages.
+  * hazard the in-JVM lock prevents is closed cross-process by reading
+  * `expected` BEFORE publishPending: a foreign txn that commits after that
+  * read, even one committed but not yet published when we stage, bumps the
+  * version, so our CAS fails and the retry's publishPending completes it
+  * instead of our stage superseding its rows.
   * Proven across forked JVMs by CrossProcessSpec's coordinator race.
   *
   * Scale: coordinator work is O(tables) driver-side bookkeeping; all data
@@ -68,6 +70,9 @@ object AtomicTxn {
 
     var attempt = 0
     while (true) {
+      // read before publishPending: every foreign commit it has not seen
+      // then fails our CAS, and the retry completes it first
+      val expected = catalog.version
       // ALWAYS complete a predecessor's pending publishes before staging:
       // a committed-but-unpublished txn left by a crash would otherwise be
       // silently fast-forwarded past (the new stage merges against the
@@ -78,7 +83,6 @@ object AtomicTxn {
         case Some(v) => return v
         case None => ()
       }
-      val expected = catalog.version
       // 1. STAGE each table's merge (invisible; readable by id) — tracked
       // incrementally, so EVERY failure path below (a later table's stage
       // throwing, a commitTxn require, not just the CAS conflict) drops

@@ -13,18 +13,11 @@ import graft.model.ChangeEvent
   *
   * @param buckets        hash buckets of the table (pmod(xxhash64(repo,path), buckets)).
   *                       At 100 TB this would be 2^14..2^16; tests use small values.
-  * @param saltBuckets    >1 enables two-phase salted LWW aggregation: phase 1
-  *                       groups by (key, salt) so a hot key (hot repo) spreads
-  *                       over `saltBuckets` reducers, phase 2 finalizes per key.
-  *                       0/1 = single-phase (Catalyst partial aggregation already
-  *                       combines map-side, which defuses most skew for algebraic
-  *                       aggregates — see docs/DESIGN notes in README).
   * @param writeSaltPerBucket  parallel writer tasks per affected bucket — a hot
   *                       bucket writes multiple data files instead of one big one.
   */
 case class EngineConf(
     buckets: Int = 64,
-    saltBuckets: Int = 0,
     writeSaltPerBucket: Int = 1,
     // merge-on-read tables only: auto-compact a bucket back to one file
     // once its delta-file count reaches this (0 = manual compaction only).
@@ -293,6 +286,11 @@ class CdcEngine(
   /** Payload fields recorded in the table's current (cell-form) schema. */
   private def tablePayload: StructType = payloadOfSchema(table.currentSchema)
 
+  /** Payload fields of the schema pinned by a snapshot (None = the head). */
+  private def payloadAt(snapshotId: Option[Long]): StructType =
+    snapshotId.fold(tablePayload)(id =>
+      payloadOfSchema(Some(table.schema(table.snapshot(id).schemaId))))
+
   // ---------------------------------------------------------------- cells
 
   /** Batch columns whose cast to the reconciled schema is FALLIBLE — able
@@ -382,6 +380,15 @@ class CdcEngine(
       col(s"$OpCell.s").as("_seq"), col(s"$TsCell.v").as("_ts"))): _*)
   }
 
+  /** The visible rows of merged cells, flattened: tombstones dropped, plus
+    * the per-row content invariant `content_sha256` when there is content. */
+  private def visibleRows(cells: DataFrame, payload: StructType): DataFrame = {
+    val flat = flattenCells(cells.filter(col(s"$OpCell.v") =!= lit("D")), payload)
+    if (payload.fieldNames.contains("content"))
+      flat.withColumn("content_sha256", sha2(col("content"), 256))
+    else flat
+  }
+
   /** Read current state (cell form) for some buckets, aligned to the target
     * payload schema.
     *
@@ -424,28 +431,20 @@ class CdcEngine(
 
   /** The ACI last-writer-wins reduction: per key, per cell column, keep the
     * struct with the greatest (l, s) — null cells (column absent = carry
-    * forward) are skipped by max(). Optionally two-phase over a salt to
-    * spread hot keys (north-rule skew handling).
+    * forward) are skipped by max().
     *
     * Plan note: this is a SortAggregate by necessity, and that is the right
     * plan. HashAggregateExec only supports fixed-size primitive aggregation
     * buffers; any latest-row aggregate whose buffer carries a string/struct
     * (max(struct), max_by, window row_number alike) sorts per partition.
     * What matters at scale is preserved: ONE shuffle on the key, map-side
-    * partial aggregation before it, no per-row lookups. (max_by was tried:
+    * partial aggregation before it (which also collapses a hot key's rows
+    * before they reach one reducer), no per-row lookups. (max_by was tried:
     * same SortAggregate, with a second buffer column for the ordering —
     * strictly fatter than max(struct).) */
   private def lwwAgg(df: DataFrame, cellCols: Seq[String]): DataFrame = {
-    def aggs = cellCols.map(c => max(col(c)).as(c))
-    if (conf.saltBuckets > 1) {
-      val salted = df.withColumn(SaltCol,
-        pmod(xxhash64(col(s"$OpCell.l"), col(s"$OpCell.s")), lit(conf.saltBuckets)))
-      val phase1 = salted.groupBy((keyColumns :+ col(SaltCol)): _*)
-        .agg(aggs.head, aggs.tail: _*)
-      phase1.groupBy(keyColumns: _*).agg(aggs.head, aggs.tail: _*)
-    } else {
-      df.groupBy(keyColumns: _*).agg(aggs.head, aggs.tail: _*)
-    }
+    val aggs = cellCols.map(c => max(col(c)).as(c))
+    df.groupBy(keyColumns: _*).agg(aggs.head, aggs.tail: _*)
   }
 
   // ---------------------------------------------------------------- apply
@@ -567,11 +566,7 @@ class CdcEngine(
     // buckets. The conflict raises and applyBatchImpl re-merges fresh.
     val observedParent: Long =
       if (branch.isEmpty) table.currentSnapshotId else -2L
-    val basePayload = asOfHead match {
-      case Some(id) => payloadOfSchema(Some(table.schema(table.snapshot(id).schemaId)))
-      case None => tablePayload
-    }
-    val targetPayload = SchemaEvolve.reconcile(basePayload, payloadOf(batchRaw))
+    val targetPayload = SchemaEvolve.reconcile(payloadAt(asOfHead), payloadOf(batchRaw))
     val cellCols = Seq(OpCell, TsCell) ++ targetPayload.fieldNames
 
     // Per-bucket source-offset lineage straight off the raw batch (one cheap
@@ -644,52 +639,18 @@ class CdcEngine(
           asOfSnapshot = asOfHead.orElse(
             if (observedParent >= 0) Some(observedParent) else None))), cellCols)
 
-    // Write affected buckets copy-on-write; salt the repartition so a hot
-    // bucket is written by several tasks (multiple files per bucket is fine —
-    // the manifest lists files, not "the file").
-    val tw0 = System.nanoTime()
-    val outDir = table.root.resolve("data").resolve(f"e$epoch%d-${System.nanoTime()}%x")
-    val writeTasks = math.max(1, affected.size * math.max(1, conf.writeSaltPerBucket))
-    val toWrite = merged.withColumn("__b", bucketCol)
-    val repartitioned =
-      if (conf.writeSaltPerBucket > 1)
-        toWrite.withColumn(SaltCol, pmod(xxhash64(col("path")), lit(conf.writeSaltPerBucket)))
-          .repartition(writeTasks, col("__b"), col(SaltCol)).drop(SaltCol)
-      else toWrite.repartition(writeTasks, col("__b"))
-    // bloom filters on the key columns: point lookups prune to a bucket via
-    // the manifest, then the parquet reader's bloom check skips row groups
-    // inside multi-file/multi-group buckets (free at read: Spark consults
-    // blooms automatically for pushed-down equality predicates)
+    // Write affected buckets: COW rewrites are merged final state, MOR
+    // deltas are not; only a COW rewrite pays the declared write sort order
+    // (a MOR table gets it at compaction, see EngineConf.writeSortCols).
     val sortNow = if (mor) Nil
       else conf.writeSortCols.filter(targetPayload.fieldNames.contains)
-    val ordered =
-      if (sortNow.isEmpty) repartitioned
-      else repartitioned.sortWithinPartitions(
-        (col("__b") +: (sortNow.map(c => col(s"$c.v")) ++ keyColumns)): _*)
-    val writer = ordered.write
-      .option("parquet.bloom.filter.enabled#repo", "true")
-      .option("parquet.bloom.filter.enabled#path", "true")
-    (if (!mor && conf.writeMaxFileRows > 0)
-       writer.option("maxRecordsPerFile", conf.writeMaxFileRows)
-     else writer)
-      .partitionBy("__b").parquet(outDir.toString)
-    val mergeWriteMs = ms(tw0)
-
-    // Manifest entries + per-bucket state row counts + file-level LSN
-    // stats, all from the parquet FOOTERS of the files just written
-    // (driver-side metadata reads, ~ms per file) — NOT a Spark job: at
-    // 4 jobs/batch the driver's serial job-planning time becomes the
-    // Amdahl term that caps scaling efficiency.
-    val tm0 = System.nanoTime()
-    val sid = table.ensureSchema(stateSchema(targetPayload))
-    // COW rewrites hold merged final state (stats-prunable); MOR deltas are
-    // neither merged nor harvested (see EngineConf.statsCols).
-    val bucketFiles = collectBucketFiles(outDir, table, sid,
-      spark.sessionState.newHadoopConf(), merged = !mor,
-      statsCols = if (mor) Nil else typedStatsCols(targetPayload))
+    val written = writeBuckets(merged, targetPayload, f"e$epoch%d", affected.size,
+      merged = !mor,
+      cluster = if (sortNow.isEmpty) None else Some(sortNow.map(c => col(s"$c.v"))),
+      maxFileRows = if (mor) 0L else conf.writeMaxFileRows,
+      salt = conf.writeSaltPerBucket)
     val bucketRows: Map[Int, Long] =
-      bucketFiles.map { case (b, files) => b -> files.map(_.rows).sum }
-    val manifestMs = ms(tm0)
+      written.files.map { case (b, files) => b -> files.map(_.rows).sum }
     val lineage = appliedRows.map { r =>
       val b = r.getInt(0)
       Icelite.BucketLineage(b, r.getLong(1), r.getLong(2), r.getLong(3),
@@ -707,12 +668,12 @@ class CdcEngine(
         .collect { case (b, fps) if fps.size <= conf.keyFpBits / 4 =>
           b -> Icelite.fpBitmap(fps, conf.keyFpBits)
         }.toMap
-    val manifestFiles = bucketFiles.map { case (b, fs) =>
+    val manifestFiles = written.files.map { case (b, fs) =>
       b -> fpByBucket.get(b).map(bm => fs.map(_.copy(keyFp = Some(bm)))).getOrElse(fs)
     }
 
     val tc0 = System.nanoTime()
-    val snap = table.commit(epoch, sid, manifestFiles, lineage, rowDelta = events,
+    val snap = table.commit(epoch, written.schemaId, manifestFiles, lineage, rowDelta = events,
       append = mor, stage = stage, toBranch = branch,
       // CAS only where staleness loses data: a COW main commit rewrites
       // whole buckets from the pinned read; MOR appends fold the fresh
@@ -724,41 +685,13 @@ class CdcEngine(
     // both to publishStaged, a branch commit to publishBranch (dropping
     // either must leave the table untouched)
     val tp0 = System.nanoTime()
-    if (!stage && branch.isEmpty) {
-      if (mor && conf.morCompactThreshold > 0) {
-        // the delta manifest lists exactly the touched buckets (with their
-        // complete post-append lists) — the only ones that can newly cross
-        // the threshold, so no full-map resolution is needed here
-        val overFiles = snap.bucketDelta.collect {
-          case (b, files) if files.size >= conf.morCompactThreshold =>
-            b.toInt -> files
-        }
-        // a compaction losing a commit race is NOT a batch failure — the
-        // batch is committed; the still-over-threshold buckets re-trigger
-        // on the next batch
-        if (overFiles.nonEmpty)
-          try {
-            if (conf.morMinorRatio > 0) {
-              // size-tiered: fold the pile while it is small next to the
-              // base; full rewrite (with purge) only when it rivals the
-              // base or there is no base yet to fold against
-              val (major, minor) = overFiles.keySet.partition { b =>
-                val fs = overFiles(b)
-                val base = fs.filter(_.merged).map(_.rows).sum
-                base == 0 || fs.filterNot(_.merged).map(_.rows).sum >=
-                  conf.morMinorRatio * base
-              }
-              if (minor.nonEmpty) compactDeltas(Some(minor))
-              if (major.nonEmpty) autoCompact(major)
-            } else autoCompact(overFiles.keySet)
-          } catch { case _: Icelite.CommitConflictException => }
-      }
-      maybeExpire(newSnapshots = if (mor && conf.morCompactThreshold > 0) 2 else 1)
-    }
+    // the delta manifest lists exactly the touched buckets
+    if (!stage && branch.isEmpty) maintain(snap, snap.bucketDelta.keys.map(_.toInt), 1)
     val maintMs = ms(tp0)
     val totalMs = ms(t0)
     appendMetrics(epoch, snap.snapshotId, events, affected.size, totalMs,
-      s""","lineageMs":$lineageMs,"mergeWriteMs":$mergeWriteMs,"manifestMs":$manifestMs""" +
+      s""","lineageMs":$lineageMs,"mergeWriteMs":${written.writeMs}""" +
+        s""","manifestMs":${written.harvestMs}""" +
         s""","commitMs":$commitMs,"maintMs":$maintMs""" +
         (if (stage) ""","staged":true""" else "") +
         (if (rejected > 0) s""","rejected":$rejected""" else "") +
@@ -802,14 +735,8 @@ class CdcEngine(
       val id = table.currentSnapshotId
       if (id >= 0) Some(id) else None
     }
-    val schemaAt = pinned.map(id => table.schema(table.snapshot(id).schemaId))
-    val payload = payloadOfSchema(schemaAt)
-    val cells = readStateCells(buckets, payload, pinned)
-    val base = flattenCells(cells.filter(col(s"$OpCell.v") =!= lit("D")), payload)
-    val out =
-      if (payload.fieldNames.contains("content"))
-        base.withColumn("content_sha256", sha2(col("content"), 256))
-      else base
+    val payload = payloadAt(pinned)
+    val out = visibleRows(readStateCells(buckets, payload, pinned), payload)
     // full-table reads advertise themselves to the metadata-only aggregate
     // rewrite (bucket-pruned reads don't: manifest sums cover ALL buckets);
     // the tag carries the PINNED snapshot, not "head"
@@ -871,9 +798,7 @@ class CdcEngine(
     snap match {
       case None => Some((None, None))
       case Some(s) =>
-        val schemaAt =
-          if (asOfSnapshot >= 0) Some(table.schema(s.schemaId)) else table.currentSchema
-        val payload = payloadOfSchema(schemaAt)
+        val payload = payloadAt(Some(s.snapshotId))
         val field = payload.fields.find(_.name == column).getOrElse(return None)
         val dt = field.dataType
         if (!StatsSkip.supported(dt)) return None
@@ -929,14 +854,7 @@ class CdcEngine(
     * compaction, auto-retention). Returns the published snapshot id. */
   def publishStaged(stagedId: Long): Long = {
     val snap = table.publish(stagedId)
-    val morMaint = table.meta.mergeOnRead && conf.morCompactThreshold > 0
-    if (morMaint) {
-      val over = snap.bucketDelta.collect {
-        case (b, files) if files.size >= conf.morCompactThreshold => b.toInt
-      }.toSet
-      if (over.nonEmpty) autoCompact(over)
-    }
-    maybeExpire(newSnapshots = if (morMaint) 2 else 1)
+    maintain(snap, snap.bucketDelta.keys.map(_.toInt), 1)
     snap.snapshotId
   }
 
@@ -1002,14 +920,7 @@ class CdcEngine(
       laneLen += 1
       id = s.parentId
     }
-    val snap = table.fastForward(name)
-    val morMaint = table.meta.mergeOnRead && conf.morCompactThreshold > 0
-    if (morMaint) {
-      val over = laneBuckets.filter(b =>
-        table.bucketListOf(snap, b).size >= conf.morCompactThreshold).toSet
-      if (over.nonEmpty) autoCompact(over)
-    }
-    maybeExpire(newSnapshots = laneLen + (if (morMaint) 1 else 0))
+    maintain(table.fastForward(name), laneBuckets, laneLen)
     table.currentSnapshotId
   }
 
@@ -1182,8 +1093,7 @@ class CdcEngine(
     val (crosses, bsel, unbounded) = diffPruning(sinceSnapshotId, buckets, toId)
     // payload schema is the one pinned by the window END, not the current
     // one — a windowed feed to a pre-evolution snapshot has no later columns
-    val payload = payloadOfSchema(
-      if (toId >= 0) Some(table.schema(table.snapshot(toId).schemaId)) else None)
+    val payload = payloadAt(Some(toId).filter(_ >= 0))
     val cellCols = Seq(OpCell, TsCell) ++ payload.fieldNames
     val cur = readStateCells(bsel, payload,
       if (toId >= 0) Some(toId) else None)
@@ -1269,8 +1179,7 @@ class CdcEngine(
     // straddle a concurrent commit
     val toId = if (toSnapshotId >= 0) toSnapshotId else table.currentSnapshotId
     val post = changesSince(sinceSnapshotId, buckets, toId)
-    val payload = payloadOfSchema(
-      if (toId >= 0) Some(table.schema(table.snapshot(toId).schemaId)) else None)
+    val payload = payloadAt(Some(toId).filter(_ >= 0))
     val pcols = payload.fieldNames.toSeq
     val (crosses, bsel, unbounded) = diffPruning(sinceSnapshotId, buckets, toId)
     if (sinceSnapshotId < 0 || (unbounded && !crosses))
@@ -1280,7 +1189,7 @@ class CdcEngine(
     // preimages: rows visible at `since`, bucket-pruned like the diff's own
     // old side; the left join below keeps only the diff's keys
     val oldCells = readStateCells(bsel, payload, Some(sinceSnapshotId))
-    val preVis = flattenCells(oldCells.filter(col(s"$OpCell.v") =!= lit("D")), payload)
+    val preVis = visibleRows(oldCells, payload)
     val preR = preVis.select((keyColumns ++ pcols.map(c => col(c).as(s"__pre_$c")) :+
       lit(true).as("__pre")): _*)
     val j = post.join(preR, keyCols, "left_outer")
@@ -1321,14 +1230,6 @@ class CdcEngine(
   def prunedFilesForLsnRange(lo: Long, hi: Long): Seq[String] =
     table.currentFileGroups(None, lsnRange = Some((lo, hi))).values.flatten.toSeq
 
-  /** `conf.statsCols` resolved against a payload schema: (name, type) for
-    * the columns that exist and whose type [[StatsSkip.supported]]. */
-  private def typedStatsCols(payload: StructType)
-      : Seq[(String, org.apache.spark.sql.types.DataType)] =
-    conf.statsCols.flatMap(c => payload.fields.find(_.name == c))
-      .filter(f => StatsSkip.supported(f.dataType))
-      .map(f => f.name -> f.dataType)
-
   /** How scanRange would plan a predicate: total data files in the
     * snapshot, files skipped by the harvested bounds, and buckets read
     * whole because a live delta file makes payload pruning unsound there
@@ -1364,26 +1265,19 @@ class CdcEngine(
       buckets: Option[Set[Int]] = None,
       asOfSnapshot: Option[Long] = None): DataFrame = {
     checkLayout()
-    val payload = asOfSnapshot match {
-      case Some(id) => payloadOfSchema(Some(table.schema(table.snapshot(id).schemaId)))
-      case None => tablePayload
-    }
+    val payload = payloadAt(asOfSnapshot)
     val (groups, mergeBuckets, _) = planScan(preds, buckets, payload, asOfSnapshot)
     val pruned = readAligned(groups, payload) // merged files: final state, key-disjoint
     val cells =
       if (mergeBuckets.isEmpty) pruned
       else pruned.unionByName(
         readStateCells(Some(mergeBuckets), payload, asOfSnapshot))
-    val base = flattenCells(cells.filter(col(s"$OpCell.v") =!= lit("D")), payload)
     val resid = preds.flatMap { case (column, lo, hi) =>
       val dt = payload.fields.find(_.name == column).get.dataType
       Seq(lo.map(v => col(column) >= lit(v).cast(dt)),
         hi.map(v => col(column) <= lit(v).cast(dt))).flatten
     }.reduceOption(_ && _).getOrElse(lit(true))
-    val out = base.filter(resid)
-    if (payload.fieldNames.contains("content"))
-      out.withColumn("content_sha256", sha2(col("content"), 256))
-    else out
+    visibleRows(cells, payload).filter(resid)
   }
 
   /** The [[ScanPlan]] scanRange would use (for tests and observability). */
@@ -1395,10 +1289,7 @@ class CdcEngine(
   def scanWherePlan(preds: Seq[(String, Option[Any], Option[Any])],
       buckets: Option[Set[Int]] = None,
       asOfSnapshot: Option[Long] = None): ScanPlan =
-    planScan(preds, buckets, asOfSnapshot match {
-      case Some(id) => payloadOfSchema(Some(table.schema(table.snapshot(id).schemaId)))
-      case None => tablePayload
-    }, asOfSnapshot)._3
+    planScan(preds, buckets, payloadAt(asOfSnapshot), asOfSnapshot)._3
 
   private def planScan(preds: Seq[(String, Option[Any], Option[Any])],
       buckets: Option[Set[Int]], payload: StructType,
@@ -1496,11 +1387,8 @@ class CdcEngine(
     // key-unique (same fast path readStateCells takes). Copy-on-write never
     // merges: each key lives in exactly one file of its bucket.
     val cellCols = Seq(OpCell, TsCell) ++ payload.fieldNames
-    val merged = if (table.meta.mergeOnRead && nFiles > 1) lwwAgg(cells, cellCols) else cells
-    val base = flattenCells(merged.filter(col(s"$OpCell.v") =!= lit("D")), payload)
-    if (payload.fieldNames.contains("content"))
-      base.withColumn("content_sha256", sha2(col("content"), 256))
-    else base
+    visibleRows(
+      if (table.meta.mergeOnRead && nFiles > 1) lwwAgg(cells, cellCols) else cells, payload)
   }
 
   /** Manifest file selection for a point lookup: the key's hash bucket minus
@@ -1544,6 +1432,38 @@ class CdcEngine(
   // (Conservative: commits this engine instance did not see only DELAY the
   // next expiry by that many batches — the bound stays amortized.)
   private var chainLenEstimate: Long = -1L
+
+  /** Post-commit maintenance, run after every commit that moves the
+    * published head (applyBatch, publishStaged, publishBranch), with `head`
+    * the snapshot it published, `touched` the buckets it wrote and
+    * `commits` the snapshots it added to the chain. Merge-on-read
+    * threshold compaction of the touched buckets, size-tiered when
+    * `morMinorRatio` > 0: fold the delta pile while it is small next to
+    * the base; full rewrite (with purge) only when it rivals the base or
+    * there is no base yet to fold against. Then auto-retention, counting
+    * the compaction commits too. A compaction that loses a commit race is
+    * NOT a failure of the commit before it: the still-over-threshold
+    * buckets re-trigger on the next commit. */
+  private def maintain(head: Icelite.Snapshot, touched: Iterable[Int], commits: Int): Unit = {
+    var added = commits
+    if (table.meta.mergeOnRead && conf.morCompactThreshold > 0) {
+      val over = touched.iterator.map(b => b -> table.bucketListOf(head, b))
+        .filter(_._2.size >= conf.morCompactThreshold).toMap
+      val (major, minor) = over.keySet.partition { b =>
+        val base = over(b).filter(_.merged).map(_.rows).sum
+        conf.morMinorRatio <= 0 || base == 0 ||
+          over(b).filterNot(_.merged).map(_.rows).sum >= conf.morMinorRatio * base
+      }
+      def run(compaction: => Long): Unit = {
+        val before = table.currentSnapshotId
+        try { if (compaction != before) added += 1 }
+        catch { case _: Icelite.CommitConflictException => }
+      }
+      if (minor.nonEmpty) run(compactDeltas(Some(minor)))
+      if (major.nonEmpty) run(autoCompact(major))
+    }
+    maybeExpire(added)
+  }
 
   private def maybeExpire(newSnapshots: Int): Unit = {
     if (conf.retainSnapshots <= 0) return
@@ -1626,10 +1546,11 @@ class CdcEngine(
   }
 
   /** Compaction: rewrite each selected bucket's file list (all buckets by
-    * default) into one file (Iceberg's rewrite_data_files). The MERGE is
-    * copy-on-write per bucket, so multiple files per bucket arise from
-    * salted hot-bucket writes (`writeSaltPerBucket` > 1) — compaction folds
-    * them back to one file per bucket for cheaper state reads. Commits a
+    * default) into one file (Iceberg's rewrite_data_files). A bucket holds
+    * several files after merge-on-read delta appends, salted hot-bucket
+    * writes (`writeSaltPerBucket` > 1, one file per salt) or a
+    * `writeMaxFileRows` split — compaction folds them back to one merged
+    * file per bucket for cheaper state reads. Commits a
     * new snapshot (batchEpoch=-1 — not an ingest epoch); older snapshots
     * keep referencing the old files, so time travel is unaffected and
     * `vacuum` (which walks the whole chain) keeps them until snapshots are
@@ -1688,35 +1609,17 @@ class CdcEngine(
         col(s"$OpCell.v") === lit("D") &&
           col(s"$OpCell.l") < lit(purgeTombstonesBelowLsn),
         lit(false)))
-    val outDir = table.root.resolve("data").resolve(f"compact-${System.nanoTime()}%x")
-    // compaction output is SORTED by key (Iceberg sort-compaction): ingest
-    // writes stay sort-free (the hot path never pays it), but the files
-    // that live longest are key-clustered — parquet page min/max stats on
-    // (repo, path) become tight, so point lookups prune pages inside big
-    // compacted files, and runs of one repo dictionary/RLE-compress better.
-    // A caller sort order goes FIRST (stats clustering beats key pages for
-    // the columns it names); key blooms are sort-independent, so lookups
-    // keep their row-group pruning either way.
+    // A caller sort order goes before the key (stats clustering beats key
+    // pages for the columns it names; see writeBuckets).
     val badSort = (sortBy ++ zorderBy).filterNot(payload.fieldNames.contains)
     require(badSort.isEmpty, s"compact sortBy: not payload columns: $badSort")
     val clusterCols: Seq[Column] =
       if (zorderBy.size >= 2) Seq(zorderKey(cells, zorderBy, payload))
       // one z column degenerates to a plain range sort on it
       else (sortBy ++ zorderBy).map(c => col(s"$c.v"))
-    val sortCols = col("__b") +: (clusterCols ++ keyColumns)
-    val writer = cells.withColumn("__b", bucketCol)
-      .repartition(selected.size, col("__b"))
-      .sortWithinPartitions(sortCols: _*)
-      .write
-      .option("parquet.bloom.filter.enabled#repo", "true")
-      .option("parquet.bloom.filter.enabled#path", "true")
-    (if (maxFileRows > 0) writer.option("maxRecordsPerFile", maxFileRows)
-     else writer)
-      .partitionBy("__b").parquet(outDir.toString)
-    val sid = table.ensureSchema(stateSchema(payload))
-    val collected =
-      collectBucketFiles(outDir, table, sid, spark.sessionState.newHadoopConf(),
-        merged = true, statsCols = typedStatsCols(payload))
+    val written = writeBuckets(cells, payload, "compact", selected.size,
+      merged = true, cluster = Some(clusterCols), maxFileRows = maxFileRows)
+    val collected = written.files
     // A bucket whose rows ALL purged away writes no parquet output, but the
     // replace-commit only replaces buckets present in the map — an absent
     // bucket would silently KEEP its old (tombstone-only) files. Emit an
@@ -1752,7 +1655,7 @@ class CdcEngine(
     // folds a bucket's delta pile back into one merged file. A purging
     // compaction is flagged on the snapshot: change-feed windows spanning
     // it must synthesize deletes for vanished keys (Snapshot.purge).
-    table.commit(-1L, sid, bucketFiles, Nil, rowDelta = 0,
+    table.commit(-1L, written.schemaId, bucketFiles, Nil, rowDelta = 0,
       expectedParentId = observedParent,
       purge = purgedSomething).snapshotId
   }
@@ -1806,27 +1709,16 @@ class CdcEngine(
         sid -> fs.map(f => table.root.resolve(f.path).toString) }
     val cells = lwwAgg(readAligned(groups, payload),
       Seq(OpCell, TsCell) ++ payload.fieldNames)
-    val outDir =
-      table.root.resolve("data").resolve(f"minor-${System.nanoTime()}%x")
     // key-sorted like every other maintenance output: combined deltas live
     // until the next rewrite, so they earn page stats + dictionary runs
-    cells.withColumn("__b", bucketCol)
-      .repartition(selected.size, col("__b"))
-      .sortWithinPartitions((col("__b") +: keyColumns): _*)
-      .write
-      .option("parquet.bloom.filter.enabled#repo", "true")
-      .option("parquet.bloom.filter.enabled#path", "true")
-      .partitionBy("__b").parquet(outDir.toString)
-    val sid = table.ensureSchema(stateSchema(payload))
-    val collected = collectBucketFiles(outDir, table, sid,
-      spark.sessionState.newHadoopConf(), merged = false, statsCols = Nil)
+    val written = writeBuckets(cells, payload, "minor", selected.size, merged = false)
     val bucketFiles: Map[Int, List[Icelite.DataFile]] =
       selected.map { case (b, fs) =>
         val fp = fpUnionOf(deltas(b))
         b -> (fs.filter(_.merged) ++
-          collected.getOrElse(b, Nil).map(_.copy(keyFp = fp)))
+          written.files.getOrElse(b, Nil).map(_.copy(keyFp = fp)))
       }
-    table.commit(-1L, sid, bucketFiles, Nil, rowDelta = 0,
+    table.commit(-1L, written.schemaId, bucketFiles, Nil, rowDelta = 0,
       expectedParentId = observedParent).snapshotId
   }
 
@@ -1893,23 +1785,63 @@ class CdcEngine(
     // vanish. Same protection compact() and rollbackTo carry.
     val observedParent = table.currentSnapshotId
     val cells = readStateCells(None, payload) // merged cells, tombstones included
-    val newBucketCol =
-      pmod(xxhash64(keyColumns: _*), lit(newBuckets)).cast(IntegerType)
-    val outDir = table.root.resolve("data").resolve(f"rebucket-${System.nanoTime()}%x")
-    cells.withColumn("__b", newBucketCol)
-      .repartition(newBuckets, col("__b"))
-      .sortWithinPartitions((col("__b") +: keyColumns): _*) // clustered, like compaction
-      .write
+    // key-clustered, like compaction
+    val written = writeBuckets(cells, payload, "rebucket", newBuckets, merged = true,
+      bucket = pmod(xxhash64(keyColumns: _*), lit(newBuckets)).cast(IntegerType))
+    table.commit(-1L, written.schemaId, written.files, Nil, rowDelta = 0,
+      rebucketTo = newBuckets, expectedParentId = observedParent)
+    new CdcEngine(spark, table, newConf)
+  }
+
+  // ---------------------------------------------------------------- write
+
+  /** The one data-file writer. `cells` (cell form, aligned to `payload`) go
+    * to a fresh `data/<tag>-<nanos>/__b=N/` directory: one write task per
+    * bucket (`salt` > 1 spreads each bucket over that many tasks, so a hot
+    * bucket writes several files — the manifest lists files, not "the
+    * file"), sorted within each bucket by `cluster` then key when `cluster`
+    * is set (None = no sort, the ingest hot path), files split at
+    * `maxFileRows` (0 = no split). Key-column bloom filters let a point
+    * lookup skip row groups inside the files of its bucket.
+    *
+    * Maintenance output is key-sorted (Iceberg sort-compaction): ingest
+    * writes stay sort-free, but the files that live longest get tight
+    * parquet page stats on (repo, path) and better dictionary/RLE runs.
+    *
+    * The manifest entries come from the parquet FOOTERS of the files just
+    * written (driver-side metadata reads, not a Spark job — at 4 jobs per
+    * batch the driver's serial job planning caps scaling). MERGED
+    * (final-state) files harvest the `statsCols` bounds; merge-on-read
+    * deltas never do (see EngineConf.statsCols). `writeMs` times the Spark
+    * write, `harvestMs` the schema registration and footer harvest. */
+  private def writeBuckets(cells: DataFrame, payload: StructType, tag: String,
+      buckets: Int, merged: Boolean, cluster: Option[Seq[Column]] = Some(Nil),
+      maxFileRows: Long = 0L, salt: Int = 1, bucket: Column = bucketCol): BucketWrite = {
+    val t0 = System.nanoTime()
+    val outDir = table.root.resolve("data").resolve(f"$tag-${System.nanoTime()}%x")
+    val spread = math.max(1, salt)
+    val byBucket = cells.withColumn("__b", bucket)
+    val parts =
+      if (spread > 1)
+        byBucket.withColumn(SaltCol, pmod(xxhash64(col("path")), lit(spread)))
+          .repartition(math.max(1, buckets * spread), col("__b"), col(SaltCol)).drop(SaltCol)
+      else byBucket.repartition(math.max(1, buckets), col("__b"))
+    val sorted = cluster.fold(parts)(c =>
+      parts.sortWithinPartitions((col("__b") +: (c ++ keyColumns)): _*))
+    val writer = sorted.write
       .option("parquet.bloom.filter.enabled#repo", "true")
       .option("parquet.bloom.filter.enabled#path", "true")
+    (if (maxFileRows > 0) writer.option("maxRecordsPerFile", maxFileRows) else writer)
       .partitionBy("__b").parquet(outDir.toString)
+    val t1 = System.nanoTime()
     val sid = table.ensureSchema(stateSchema(payload))
-    val bucketFiles =
-      collectBucketFiles(outDir, table, sid, spark.sessionState.newHadoopConf(),
-        merged = true, statsCols = typedStatsCols(payload))
-    table.commit(-1L, sid, bucketFiles, Nil, rowDelta = 0, rebucketTo = newBuckets,
-      expectedParentId = observedParent)
-    new CdcEngine(spark, table, newConf)
+    val statsCols =
+      if (!merged) Nil
+      else conf.statsCols.flatMap(c => payload.fields.find(_.name == c))
+        .filter(f => StatsSkip.supported(f.dataType)).map(f => f.name -> f.dataType)
+    val files = collectBucketFiles(outDir, table, sid,
+      spark.sessionState.newHadoopConf(), merged, statsCols)
+    BucketWrite(sid, files, (t1 - t0) / 1000000, (System.nanoTime() - t1) / 1000000)
   }
 
   // ---------------------------------------------------------------- misc
@@ -1928,6 +1860,11 @@ object CdcEngine {
   val OpCell = "_op"
   val TsCell = "_ts"
   private val SaltCol = "__salt"
+
+  /** What [[CdcEngine.writeBuckets]] wrote: the writer schema id, the
+    * per-bucket manifest entries, and the write / footer-harvest times. */
+  private final case class BucketWrite(schemaId: Int,
+      files: Map[Int, List[Icelite.DataFile]], writeMs: Long, harvestMs: Long)
   /** Multi-writer optimistic concurrency: how many consecutive commit
     * races (CommitConflictException) a copy-on-write applyBatch re-merges
     * through before giving up. Each retry recomputes the merge against the
@@ -1968,10 +1905,9 @@ object CdcEngine {
     * thread pool: sequential they cost ~10 ms x file count per commit, a
     * SERIAL (Amdahl) term that visibly caps replay scaling efficiency at
     * high parallelism. */
-  private[engine] def collectBucketFiles(dir: Path, table: IceliteTable, schemaId: Int,
-      hadoopConf: org.apache.hadoop.conf.Configuration,
-      merged: Boolean = false,
-      statsCols: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil)
+  private def collectBucketFiles(dir: Path, table: IceliteTable, schemaId: Int,
+      hadoopConf: org.apache.hadoop.conf.Configuration, merged: Boolean,
+      statsCols: Seq[(String, DataType)])
       : Map[Int, List[Icelite.DataFile]] = {
     val stream = Files.walk(dir)
     val paths =

@@ -62,10 +62,6 @@ import scala.collection.mutable.ArrayBuffer
 object BinlogServer {
   /** Records per FETCH block (see the FETCH handler). */
   val BatchRecs = 512
-}
-
-final class BinlogServer(val partitions: Int, host: String = null) {
-  require(partitions > 0, "partitions must be positive")
 
   /** One stored record. Payload (and key) are raw BYTES, not Strings: a
     * 6M-record in-process log as base64 Strings costs ~3x the payload in
@@ -74,6 +70,11 @@ final class BinlogServer(val partitions: Int, host: String = null) {
     * framing happens at the wire (PUBLISH decodes, FETCH encodes — cheap
     * vs the socket write). `key` is null for unkeyed records. */
   private final case class Rec(offset: Long, key: String, payload: Array[Byte])
+}
+
+final class BinlogServer(val partitions: Int, host: String = null) {
+  import BinlogServer.Rec
+  require(partitions > 0, "partitions must be positive")
 
   private val bindAddr =
     if (host == null) InetAddress.getLoopbackAddress else InetAddress.getByName(host)

@@ -129,7 +129,7 @@ object CdcDemo {
     def visibleRows(e: CdcEngine) = {
       val df = e.currentState()
       val cols = df.columns.filterNot(c => c == "_lsn" || c == "_seq").sorted
-      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      df.select(cols.toSeq.map(org.apache.spark.sql.functions.col): _*)
         .collect().map(_.toString).sorted.toSeq
     }
     val inSync = visibleRows(mirror) == visibleRows(engine)
@@ -244,7 +244,7 @@ object CdcDemo {
         val rows = evB.select(
             (pmod(hash(col("repo"), col("path")), lit(4))).as("p"),
             concat_ws("|", col("repo"), col("path")).as("k"),
-            to_json(struct(evB.columns.map(col): _*)).as("j"),
+            to_json(struct(evB.columns.toSeq.map(col): _*)).as("j"),
             col("commit_lsn"), col("seq"))
           .orderBy(col("commit_lsn"), col("seq"))
           .select("p", "k", "j").collect()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.engine.{AtomicTxn, CdcEngine, EngineConf}
-import graft.icelite.{IceliteCatalog, IceliteTable}
+import graft.icelite.{Icelite, IceliteCatalog, IceliteTable}
 import graft.model.ChangeEvent
 import graft.synth.Synth
 
@@ -131,6 +131,102 @@ class CatalogSpec extends AnyFunSuite {
       assert(e.table.currentSnapshotId === cat.refs()(name).snapshotId, name)
       assert(e.table.committedEpochs.contains(0L) && stateOf(e).nonEmpty, name)
     }
+  }
+
+  test("a foreign txn committed but unpublished when we stage is completed, not superseded") {
+    val work = SparkTestBase.tmpDir("cat-foreign")
+    val (files, repos, cat0) = mkPair(work)
+    val control = new CdcEngine(spark,
+      IceliteTable.create(s"$work/control", Seq("repo", "path"), 4), EngineConf(buckets = 4))
+    val evs = (0 until 3).map(i => Synth.events(spark, 800, seed = 421 + i, repos = 10,
+      pathsPerRepo = 40).withColumn("commit_lsn", col("commit_lsn") + 1000L * i))
+    evs.zipWithIndex.foreach { case (ev, i) => control.applyBatch(i.toLong, ev) }
+    AtomicTxn.commit(cat0, 0L, Seq(("files", files, evs(0)), ("repos", repos, repoAgg(evs(0)))))
+    // another process commits txn 1 right after our publishPending and
+    // dies before publishing it: its stages are pinned, the heads lag
+    var foreignDone = false
+    val cat = new IceliteCatalog(cat0.root) {
+      override def versionOfTxn(txnId: Long): Option[Long] = {
+        if (!foreignDone) {
+          foreignDone = true
+          commitTxn(1L, Map(
+            "files" -> files.stageBatch(1L, evs(1)).snapshotId,
+            "repos" -> repos.stageBatch(1L, repoAgg(evs(1))).snapshotId))
+        }
+        super.versionOfTxn(txnId)
+      }
+    }
+    AtomicTxn.commit(cat, 2L, Seq(("files", files, evs(2)), ("repos", repos, repoAgg(evs(2)))))
+    assert(foreignDone)
+    Seq(files, repos).zip(Seq("files", "repos")).foreach { case (e, name) =>
+      assert(e.table.committedEpochs === Set(0L, 1L, 2L), name)
+      assert(e.table.currentSnapshotId === cat.refs()(name).snapshotId, name)
+      assert(e.table.stagedSnapshotIds.isEmpty, name)
+    }
+    assert(stateOf(files) === stateOf(control), "both txns' rows must be visible")
+  }
+
+  test("a compaction that loses its race after a publish fails neither publishStaged nor the txn") {
+    val work = SparkTestBase.tmpDir("cat-lostrace")
+    var lose = 0
+    def racing(name: String): CdcEngine = new CdcEngine(spark,
+      IceliteTable.create(s"$work/$name", Seq("repo", "path"), 4, mergeOnRead = true),
+      EngineConf(buckets = 4, morCompactThreshold = 2)) {
+      override def compact(buckets: Option[Set[Int]], sortBy: Seq[String], maxFileRows: Long,
+          purgeTombstonesBelowLsn: Long, zorderBy: Seq[String]): Long =
+        if (lose > 0) { lose -= 1; throw new Icelite.CommitConflictException("lost the race") }
+        else super.compact(buckets, sortBy, maxFileRows, purgeTombstonesBelowLsn, zorderBy)
+    }
+    def maxFiles(e: CdcEngine): Int =
+      e.table.bucketFilesOf(e.table.currentSnapshot.get).values.map(_.size).max
+    val evs = (0 until 3).map(i => Synth.events(spark, 800, seed = 431 + i, repos = 10,
+      pathsPerRepo = 40).withColumn("commit_lsn", col("commit_lsn") + 1000L * i))
+
+    // write-audit-publish: the publish crosses the threshold, its compaction loses
+    val wap = racing("wap")
+    wap.applyBatch(0L, evs(0))
+    lose = 1
+    val published = wap.publishStaged(wap.stageBatch(1L, evs(1)).snapshotId)
+    assert(lose === 0, "the crossing must have tried to compact")
+    assert(published === wap.table.currentSnapshotId)
+    assert(wap.table.committedEpochs === Set(0L, 1L) && maxFiles(wap) === 2)
+    wap.applyBatch(2L, evs(2))
+    assert(maxFiles(wap) === 1, "the next batch must compact the still-over buckets")
+
+    // the same through a catalog transaction, whose commit point has passed
+    val files = racing("files")
+    val cat = IceliteCatalog.create(s"$work/cat")
+    cat.registerTable("files", s"$work/files")
+    AtomicTxn.commit(cat, 0L, Seq(("files", files, evs(0))))
+    lose = 1
+    AtomicTxn.commit(cat, 1L, Seq(("files", files, evs(1))))
+    assert(lose === 0, "the crossing must have tried to compact")
+    assert(files.table.currentSnapshotId === cat.refs()("files").snapshotId)
+    assert(files.table.committedEpochs === Set(0L, 1L) && files.table.stagedSnapshotIds.isEmpty)
+    AtomicTxn.commit(cat, 2L, Seq(("files", files, evs(2))))
+    assert(maxFiles(files) === 1, "the next txn must compact the still-over buckets")
+  }
+
+  test("txns keep committing after retention expires the snapshot the catalog pins") {
+    val work = SparkTestBase.tmpDir("cat-expiredpin")
+    // compaction after each publish moves the head past the pin, and
+    // retainSnapshots = 1 then expires the pinned snapshot off the chain
+    val files = new CdcEngine(spark,
+      IceliteTable.create(s"$work/files", Seq("repo", "path"), 4, mergeOnRead = true),
+      EngineConf(buckets = 4, morCompactThreshold = 2, retainSnapshots = 1))
+    val control = new CdcEngine(spark,
+      IceliteTable.create(s"$work/control", Seq("repo", "path"), 4), EngineConf(buckets = 4))
+    val cat = IceliteCatalog.create(s"$work/cat")
+    cat.registerTable("files", s"$work/files")
+    (0 until 3).foreach { i =>
+      val ev = Synth.events(spark, 800, seed = 441 + i, repos = 10, pathsPerRepo = 40)
+        .withColumn("commit_lsn", col("commit_lsn") + 1000L * i)
+      control.applyBatch(i.toLong, ev)
+      AtomicTxn.commit(cat, i.toLong, Seq(("files", files, ev)))
+      assert(files.table.committedEpochs.contains(i.toLong), s"txn $i")
+    }
+    assert(cat.versionOfTxn(2L).nonEmpty && files.table.stagedSnapshotIds.isEmpty)
+    assert(stateOf(files) === stateOf(control))
   }
 
   test("a NEXT-epoch commit straight after a torn crash completes the predecessor first") {

@@ -125,10 +125,10 @@ class EngineSpec extends AnyFunSuite {
     assertEquivalent(runner.engine, ev)
   }
 
-  test("salted two-phase merge produces identical state under hot-key skew") {
+  test("salted bucket writes produce identical state under hot-key skew") {
     val ev = Synth.events(spark, N, seed = 5, hotPct = 80, repos = 5, pathsPerRepo = 50)
     val plain = newEngine(EngineConf(buckets = 8))
-    val salted = newEngine(EngineConf(buckets = 8, saltBuckets = 4, writeSaltPerBucket = 2))
+    val salted = newEngine(EngineConf(buckets = 8, writeSaltPerBucket = 2))
     val bs = Synth.batches(ev, 3, N)
     bs.zipWithIndex.foreach { case (b, i) => plain.applyBatch(i, b) }
     bs.zipWithIndex.foreach { case (b, i) => salted.applyBatch(i, b) }

@@ -178,6 +178,48 @@ class MinorCompactSpec extends AnyFunSuite {
       "tiered maintenance must equal the COW fold")
   }
 
+  test("publishStaged and publishBranch apply the size-tiered rule: a minor fold keeps the base") {
+    val seed = Synth.events(spark, 3000, seed = 57)
+    def small(i: Int): DataFrame = Synth.events(spark, 100, seed = 570 + i)
+      .withColumn("commit_lsn", col("commit_lsn") + lit(3000L * i))
+    val cow = mkEngine(SparkTestBase.tmpDir("minor-pub-cow"), mor = false)
+    (0 to 2).foreach(i => cow.applyBatch(i, if (i == 0) seed else small(i)))
+    // a merged base under every bucket, then one small delta on it: the
+    // next small delta crosses the threshold with a pile far below half
+    // the base, which applyBatch would fold minor
+    def tiered(tag: String): CdcEngine = {
+      val t = IceliteTable.create(s"${SparkTestBase.tmpDir(tag)}/t", Seq("repo", "path"), 8,
+        mergeOnRead = true)
+      val e = new CdcEngine(spark, t, EngineConf(buckets = 8,
+        morCompactThreshold = 3, morMinorRatio = 0.5))
+      e.applyBatch(0, seed)
+      e.compact()
+      e
+    }
+    def basePaths(e: CdcEngine): Set[String] =
+      e.table.bucketFilesOf(e.table.currentSnapshot.get).values.flatten
+        .filter(_.merged).map(_.path).toSet
+    def maintCommits(e: CdcEngine): Int = e.table.snapshotChain.count(_.batchEpoch == -1L)
+    def check(e: CdcEngine, base: Set[String], maint: Int): Unit = {
+      assert(maintCommits(e) === maint + 1, "the crossing must run one maintenance commit")
+      assert(basePaths(e) === base, "a minor fold must leave the merged base untouched")
+      assert(visible(e) === visible(cow))
+    }
+
+    val staged = tiered("minor-pub-staged")
+    staged.applyBatch(1, small(1))
+    val (stagedBase, stagedMaint) = (basePaths(staged), maintCommits(staged))
+    staged.publishStaged(staged.stageBatch(2, small(2)).snapshotId)
+    check(staged, stagedBase, stagedMaint)
+
+    val lane = tiered("minor-pub-branch")
+    val (laneBase, laneMaint) = (basePaths(lane), maintCommits(lane))
+    lane.createBranch("lane")
+    (1 to 2).foreach(i => lane.applyBatchToBranch(i, small(i), "lane"))
+    lane.publishBranch("lane")
+    check(lane, laneBase, laneMaint)
+  }
+
   test("SQL: rewrite_data_files(strategy => 'binpack') folds; misuse fails loudly") {
     val dir = SparkTestBase.tmpDir("minor")
     val e = mkEngine(dir)
