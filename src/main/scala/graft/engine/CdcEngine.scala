@@ -13,8 +13,11 @@ import graft.model.ChangeEvent
   *
   * @param buckets        hash buckets of the table (pmod(xxhash64(repo,path), buckets)).
   *                       At 100 TB this would be 2^14..2^16; tests use small values.
-  * @param writeSaltPerBucket  parallel writer tasks per affected bucket — a hot
-  *                       bucket writes multiple data files instead of one big one.
+  * @param writeSaltPerBucket  salt slices per affected bucket: a bucket is
+  *                       spread over up to this many write tasks (and files),
+  *                       within the session's shuffle width
+  *                       (`spark.sql.shuffle.partitions`), so a hot bucket
+  *                       writes several data files instead of one big one.
   */
 case class EngineConf(
     buckets: Int = 64,
@@ -354,7 +357,8 @@ class CdcEngine(
   /** Read (sid -> files) groups in cell form, each group aligned
     * (cast/null-fill) to the target payload schema — files are grouped by
     * writer schema id so widened columns are up-cast explicitly and old
-    * data files are never rewritten on schema evolution. */
+    * data files are never rewritten on schema evolution. The scan is built
+    * from the listed files alone (see [[ManifestScan]]). */
   private def readAligned(groups: Map[Int, Seq[String]], targetPayload: StructType): DataFrame = {
     val target = stateSchema(targetPayload)
     val aligned = groups.toSeq.map { case (sid, files) =>
@@ -364,7 +368,7 @@ class CdcEngine(
         if (writtenNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }
-      spark.read.schema(written).parquet(files: _*).select(cols: _*)
+      ManifestScan.parquet(spark, written, files).select(cols: _*)
     }
     aligned.reduceOption(_ unionByName _).getOrElse {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
@@ -632,12 +636,20 @@ class CdcEngine(
     // result as delta files (write work O(batch rows) — the sparse-batch
     // write-amplification fix); the cross-batch merge happens at read time.
     val batchCells = batchToCells(batchRaw, targetPayload, fallible, applyPred)
+    val readAt = asOfHead.orElse(if (observedParent >= 0) Some(observedParent) else None)
     val merged =
       if (mor) lwwAgg(batchCells, cellCols)
       else lwwAgg(batchCells.unionByName(
-        readStateCells(Some(affected), targetPayload,
-          asOfSnapshot = asOfHead.orElse(
-            if (observedParent >= 0) Some(observedParent) else None))), cellCols)
+        readStateCells(Some(affected), targetPayload, asOfSnapshot = readAt)), cellCols)
+    // distinct keys of a bucket's new file: at most its applied events,
+    // plus (copy-on-write) the rows it already holds
+    val stateFiles: Map[String, List[Icelite.DataFile]] =
+      if (mor) Map.empty
+      else readAt.fold(Map.empty[String, List[Icelite.DataFile]])(id =>
+        table.bucketFilesOf(table.snapshot(id)))
+    val keysPerFile = appliedRows.iterator.map { r =>
+      r.getLong(3) + stateFiles.getOrElse(r.getInt(0).toString, Nil).map(_.rows).sum
+    }.max
 
     // Write affected buckets: COW rewrites are merged final state, MOR
     // deltas are not; only a COW rewrite pays the declared write sort order
@@ -645,7 +657,7 @@ class CdcEngine(
     val sortNow = if (mor) Nil
       else conf.writeSortCols.filter(targetPayload.fieldNames.contains)
     val written = writeBuckets(merged, targetPayload, f"e$epoch%d", affected.size,
-      merged = !mor,
+      merged = !mor, keysPerFile = keysPerFile,
       cluster = if (sortNow.isEmpty) None else Some(sortNow.map(c => col(s"$c.v"))),
       maxFileRows = if (mor) 0L else conf.writeMaxFileRows,
       salt = conf.writeSaltPerBucket)
@@ -1617,8 +1629,13 @@ class CdcEngine(
       if (zorderBy.size >= 2) Seq(zorderKey(cells, zorderBy, payload))
       // one z column degenerates to a plain range sort on it
       else (sortBy ++ zorderBy).map(c => col(s"$c.v"))
+    val oldSelected: Map[Int, List[Icelite.DataFile]] =
+      table.bucketFilesOf(table.snapshot(observedParent))
+        .collect { case (b, fs) if selected.contains(b.toInt) && fs.nonEmpty =>
+          b.toInt -> fs }
     val written = writeBuckets(cells, payload, "compact", selected.size,
-      merged = true, cluster = Some(clusterCols), maxFileRows = maxFileRows)
+      merged = true, keysPerFile = maxBucketRows(oldSelected.values),
+      cluster = Some(clusterCols), maxFileRows = maxFileRows)
     val collected = written.files
     // A bucket whose rows ALL purged away writes no parquet output, but the
     // replace-commit only replaces buckets present in the map — an absent
@@ -1626,10 +1643,6 @@ class CdcEngine(
     // explicit empty file list for every SELECTED bucket that had files at
     // the pinned snapshot and produced none. (`groups` is schemaId-keyed —
     // using it here once wiped an unselected bucket.)
-    val oldSelected: Map[Int, List[Icelite.DataFile]] =
-      table.bucketFilesOf(table.snapshot(observedParent))
-        .collect { case (b, fs) if selected.contains(b.toInt) && fs.nonEmpty =>
-          b.toInt -> fs }
     val bucketFiles =
       if (purgeTombstonesBelowLsn < 0) collected
       else collected ++ oldSelected.keySet
@@ -1711,7 +1724,8 @@ class CdcEngine(
       Seq(OpCell, TsCell) ++ payload.fieldNames)
     // key-sorted like every other maintenance output: combined deltas live
     // until the next rewrite, so they earn page stats + dictionary runs
-    val written = writeBuckets(cells, payload, "minor", selected.size, merged = false)
+    val written = writeBuckets(cells, payload, "minor", selected.size, merged = false,
+      keysPerFile = maxBucketRows(deltas.values))
     val bucketFiles: Map[Int, List[Icelite.DataFile]] =
       selected.map { case (b, fs) =>
         val fp = fpUnionOf(deltas(b))
@@ -1787,6 +1801,8 @@ class CdcEngine(
     val cells = readStateCells(None, payload) // merged cells, tombstones included
     // key-clustered, like compaction
     val written = writeBuckets(cells, payload, "rebucket", newBuckets, merged = true,
+      keysPerFile = table.bucketFilesOf(table.snapshot(observedParent)).values.flatten
+        .map(_.rows).sum,
       bucket = pmod(xxhash64(keyColumns: _*), lit(newBuckets)).cast(IntegerType))
     table.commit(-1L, written.schemaId, written.files, Nil, rowDelta = 0,
       rebucketTo = newBuckets, expectedParentId = observedParent)
@@ -1796,13 +1812,22 @@ class CdcEngine(
   // ---------------------------------------------------------------- write
 
   /** The one data-file writer. `cells` (cell form, aligned to `payload`) go
-    * to a fresh `data/<tag>-<nanos>/__b=N/` directory: one write task per
-    * bucket (`salt` > 1 spreads each bucket over that many tasks, so a hot
-    * bucket writes several files — the manifest lists files, not "the
-    * file"), sorted within each bucket by `cluster` then key when `cluster`
-    * is set (None = no sort, the ingest hot path), files split at
+    * to a fresh `data/<tag>-<nanos>/__b=N/` directory, one file per bucket:
+    * the rows are hash-partitioned on the bucket into at most
+    * `spark.sql.shuffle.partitions` write tasks, so each bucket lands whole
+    * in one task, and Spark's planned write sorts each task by bucket, so a
+    * task writes its buckets' files one after another (a task costs tens
+    * of ms to deserialize whatever its rows: at one task per bucket that
+    * outweighed the write itself). `salt` > 1 hash-partitions on
+    * (bucket, salt slice) instead, spreading a hot bucket over up to
+    * `salt` tasks and files — the manifest lists files, not "the file".
+    * Rows are sorted within each bucket by `cluster` then key when
+    * `cluster` is set (None = no sort, the ingest hot path), files split at
     * `maxFileRows` (0 = no split). Key-column bloom filters let a point
-    * lookup skip row groups inside the files of its bucket.
+    * lookup skip row groups inside the files of its bucket; each is sized
+    * for `keysPerFile` distinct keys, the caller's upper bound on the keys
+    * of any one file (an undersized filter only raises its false-positive
+    * rate, it never hides a key; unsized, parquet gives every filter 1 MiB).
     *
     * Maintenance output is key-sorted (Iceberg sort-compaction): ingest
     * writes stay sort-free, but the files that live longest get tight
@@ -1815,22 +1840,27 @@ class CdcEngine(
     * deltas never do (see EngineConf.statsCols). `writeMs` times the Spark
     * write, `harvestMs` the schema registration and footer harvest. */
   private def writeBuckets(cells: DataFrame, payload: StructType, tag: String,
-      buckets: Int, merged: Boolean, cluster: Option[Seq[Column]] = Some(Nil),
-      maxFileRows: Long = 0L, salt: Int = 1, bucket: Column = bucketCol): BucketWrite = {
+      buckets: Int, merged: Boolean, keysPerFile: Long,
+      cluster: Option[Seq[Column]] = Some(Nil), maxFileRows: Long = 0L, salt: Int = 1,
+      bucket: Column = bucketCol): BucketWrite = {
     val t0 = System.nanoTime()
     val outDir = table.root.resolve("data").resolve(f"$tag-${System.nanoTime()}%x")
     val spread = math.max(1, salt)
+    val tasks = math.max(1, math.min(buckets * spread, spark.sessionState.conf.numShufflePartitions))
     val byBucket = cells.withColumn("__b", bucket)
     val parts =
       if (spread > 1)
         byBucket.withColumn(SaltCol, pmod(xxhash64(col("path")), lit(spread)))
-          .repartition(math.max(1, buckets * spread), col("__b"), col(SaltCol)).drop(SaltCol)
-      else byBucket.repartition(math.max(1, buckets), col("__b"))
+          .repartition(tasks, col("__b"), col(SaltCol)).drop(SaltCol)
+      else byBucket.repartition(tasks, col("__b"))
     val sorted = cluster.fold(parts)(c =>
       parts.sortWithinPartitions((col("__b") +: (c ++ keyColumns)): _*))
+    val ndv = math.max(1L, if (maxFileRows > 0) math.min(keysPerFile, maxFileRows) else keysPerFile)
     val writer = sorted.write
       .option("parquet.bloom.filter.enabled#repo", "true")
       .option("parquet.bloom.filter.enabled#path", "true")
+      .option("parquet.bloom.filter.expected.ndv#repo", ndv)
+      .option("parquet.bloom.filter.expected.ndv#path", ndv)
     (if (maxFileRows > 0) writer.option("maxRecordsPerFile", maxFileRows) else writer)
       .partitionBy("__b").parquet(outDir.toString)
     val t1 = System.nanoTime()
@@ -1843,6 +1873,11 @@ class CdcEngine(
       spark.sessionState.newHadoopConf(), merged, statsCols)
     BucketWrite(sid, files, (t1 - t0) / 1000000, (System.nanoTime() - t1) / 1000000)
   }
+
+  /** Rows of the largest of these buckets (each given by its files): an
+    * upper bound on the distinct keys a rewrite puts in any one file. */
+  private def maxBucketRows(buckets: Iterable[Seq[Icelite.DataFile]]): Long =
+    buckets.map(_.map(_.rows).sum).maxOption.getOrElse(0L)
 
   // ---------------------------------------------------------------- misc
 

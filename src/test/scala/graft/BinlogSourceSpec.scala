@@ -32,7 +32,7 @@ class BinlogSourceSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.pmod(
           org.apache.spark.sql.functions.hash(col("repo"), col("path")),
           org.apache.spark.sql.functions.lit(PARTS)).as("p"),
-        to_json(struct(ev.columns.map(col): _*)).as("j"))
+        to_json(struct(ev.columns.map(col).toSeq: _*)).as("j"))
       .orderBy(col("j")) // deterministic publish order; LWW is order-insensitive
       .as[(Int, String)].collect().toSeq
   }
@@ -256,7 +256,7 @@ class BinlogSourceSpec extends AnyFunSuite {
             org.apache.spark.sql.functions.hash(col("repo"), col("path")),
             org.apache.spark.sql.functions.lit(PARTS)).as("p"),
           org.apache.spark.sql.functions.concat_ws("|", col("repo"), col("path")).as("k"),
-          to_json(struct(ev.columns.map(col): _*)).as("j"),
+          to_json(struct(ev.columns.map(col).toSeq: _*)).as("j"),
           col("commit_lsn"), col("seq"))
         .orderBy(col("commit_lsn"), col("seq"))
         .select(col("p"), col("k"), col("j")).as[(Int, String, String)].collect()

@@ -33,13 +33,13 @@ class BranchSpec extends AnyFunSuite {
   def stateSet(e: CdcEngine): Set[String] = {
     val df = e.currentState()
     val cols = df.columns.sorted
-    df.select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+    df.select(cols.head, cols.tail.toSeq: _*).collect().map(_.mkString("|")).toSet
   }
 
   def branchStateSet(e: CdcEngine, name: String): Set[String] = {
     val df = e.stateAtBranch(name)
     val cols = df.columns.sorted
-    df.select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+    df.select(cols.head, cols.tail.toSeq: _*).collect().map(_.mkString("|")).toSet
   }
 
   def dataFiles(e: CdcEngine): Set[String] = {
@@ -225,7 +225,7 @@ class BranchSpec extends AnyFunSuite {
 
     def feedSet(df: org.apache.spark.sql.DataFrame): Set[String] = {
       val cols = df.columns.sorted
-      df.select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+      df.select(cols.head, cols.tail.toSeq: _*).collect().map(_.mkString("|")).toSet
     }
     // a downstream can validate against the LANE before it is published...
     val preview = feedSet(engine.changesSince(fork,

@@ -21,7 +21,7 @@ class CatalogMirrorSpec extends AnyFunSuite {
     if (snap < 0) return Nil
     val df = e.stateAt(snap)
     val cols = df.columns.filterNot(c => c == "_lsn" || c == "_seq").sorted
-    df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    df.select(cols.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
   }
 
   test("mirror equals source at every synced catalog version; " +

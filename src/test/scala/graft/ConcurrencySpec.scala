@@ -104,7 +104,7 @@ class ConcurrencySpec extends AnyFunSuite {
       def visible(e: CdcEngine) = {
         val df = e.currentState()
         val cols = df.columns.filterNot(c => c == "_lsn" || c == "_seq").sorted
-        df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+        df.select(cols.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
       }
       assert(visible(mir) === visible(w1), "mirror diverged after concurrent ingest")
     }
@@ -216,7 +216,7 @@ class ConcurrencySpec extends AnyFunSuite {
     def payload(e: CdcEngine) = {
       val df = e.currentState()
       val cols = df.columns.filterNot(_.startsWith("_")).sorted
-      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      df.select(cols.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
     }
     assert(payload(w1) === payload(control))
   }

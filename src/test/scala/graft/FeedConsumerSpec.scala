@@ -31,7 +31,7 @@ class FeedConsumerSpec extends AnyFunSuite {
   private def visible(e: CdcEngine): Seq[String] = {
     val df = e.currentState()
     val cols = df.columns.filterNot(c => c == "_lsn" || c == "_seq").sorted
-    df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    df.select(cols.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
   }
 
   private def assertMirrored(src: CdcEngine, mir: CdcEngine): Unit =

@@ -48,24 +48,24 @@ class InspectSpec extends AnyFunSuite {
     assert(fileRows.forall(r => r.getAs[Long]("size_bytes") > 0L))
     assert(fileRows.map(_.getAs[Int]("bucket")).toSet.subsetOf((0 until 8).toSet))
     // copy-on-write holds exactly one merged row per key (tombstones included)
-    assert(files.agg(sum("rows")).head.getLong(0) === engine.currentCells().count())
+    assert(files.agg(sum("rows")).head().getLong(0) === engine.currentCells().count())
     // live_rows, where the footer decided it, never exceeds rows and sums
     // to at most the visible state (undecided files are None, not a lie)
     val decided = files.filter(col("live_rows").isNotNull)
     assert(decided.filter(col("live_rows") > col("rows")).count() === 0L)
     // LSN stats cover the full applied range
-    assert(files.agg(min("min_lsn")).head.getLong(0) >= 0L)
-    assert(files.agg(max("max_lsn")).head.getLong(0) <= 1999L)
+    assert(files.agg(min("min_lsn")).head().getLong(0) >= 0L)
+    assert(files.agg(max("max_lsn")).head().getLong(0) <= 1999L)
 
     // partitions: exact rollup of files
     val parts = insp.partitions()
-    assert(parts.agg(sum("files")).head.getLong(0) === files.count())
-    assert(parts.agg(sum("rows")).head.getLong(0) ===
-      files.agg(sum("rows")).head.getLong(0))
+    assert(parts.agg(sum("files")).head().getLong(0) === files.count())
+    assert(parts.agg(sum("rows")).head().getLong(0) ===
+      files.agg(sum("rows")).head().getLong(0))
 
     // lineage: merge commits account for every applied event exactly once
     val lin = insp.lineage
-    assert(lin.agg(sum("events")).head.getLong(0) === 2000L)
+    assert(lin.agg(sum("events")).head().getLong(0) === 2000L)
     assert(lin.select("snapshot_id").distinct().count() === 4L)
     // per-commit lineage agrees with the snapshots counter deltas
     val perSnap = lin.groupBy("snapshot_id").agg(sum("events").as("ev"))
@@ -84,9 +84,9 @@ class InspectSpec extends AnyFunSuite {
     // time travel: files at the first snapshot describe that snapshot only
     val firstId = snaps.head.getAs[Long]("snapshot_id")
     val oldFiles = insp.files(firstId)
-    assert(oldFiles.select("snapshot_id").distinct().head.getLong(0) === firstId)
-    assert(oldFiles.agg(sum("rows")).head.getLong(0) <
-      files.agg(sum("rows")).head.getLong(0))
+    assert(oldFiles.select("snapshot_id").distinct().head().getLong(0) === firstId)
+    assert(oldFiles.agg(sum("rows")).head().getLong(0) <
+      files.agg(sum("rows")).head().getLong(0))
   }
 
   test("refs and history track tags, branches and restore through the lifecycle") {
@@ -142,8 +142,8 @@ class InspectSpec extends AnyFunSuite {
     // bucket, key fingerprints on every delta, more physical rows than keys
     val before = insp.files()
     assert(before.filter(col("has_key_fp")).count() === before.count())
-    assert(before.agg(sum("rows")).head.getLong(0) >= engine.currentCells().count())
-    val deltasPerBucket = insp.partitions().agg(max("delta_files")).head.getLong(0)
+    assert(before.agg(sum("rows")).head().getLong(0) >= engine.currentCells().count())
+    val deltasPerBucket = insp.partitions().agg(max("delta_files")).head().getLong(0)
     assert(deltasPerBucket > 1L)
 
     engine.compact()
@@ -159,8 +159,8 @@ class InspectSpec extends AnyFunSuite {
     val files = after.files()
     assert(files.filter(col("origin") === "compact").count() === files.count())
     assert(files.filter(col("has_key_fp")).count() === 0L)
-    assert(files.agg(sum("rows")).head.getLong(0) === engine.currentCells().count())
-    assert(after.partitions().agg(sum("delta_files")).head.getLong(0) === 0L)
+    assert(files.agg(sum("rows")).head().getLong(0) === engine.currentCells().count())
+    assert(after.partitions().agg(sum("delta_files")).head().getLong(0) === 0L)
   }
 
   test("rebucket surfaces as a layout-evolution commit with rebucket-origin files") {
@@ -180,7 +180,7 @@ class InspectSpec extends AnyFunSuite {
     assert(files.filter(col("origin") === "rebucket").count() === files.count())
     assert(files.select("bucket").collect().map(_.getInt(0)).toSet
       .subsetOf((0 until 16).toSet))
-    assert(files.agg(sum("rows")).head.getLong(0) === engine2.currentCells().count())
+    assert(files.agg(sum("rows")).head().getLong(0) === engine2.currentCells().count())
 
     // the rebucket kind SURVIVES a chain re-root: once expiry makes the
     // rebucket commit the root there is no parent to compare layouts
@@ -247,13 +247,13 @@ class InspectSpec extends AnyFunSuite {
 
     // register: the whole surface is one spark.sql away
     insp.register("it")
-    assert(spark.sql("SELECT count(*) FROM it_snapshots").head.getLong(0) === 1L)
-    assert(spark.sql("SELECT sum(rows) FROM it_partitions").head.getLong(0) ===
+    assert(spark.sql("SELECT count(*) FROM it_snapshots").head().getLong(0) === 1L)
+    assert(spark.sql("SELECT sum(rows) FROM it_partitions").head().getLong(0) ===
       engine.currentCells().count())
     assert(spark.sql(
-      "SELECT count(*) FROM it_refs WHERE name = 'main'").head.getLong(0) === 1L)
-    assert(spark.sql("SELECT count(*) FROM it_orphans").head.getLong(0) === 0L)
-    assert(spark.sql("SELECT max(lsn_max) FROM it_lineage").head.getLong(0) <= 1599L)
+      "SELECT count(*) FROM it_refs WHERE name = 'main'").head().getLong(0) === 1L)
+    assert(spark.sql("SELECT count(*) FROM it_orphans").head().getLong(0) === 0L)
+    assert(spark.sql("SELECT max(lsn_max) FROM it_lineage").head().getLong(0) <= 1599L)
   }
 
   test("empty table yields empty, well-typed inspection tables") {

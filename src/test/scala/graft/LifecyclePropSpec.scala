@@ -331,18 +331,18 @@ class LifecyclePropSpec extends AnyFunSuite {
     // physical rows: exact for copy-on-write, >= merged for delta piles
     val merged = engine.currentCells().count()
     val phys = if (fileRows.isEmpty) 0L
-      else files.agg(sum("rows")).head.getLong(0)
+      else files.agg(sum("rows")).head().getLong(0)
     if (mor) assert(phys >= merged, "MOR physical rows < merged keys")
     else assert(phys === merged, "COW physical rows != merged keys")
     // partitions is an exact rollup of files
-    assert(insp.partitions().agg(coalesce(sum("files"), lit(0L))).head.getLong(0)
+    assert(insp.partitions().agg(coalesce(sum("files"), lit(0L))).head().getLong(0)
       === files.count(), "partitions rollup disagrees with files")
     // the snapshot table's head is the table's head
-    assert(insp.snapshots.agg(max("snapshot_id")).head.getLong(0) ===
+    assert(insp.snapshots.agg(max("snapshot_id")).head().getLong(0) ===
       engine.table.currentSnapshotId, "snapshots head != current snapshot")
     // refs always includes main at the current head
     assert(insp.refs.filter(col("name") === "main")
-      .head.getAs[Long]("snapshot_id") === engine.table.currentSnapshotId)
+      .head().getAs[Long]("snapshot_id") === engine.table.currentSnapshotId)
     // the orphan dry-run names exactly what vacuum then reclaims, and the
     // orphan set drains to empty afterwards
     val predicted = insp.orphans(0L).collect()

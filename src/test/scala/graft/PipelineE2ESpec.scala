@@ -28,7 +28,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     import spark.implicits._
     val ev = Synth.events(spark, n, seed = 57, repos = 12, pathsPerRepo = 30)
     ev.select(pmod(hash(col("repo"), col("path")), lit(PARTS)).as("p"),
-        to_json(struct(ev.columns.map(col): _*)).as("j"))
+        to_json(struct(ev.columns.map(col).toSeq: _*)).as("j"))
       .orderBy(col("j"))
       .as[(Int, String)].collect().toSeq
   }

@@ -300,7 +300,7 @@ class QueriesSpec extends AnyFunSuite {
     val residual = scrubbed.select(
       sum(size(regexp_extract_all(col("s"), lit(email), lit(0)))) +
       sum(size(regexp_extract_all(col("s"), lit(ip), lit(0)))) +
-      sum(size(regexp_extract_all(col("s"), lit(phone), lit(0))))).head.getLong(0)
+      sum(size(regexp_extract_all(col("s"), lit(phone), lit(0))))).head().getLong(0)
     assert(residual === 0L, "PII survived the scrub chain")
     // and the query's counts see the injected spans where the splice fires
     val counts = SparkEntry.queries("q57_pii_scrub")(spark, sf).collect()

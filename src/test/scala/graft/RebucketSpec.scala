@@ -27,12 +27,12 @@ class RebucketSpec extends AnyFunSuite {
   def stateSet(e: CdcEngine): Set[String] = {
     val df = e.currentState()
     val cols = df.columns.sorted
-    df.select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+    df.select(cols.head, cols.tail.toSeq: _*).collect().map(_.mkString("|")).toSet
   }
 
   def feedSet(df: org.apache.spark.sql.DataFrame): Set[String] = {
     val cols = df.columns.sorted
-    df.select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+    df.select(cols.head, cols.tail.toSeq: _*).collect().map(_.mkString("|")).toSet
   }
 
   test("grow 8 -> 32: state identical, old snapshots readable, stale engine fails loudly") {
@@ -136,7 +136,7 @@ class RebucketSpec extends AnyFunSuite {
     def visible(e: CdcEngine) = {
       val df = e.currentState()
       val cols = df.columns.filterNot(c => c == "_lsn" || c == "_seq").sorted
-      df.select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+      df.select(cols.head, cols.tail.toSeq: _*).collect().map(_.mkString("|")).toSet
     }
     assert(visible(mirror) === visible(e2))
     // the view refreshes across the boundary and equals the full recompute

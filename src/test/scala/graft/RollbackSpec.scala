@@ -28,7 +28,7 @@ class RollbackSpec extends AnyFunSuite {
   private def visible(e: CdcEngine): Seq[String] = {
     val df = e.currentState()
     val cols = df.columns.filterNot(c => c == "_lsn" || c == "_seq").sorted
-    df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    df.select(cols.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
   }
 
   test("restore reverts visible state, keeps history, preserves exactly-once") {

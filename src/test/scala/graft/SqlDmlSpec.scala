@@ -29,7 +29,7 @@ class SqlDmlSpec extends AnyFunSuite {
       (engine, name)
     }
 
-  private def count(sql: String): Long = spark.sql(sql).head.getLong(0)
+  private def count(sql: String): Long = spark.sql(sql).head().getLong(0)
 
   test("DELETE removes matching rows, is time-travel-reversible, no-op when empty") {
     val (engine, t) = freshTable(seed = 101)
@@ -40,7 +40,7 @@ class SqlDmlSpec extends AnyFunSuite {
 
     val res = spark.sql(s"DELETE FROM ice.$t WHERE lang = 'scala'")
     assert(res.columns === Array("num_affected_rows"))
-    assert(res.head.getLong(0) === scala0)
+    assert(res.head().getLong(0) === scala0)
     assert(count(s"SELECT count(*) FROM ice.$t WHERE lang = 'scala'") === 0)
     assert(count(s"SELECT count(*) FROM ice.$t") === before - scala0)
     // the delete is one snapshot: time travel still sees the rows
@@ -48,12 +48,12 @@ class SqlDmlSpec extends AnyFunSuite {
       === scala0)
     // an empty row set commits nothing (no empty snapshots)
     val head = engine.table.currentSnapshotId
-    assert(spark.sql(s"DELETE FROM ice.$t WHERE lang = 'scala'").head.getLong(0) === 0)
+    assert(spark.sql(s"DELETE FROM ice.$t WHERE lang = 'scala'").head().getLong(0) === 0)
     assert(engine.table.currentSnapshotId === head)
     // aliased target, alias-qualified condition
     val py = count(s"SELECT count(*) FROM ice.$t WHERE lang = 'py'")
     assert(spark.sql(s"DELETE FROM ice.$t AS x WHERE x.lang = 'py'")
-      .head.getLong(0) === py)
+      .head().getLong(0) === py)
   }
 
   test("UPDATE assigns listed columns, carries the rest forward; NULL means unchanged") {
@@ -69,7 +69,7 @@ class SqlDmlSpec extends AnyFunSuite {
 
     val res = spark.sql(
       s"UPDATE ice.$t SET content = concat('X-', commit) WHERE $where")
-    assert(res.head.getLong(0) === beforeMap.size)
+    assert(res.head().getLong(0) === beforeMap.size)
     val after = spark.sql(
       s"SELECT repo, path, commit, content FROM ice.$t WHERE $where")
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getString(2), r.getString(3)))
@@ -83,7 +83,7 @@ class SqlDmlSpec extends AnyFunSuite {
     spark.sql(s"UPDATE ice.$t SET content = NULL WHERE $where")
     val afterNull = spark.sql(
       s"SELECT count(*) FROM ice.$t WHERE $where AND content LIKE 'X-%'")
-    assert(afterNull.head.getLong(0) === beforeMap.size, "NULL must carry forward")
+    assert(afterNull.head().getLong(0) === beforeMap.size, "NULL must carry forward")
   }
 
   test("UPDATE rejects key, envelope and unknown columns") {
@@ -110,14 +110,14 @@ class SqlDmlSpec extends AnyFunSuite {
     // explicit column list: unlisted payload is NULL
     spark.sql(s"INSERT INTO ice.$t (repo, path, content) VALUES ('r-new', 'p-2', 'b2')")
     val r2 = spark.sql(
-      s"SELECT lang, content FROM ice.$t WHERE repo = 'r-new' AND path = 'p-2'").head
+      s"SELECT lang, content FROM ice.$t WHERE repo = 'r-new' AND path = 'p-2'").head()
     assert(r2.isNullAt(0) && r2.getString(1) === "b2")
     // a key-unique table has no append-duplicates: INSERT on an existing key upserts
     val total = count(s"SELECT count(*) FROM ice.$t")
     spark.sql(s"INSERT INTO ice.$t VALUES ('r-new', 'p-1', 'c1b', 'scala', 'body-1b')")
     assert(count(s"SELECT count(*) FROM ice.$t") === total)
     assert(spark.sql(s"SELECT content FROM ice.$t WHERE repo = 'r-new' AND path = 'p-1'")
-      .head.getString(0) === "body-1b")
+      .head().getString(0) === "body-1b")
     // two rows inserting the same key in one statement: nondeterministic -> loud
     val dup = intercept[AnalysisException] {
       spark.sql(s"INSERT INTO ice.$t VALUES ('d', 'x', 'c', 'l', 'a'), ('d', 'x', 'c', 'l', 'b')")
@@ -147,7 +147,7 @@ class SqlDmlSpec extends AnyFunSuite {
       WHEN MATCHED THEN UPDATE SET content = s.content
       WHEN NOT MATCHED THEN INSERT (repo, path, commit, lang, content)
         VALUES (s.repo, s.path, s.commit, s.lang, s.content)""")
-    assert(res.head.getLong(0) === 150)
+    assert(res.head().getLong(0) === 150)
     assert(count(s"SELECT count(*) FROM ice.$t WHERE content LIKE 'merged-%'") === 100)
     assert(count(s"SELECT count(*) FROM ice.$t WHERE repo LIKE 'mrepo-%'") === 50)
     // matched rows kept their unassigned columns
@@ -173,7 +173,7 @@ class SqlDmlSpec extends AnyFunSuite {
       WHEN MATCHED THEN UPDATE SET *
       WHEN NOT MATCHED BY SOURCE THEN DELETE""")
     // every row was touched: srcTotal matched (kill or update), rest deleted
-    assert(res.head.getLong(0) === total)
+    assert(res.head().getLong(0) === total)
     assert(count(s"SELECT count(*) FROM ice.$t") === srcTotal - kills)
     assert(count(s"SELECT count(*) FROM ice.$t WHERE content != 'rewritten'") === 0)
   }
@@ -197,7 +197,7 @@ class SqlDmlSpec extends AnyFunSuite {
     val sid = engine.table.currentSnapshotId
     val epochsBefore = engine.table.committedEpochs
     val res = spark.sql(s"DELETE FROM ice.$t WHERE lang = 'go'")
-    val deleted = res.head.getLong(0)
+    val deleted = res.head().getLong(0)
     assert(deleted > 0)
     // the DML snapshot is a NON-BATCH commit: the epoch ledger is untouched,
     // so streaming exactly-once bookkeeping cannot collide with DML
@@ -225,13 +225,13 @@ class SqlDmlSpec extends AnyFunSuite {
     val hot = count(s"SELECT count(*) FROM ice.$t WHERE repo IN (SELECT repo FROM dml_hot)")
     assert(hot > 0)
     assert(spark.sql(s"DELETE FROM ice.$t WHERE repo IN (SELECT repo FROM dml_hot)")
-      .head.getLong(0) === hot)
+      .head().getLong(0) === hot)
     assert(count(s"SELECT count(*) FROM ice.$t WHERE repo IN (SELECT repo FROM dml_hot)") === 0)
     // BY NAME: source column order does not matter, unlisted payload is NULL
     spark.sql(s"INSERT INTO ice.$t BY NAME " +
       "SELECT 'by-body' AS content, 'bn-path' AS path, 'bn-repo' AS repo")
     val r = spark.sql(
-      s"SELECT lang, content FROM ice.$t WHERE repo = 'bn-repo' AND path = 'bn-path'").head
+      s"SELECT lang, content FROM ice.$t WHERE repo = 'bn-repo' AND path = 'bn-path'").head()
     assert(r.isNullAt(0) && r.getString(1) === "by-body")
   }
 
@@ -248,7 +248,7 @@ class SqlDmlSpec extends AnyFunSuite {
     val files0 = engine.inspect.files(-1L).count()
     val rs = count(s"SELECT count(*) FROM ice.$name WHERE lang = 'rs'")
     assert(rs > 0)
-    assert(spark.sql(s"DELETE FROM ice.$name WHERE lang = 'rs'").head.getLong(0) === rs)
+    assert(spark.sql(s"DELETE FROM ice.$name WHERE lang = 'rs'").head().getLong(0) === rs)
     assert(count(s"SELECT count(*) FROM ice.$name WHERE lang = 'rs'") === 0)
     // merge-on-read: the DML appended tombstone deltas, no bucket rewrite
     assert(engine.inspect.files(-1L).count() > files0,
@@ -268,7 +268,7 @@ class SqlDmlSpec extends AnyFunSuite {
     })
     val before = count(s"SELECT count(*) FROM ice.$t WHERE lang = 'scala'")
     racer.start()
-    val deleted = try spark.sql(s"DELETE FROM ice.$t WHERE lang = 'scala'").head.getLong(0)
+    val deleted = try spark.sql(s"DELETE FROM ice.$t WHERE lang = 'scala'").head().getLong(0)
     finally racer.join()
     // the DELETE saw the statement-start state (read-committed DML) and the
     // racer's commit survived the CAS interleaving either way

@@ -204,7 +204,7 @@ class TombstonePurgeSpec extends AnyFunSuite {
     def visible(e: CdcEngine): Seq[String] = {
       val df = e.currentState()
       val cols = df.columns.filterNot(c => c == "_lsn" || c == "_seq").sorted
-      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      df.select(cols.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
     }
     val ev = Synth.events(spark, 2000, seed = 84)
     src.applyBatch(0, ev.filter(col("commit_lsn") < 1000))

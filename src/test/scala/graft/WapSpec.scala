@@ -33,7 +33,7 @@ class WapSpec extends AnyFunSuite {
   def stateSet(e: CdcEngine): Set[String] = {
     val df = e.currentState()
     val cols = df.columns.sorted
-    df.select(cols.head, cols.tail: _*).collect().map(_.mkString("|")).toSet
+    df.select(cols.head, cols.tail.toSeq: _*).collect().map(_.mkString("|")).toSet
   }
 
   def dataFiles(root: Path): Set[String] = {
