@@ -2,9 +2,12 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftStreamingBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.icelite.{Icelite, IceliteTable}
 import graft.model.ChangeEvent
@@ -125,9 +128,10 @@ case class EngineConf(
     // precedence over writeSortCols at auto-compaction when set. See
     // compact(zorderBy = ...).
     zorderCols: Seq[String] = Nil,
-    // dead-letter quarantine: non-empty = malformed events (null key
-    // column, op, lsn or seq — rows the merge's validity predicate would
-    // silently drop) are written to `<dlqDir>/epoch=N` parquet with a
+    // dead-letter quarantine: non-empty = malformed events (a source
+    // record that did not parse, null key column, op, lsn or seq — rows
+    // the merge's validity predicate would silently drop) are written,
+    // every column kept, to `<dlqDir>/epoch=N` parquet with a
     // `_reason` column before the merge runs, and their count is surfaced
     // on the CommitResult and in metrics.jsonl. A CDC source that emits
     // garbage must be VISIBLE, not silently thinner; the quarantine rides
@@ -241,13 +245,17 @@ class CdcEngine(
 
   // ---------------------------------------------------------------- schema
 
-  /** Payload fields of an incoming flat batch (everything not envelope).
-    * Reserved names would silently collide with the engine's internal
-    * columns (cell envelope, bucket/salt partitioners) — reject loudly. */
+  /** Payload fields of an incoming flat batch: everything not envelope and
+    * not source metadata. Reserved names would silently collide with the
+    * engine's internal columns (cell envelope, bucket/salt partitioners) —
+    * reject loudly. */
   private def payloadOf(df: DataFrame): StructType = {
     // _lsn/_seq/_op/_ts are the flat-read envelope and content_sha256 the
     // derived invariant column — a payload under any of these names would
-    // silently collide with (or be replaced by) engine output on every read
+    // silently collide with (or be replaced by) engine output on every read.
+    // The prefix `__src_` (ChangeEvent.SourcePrefix) is reserved as well,
+    // for source metadata: such columns are never payload, whichever path
+    // the batch came by, and stay on quarantined rows (DlqSpec).
     val reserved = Set(OpCell, TsCell, "__b", SaltCol,
       "_op", "_ts", "_lsn", "_seq", "content_sha256")
     val bad = df.schema.fieldNames.filter(reserved.contains)
@@ -276,7 +284,8 @@ class CdcEngine(
     ok("ts", t => t == TimestampType || t == StringType,
       "TIMESTAMP (or a castable STRING)")
     keyCols.foreach(k => ok(k, _ == StringType, "STRING"))
-    StructType(df.schema.fields.filterNot(f => ChangeEvent.envelopeCols.contains(f.name)))
+    StructType(df.schema.fields.filterNot(f => ChangeEvent.envelopeCols.contains(f.name) ||
+      f.name.startsWith(ChangeEvent.SourcePrefix)))
   }
 
   /** Payload fields of a (cell-form) table schema. */
@@ -526,8 +535,23 @@ class CdcEngine(
       false
     }
     val casProtected = branch.isEmpty && !stage && !table.meta.mergeOnRead
+    // The merge makes several passes over the batch (lineage, quarantine,
+    // merge), and a retry makes them again. A batch that is dear to re-read
+    // (a network source, a streaming sink's micro-batch) is pinned once, as
+    // rows, so its records cross the wire once. A batch that reads only
+    // files or local rows is re-read instead: on parquet replay a pin cost
+    // more than the re-reads it saved (cdcbench replay-cow). A plan the
+    // caller cached stays the caller's.
+    val pin =
+      if (batchRaw.storageLevel != StorageLevel.NONE ||
+          batchRaw.queryExecution.analyzed.collectLeaves().forall {
+            case _: LogicalRelation | _: LocalRelation => true
+            case _ => false
+          }) None
+      else Some(GraftStreamingBridge.pinRows(batchRaw))
+    val batch = pin.fold(batchRaw)(_._1)
     var conflicts = 0
-    while (true) {
+    try while (true) {
       val headBefore = table.currentSnapshotId
       def loseRace(detail: String): Option[CommitResult] = {
         conflicts += 1
@@ -541,7 +565,7 @@ class CdcEngine(
           Some(CommitResult(epoch, table.currentSnapshotId, skipped = true, 0, 0, 0))
         else None
       }
-      try return applyBatchInner(epoch, batchRaw, stage, branch)
+      try return applyBatchInner(epoch, batch, stage, branch)
       catch {
         case e: Icelite.CommitConflictException =>
           loseRace(e.getMessage).foreach(return _)
@@ -551,7 +575,7 @@ class CdcEngine(
           loseRace(s"pinned read vanished under concurrent expire: ${e.getMessage}")
             .foreach(return _)
       }
-    }
+    } finally pin.foreach(_._2.unpersist(blocking = false))
     throw new IllegalStateException("unreachable")
   }
 
@@ -585,7 +609,13 @@ class CdcEngine(
     // at keyFpBits ints per bucket).
     val mor = table.meta.mergeOnRead
     val fpEnabled = mor && conf.keyFpBits > 0
-    val validPred = keyColumns.map(_.isNotNull).reduce(_ && _) &&
+    // a row whose source record did not parse carries its text in
+    // ChangeEvent.RawCol; its null envelope says nothing, so it is
+    // rejected first, as `unparseable`
+    val unparseable =
+      if (batchRaw.columns.contains(ChangeEvent.RawCol)) col(ChangeEvent.RawCol).isNotNull
+      else lit(false)
+    val validPred = !unparseable && keyColumns.map(_.isNotNull).reduce(_ && _) &&
       col("op").isNotNull && col("commit_lsn").isNotNull && col("seq").isNotNull
     val fallible = fallibleCasts(batchRaw, targetPayload)
     val applyPred = validPred && !castFailPred(fallible)
@@ -609,7 +639,8 @@ class CdcEngine(
     val rejected: Long =
       if (conf.dlqDir.isEmpty || badTotal == 0) 0L
       else {
-        val reason = when(keyColumns.map(_.isNull).reduce(_ || _), "null_key")
+        val reason = when(unparseable, "unparseable")
+          .when(keyColumns.map(_.isNull).reduce(_ || _), "null_key")
           .when(col("op").isNull, "null_op")
           .when(col("commit_lsn").isNull, "null_lsn")
           .when(col("seq").isNull, "null_seq")

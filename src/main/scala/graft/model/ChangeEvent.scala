@@ -37,6 +37,13 @@ object ChangeEvent {
   val envelopeCols: Seq[String] = Seq("repo", "path", "op", "commit_lsn", "seq", "ts")
   val keyCols: Seq[String] = Seq("repo", "path")
 
+  /** Columns named `__src_*` are source metadata (a binlog record's
+    * partition and offset): never payload, kept on quarantined rows. */
+  val SourcePrefix = "__src_"
+  /** The source record's text on rows whose record did not parse (null
+    * otherwise); the engine quarantines such rows as `unparseable`. */
+  val RawCol: String = SourcePrefix + "raw"
+
   val schema: StructType = StructType(Seq(
     StructField("repo", StringType, nullable = false),
     StructField("path", StringType, nullable = false),

@@ -1,164 +1,70 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
-import graft.engine.CdcEngine
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, from_json, when}
+import org.apache.spark.sql.types.StringType
+
 import graft.model.ChangeEvent
 
-/** Structured Streaming front-end: tail a directory of change-event files
-  * (the sandbox's stand-in for a binlog/WAL/Kafka topic) and apply each
-  * micro-batch through the engine's MERGE.
+/** The binlog decode: a `cdc-binlog` stream (Kafka-shaped
+  * partition/offset/value rows) as flat change events, ready for
+  * `writeStream.format("icelite")` — the one streaming ingest path:
   *
-  * Exactly-once composition: Spark's streaming checkpoint gives
-  * monotonically increasing, replay-stable `batchId`s; `applyBatch` commits
-  * are idempotent per epoch — so a batch re-delivered after a crash between
-  * sink-commit and offset-commit is a no-op. This is the standard
-  * foreachBatch + idempotent-sink exactly-once recipe.
+  * {{{
+  *   CdcStream.binlogEvents(spark, host, port, maxRecordsPerTrigger = 100000)
+  *     .writeStream.format("icelite")
+  *     .option("path", tableRoot).option("checkpointLocation", ckpt)
+  *     .trigger(Trigger.AvailableNow())
+  *     .start()
+  * }}}
   *
-  * The reference's analog is its snapshot-folder replay loop
-  * (/root/reference/etl/fact_changed.py:851-875); here the "folder" is a
-  * file-source offset range and the state lives in the icelite table, so no
-  * streaming state store or watermark is needed (SURVEY.md §2.9).
+  * Exactly-once is the sink's: checkpointed source offsets plus
+  * epoch-keyed, idempotent engine commits. The engine pins each batch, so
+  * every record crosses the wire once, and quarantines the records that
+  * did not parse (see [[binlogEvents]]).
   */
 object CdcStream {
 
   /** Tail a [[graft.streaming.binlog.BinlogServer]] (or anything speaking
-    * its protocol) as a parsed change-event stream: the `cdc-binlog` DSv2
-    * source emits Kafka-shaped (partition, offset, value) rows, and the
-    * payload is decoded here with `from_json` against the engine envelope —
-    * the exact split Kafka deployments use (opaque broker, typed query).
-    * Envelope columns plus the source coordinates survive, so lineage can
-    * record "offsets p/[from,until) -> snapshot id" per micro-batch. */
+    * its protocol) as a parsed change-event stream. The payload is decoded
+    * here with `from_json` against the engine envelope, the split Kafka
+    * deployments use (opaque broker, typed query).
+    *
+    * Besides the event columns each row carries its source coordinates,
+    * `__src_partition` and `__src_offset`, and `__src_raw`: the record
+    * text where it failed to parse, else null. Parsing runs PERMISSIVE
+    * with a corrupt-record column (a malformed record parses to a struct
+    * of nulls, not a null struct, so that column is the only reliable
+    * detector). The engine treats `__src_*` columns as source metadata,
+    * never payload, and quarantines rows with `__src_raw` set as
+    * `unparseable` under its `dlqDir`, bytes and coordinates included. */
   def binlogEvents(
       spark: SparkSession,
       host: String,
       port: Int,
-      maxRecordsPerTrigger: Long = 0L): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, from_json}
-    var reader = spark.readStream.format("cdc-binlog")
-      .option("host", host).option("port", port)
-    if (maxRecordsPerTrigger > 0)
-      reader = reader.option("maxRecordsPerTrigger", maxRecordsPerTrigger)
-    reader.load()
-      .select(
-        col("partition").as("__src_partition"),
-        col("offset").as("__src_offset"),
-        from_json(col("value"), ChangeEvent.schema).as("evt"))
-      .select(col("__src_partition"), col("__src_offset"), col("evt.*"))
-  }
+      maxRecordsPerTrigger: Long = 0L): DataFrame =
+    shardedBinlogEvents(spark, s"$host:$port", maxRecordsPerTrigger)
 
-  /** Tail the binlog server until its current high-water marks
-    * (Trigger.AvailableNow) and MERGE every micro-batch. Exactly-once is the
-    * same composition as [[runAvailableNow]]: checkpointed source offsets +
-    * idempotent epoch-keyed sink commits; the source's offset ranges are
-    * replayable by contract, so a crash between sink-commit and
-    * offset-commit re-delivers a range whose epoch the table already holds. */
-  def runBinlogAvailableNow(
+  /** [[binlogEvents]] against a SHARDED broker fleet: `brokers` =
+    * "host:port,host:port,..."; partition p is fetched from broker p % n
+    * (see BinlogTable's owner routing). */
+  def shardedBinlogEvents(
       spark: SparkSession,
-      engine: CdcEngine,
-      host: String,
-      port: Int,
-      checkpointDir: String,
-      maxRecordsPerTrigger: Long = 0L): Unit =
-    runBinlogAvailableNowBrokers(spark, engine, s"$host:$port", checkpointDir,
-      maxRecordsPerTrigger)
-
-  /** [[runBinlogAvailableNow]] against a SHARDED broker fleet:
-    * `brokers` = "host:port,host:port,..."; partition p is fetched from
-    * broker p % n (see BinlogTable's owner routing). */
-  def runBinlogAvailableNowBrokers(
-      spark: SparkSession,
-      engine: CdcEngine,
       brokers: String,
-      checkpointDir: String,
-      maxRecordsPerTrigger: Long = 0L): Unit = {
-    import org.apache.spark.sql.functions.{col, from_json, lit}
-    var reader = spark.readStream.format("cdc-binlog")
-      .option("brokers", brokers)
+      maxRecordsPerTrigger: Long = 0L): DataFrame = {
+    var reader = spark.readStream.format("cdc-binlog").option("brokers", brokers)
     if (maxRecordsPerTrigger > 0)
       reader = reader.option("maxRecordsPerTrigger", maxRecordsPerTrigger)
-    // The raw value survives next to the parsed struct, and parsing runs
-    // PERMISSIVE with a corrupt-record column (a malformed payload parses
-    // to a struct of NULLS, not a null struct, so the corrupt column is the
-    // only reliable detector): records that fail to parse must reach the
-    // quarantine with their original bytes — silently filtering them would
-    // lose them irrecoverably once the checkpoint advances (the file-based
-    // path quarantines the same rows with full payload).
-    val parseSchema = ChangeEvent.schema
-      .add("_corrupt", org.apache.spark.sql.types.StringType)
-    val q = reader.load()
-      .select(col("partition"), col("offset"), col("value"),
-        from_json(col("value"), parseSchema, Map(
-          "mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt")).as("evt"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // The MERGE makes several passes over the batch; pin it so each
-        // offset range crosses the wire once (re-fetch stays CORRECT — the
-        // range is replayable — this is purely an efficiency pin, and
-        // BinlogSourceSpec measures it via the server's served counter).
-        val pinned = df.persist()
-        try {
-          val corrupt = col("evt").isNull || col("evt._corrupt").isNotNull
-          if (engine.conf.dlqDir.nonEmpty) {
-            val bad = pinned.filter(corrupt)
-            // limit(1) probe keeps clean batches free of quarantine writes;
-            // overwrite per wire-epoch dir keeps redelivery idempotent
-            if (bad.limit(1).count() > 0)
-              bad.select(col("partition"), col("offset"),
-                  col("value").as("payload"))
-                .withColumn("_reason", lit("unparseable"))
-                .write.mode("overwrite")
-                .parquet(s"${engine.conf.dlqDir}/wire-epoch=$batchId")
-          }
-          // rows that PARSED but carry a null envelope (null repo/op/lsn)
-          // flow to the engine, whose own DLQ quarantines them with reason
-          engine.applyBatch(batchId,
-            pinned.filter(!corrupt).select(col("evt.*")).drop("_corrupt")): Unit
-        } finally { pinned.unpersist(); () }
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Run until no more input files (Trigger.AvailableNow), then return.
-    *
-    * `mirror`: optional downstream FeedConsumer synced INSIDE each
-    * micro-batch, chaining the full CDC pipeline — binlog tail -> MERGE ->
-    * snapshot commit -> logical change feed -> replicated table — per
-    * trigger. Exactly-once composes transitively: the sink epoch is the
-    * streaming batchId and the mirror epoch is the source snapshot id,
-    * both idempotent, so a crash anywhere in the chain replays as no-ops. */
-  def runAvailableNow(
-      spark: SparkSession,
-      engine: CdcEngine,
-      inputDir: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 0,
-      mirror: Option[graft.engine.FeedConsumer] = None,
-      // Some(name): every micro-batch lands on that BRANCH instead of main
-      // (a streaming quarantine lane — tail a suspect source in isolation,
-      // audit the lane, publish with one fast-forward; main and any mirror
-      // see nothing until then). The streaming batchId stays the epoch, so
-      // checkpoint-resume replays are per-ref no-ops as on main.
-      branch: Option[String] = None): Unit = {
-    var reader = spark.readStream.schema(ChangeEvent.schema)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val stream = reader.parquet(inputDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        branch match {
-          case Some(n) => engine.applyBatchToBranch(batchId, df, n)
-          case None => engine.applyBatch(batchId, df)
-        }
-        mirror.foreach(_.sync()): Unit
-      }
-      .start()
-    q.awaitTermination()
+    val corrupt = "_corrupt"
+    val evt = from_json(col("value"), ChangeEvent.schema.add(corrupt, StringType),
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt))
+    reader.load()
+      .select(col("partition"), col("offset"), col("value"), evt.as("evt"))
+      .select(
+        (col("partition").as("__src_partition") +:
+          col("offset").as("__src_offset") +:
+          ChangeEvent.schema.fieldNames.toSeq.map(f => col(s"evt.$f"))) :+
+          when(col("evt").isNull || col(s"evt.$corrupt").isNotNull, col("value"))
+            .as(ChangeEvent.RawCol): _*)
   }
 }

@@ -21,17 +21,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * engine was missing. Spark-first by construction: this is the same
   * MicroBatchStream/SupportsAdmissionControl surface the real Kafka
   * connector implements, so everything downstream (checkpointing, AvailableNow
-  * drains, maxRecordsPerTrigger admission control, foreachBatch epochs) is
-  * stock Structured Streaming machinery.
+  * drains, maxRecordsPerTrigger admission control, sink epochs) is stock
+  * Structured Streaming machinery.
   *
   * Emitted schema is Kafka's shape — (partition int, offset long, value
-  * string) — the payload stays opaque at the source and is parsed with
-  * `from_json(value, ChangeEvent.schema)` in the query (see
-  * [[graft.streaming.CdcStream.binlogEvents]]). Exactly-once composes the
-  * standard way: Spark checkpoints the (partition -> offset) vector per
-  * micro-batch, FETCH of a committed range is replay-stable, and the sink
-  * (`CdcEngine.applyBatch`) is idempotent per epoch, so a crash anywhere
-  * between sink-commit and offset-commit replays as a no-op.
+  * string) — the payload stays opaque at the source and is decoded once,
+  * in the query, by [[graft.streaming.CdcStream.binlogEvents]], whose
+  * output goes to `writeStream.format("icelite")`. Exactly-once composes
+  * the standard way: Spark checkpoints the (partition -> offset) vector
+  * per micro-batch, FETCH of a committed range is replay-stable, and the
+  * sink (`CdcEngine.applyBatch`) is idempotent per epoch, so a crash
+  * anywhere between sink-commit and offset-commit replays as a no-op. The
+  * engine pins each batch, so a range crosses the wire once per delivery.
   *
   * Scale notes: one InputPartition per log partition — on a 1000-executor
   * cluster a 4000-partition binlog fans out 4000 concurrent socket readers,
@@ -63,6 +64,33 @@ object BinlogSource {
     StructField("partition", IntegerType, nullable = false),
     StructField("offset", LongType, nullable = false),
     StructField("value", StringType, nullable = true)))
+
+  /** A driver-side control-plane poll, merged across the broker set: each
+    * broker reports the full partition-count vector but only its OWNED
+    * partitions carry real values (the rest sit at their initial 0), so
+    * the cluster-wide vector is the elementwise max. Brokers that disagree
+    * on the partition count fail loudly. One broker is the degenerate case
+    * with zero merge cost. */
+  private[binlog] def poll(brokers: Seq[(String, Int)])(
+      f: BinlogClient => Array[Long]): Array[Long] =
+    brokers.map { case (h, p) =>
+      val c = new BinlogClient(h, p)
+      try f(c) finally c.close()
+    }.reduce { (a, b) =>
+      require(a.length == b.length,
+        s"binlog brokers disagree on partition count: ${a.length} vs ${b.length}")
+      a.zip(b).map { case (x, y) => math.max(x, y) }
+    }
+
+  /** One input partition per log partition with records in [start, end),
+    * fetched from its owner broker p % n (the loader's rule). */
+  private[binlog] def partitions(brokers: Seq[(String, Int)], start: Array[Long],
+      end: Array[Long]): Array[InputPartition] =
+    start.indices.collect {
+      case p if end(p) > start(p) =>
+        val (h, pt) = brokers(p % brokers.size)
+        BinlogInputPartition(h, pt, p, start(p), end(p)): InputPartition
+    }.toArray
 }
 
 private[binlog] final class BinlogTable(options: CaseInsensitiveStringMap)
@@ -129,33 +157,18 @@ private[binlog] final class BinlogMicroBatchStream(
     brokers: Seq[(String, Int)], maxPerTrigger: Long)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  // Driver-side control-plane polls, merged across the broker set: each
-  // broker reports the full partition-count vector but only its OWNED
-  // partitions carry real values (the rest sit at their initial 0), so
-  // the cluster-wide vector is the elementwise max. One broker is the
-  // degenerate case with zero merge cost.
-  private def merged(f: BinlogClient => Array[Long]): Array[Long] =
-    brokers.map { case (h, p) =>
-      val c = new BinlogClient(h, p)
-      try f(c) finally c.close()
-    }.reduce { (a, b) =>
-      require(a.length == b.length,
-        s"binlog brokers disagree on partition count: ${a.length} vs ${b.length}")
-      a.zip(b).map { case (x, y) => math.max(x, y) }
-    }
-
   /** AvailableNow target: high-water marks captured once at query start, so
     * the drain is bounded even while producers keep publishing. */
   @volatile private var availableNowTarget: Array[Long] = null
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = merged(_.latest())
+    availableNowTarget = BinlogSource.poll(brokers)(_.latest())
 
   /** New streams start at the EARLIEST retained offsets (Kafka's
     * startingOffsets=earliest): a log whose prefix retention already
     * truncated must not be addressed from 0. */
   override def initialOffset(): Offset =
-    BinlogOffset(merged(_.earliest()))
+    BinlogOffset(BinlogSource.poll(brokers)(_.earliest()))
 
   override def deserializeOffset(json: String): Offset = BinlogOffset.parse(json)
 
@@ -169,7 +182,8 @@ private[binlog] final class BinlogMicroBatchStream(
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[BinlogOffset].offs
-    val headRaw = if (availableNowTarget != null) availableNowTarget else merged(_.latest())
+    val headRaw =
+      if (availableNowTarget != null) availableNowTarget else BinlogSource.poll(brokers)(_.latest())
     // A restart may bring a start vector shorter than the server's current
     // partition count only if the server changed shape — refuse loudly.
     require(headRaw.length == from.length,
@@ -177,7 +191,7 @@ private[binlog] final class BinlogMicroBatchStream(
     // Fail-fast data-loss check (Kafka's failOnDataLoss=true): a checkpoint
     // below the log-start means retention ran past the consumer — silently
     // skipping ahead would drop committed-but-unapplied changes.
-    val earliestNow = merged(_.earliest())
+    val earliestNow = BinlogSource.poll(brokers)(_.earliest())
     from.indices.foreach { p =>
       if (from(p) < earliestNow(p))
         throw new IllegalStateException(
@@ -213,17 +227,12 @@ private[binlog] final class BinlogMicroBatchStream(
   }
 
   override def reportLatestOffset(): Offset =
-    BinlogOffset(if (availableNowTarget != null) availableNowTarget else merged(_.latest()))
+    BinlogOffset(if (availableNowTarget != null) availableNowTarget
+      else BinlogSource.poll(brokers)(_.latest()))
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[BinlogOffset].offs
-    val e = end.asInstanceOf[BinlogOffset].offs
-    s.indices.collect {
-      case p if e(p) > s(p) =>
-        val (h, pt) = brokers(p % brokers.size) // owner routing, loader rule
-        BinlogInputPartition(h, pt, p, s(p), e(p))
-    }.toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    BinlogSource.partitions(brokers, start.asInstanceOf[BinlogOffset].offs,
+      end.asInstanceOf[BinlogOffset].offs)
 
   override def createReaderFactory(): PartitionReaderFactory = BinlogReaderFactory
 
@@ -233,19 +242,9 @@ private[binlog] final class BinlogMicroBatchStream(
 
 /** Bounded (batch) read: snapshot of [earliest, latest) at scan time. */
 private[binlog] final class BinlogBatch(brokers: Seq[(String, Int)]) extends Batch {
-  override def planInputPartitions(): Array[InputPartition] = {
-    def merged(f: BinlogClient => Array[Long]): Array[Long] =
-      brokers.map { case (h, p) =>
-        val c = new BinlogClient(h, p)
-        try f(c) finally c.close()
-      }.reduce((a, b) => a.zip(b).map { case (x, y) => math.max(x, y) })
-    val (start, head) = (merged(_.earliest()), merged(_.latest()))
-    head.indices.collect {
-      case p if head(p) > start(p) =>
-        val (h, pt) = brokers(p % brokers.size)
-        BinlogInputPartition(h, pt, p, start(p), head(p))
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    BinlogSource.partitions(brokers, BinlogSource.poll(brokers)(_.earliest()),
+      BinlogSource.poll(brokers)(_.latest()))
   override def createReaderFactory(): PartitionReaderFactory = BinlogReaderFactory
 }
 

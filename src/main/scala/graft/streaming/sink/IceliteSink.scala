@@ -3,7 +3,7 @@ package graft.streaming.sink
 import org.apache.spark.sql.{DataFrame, Dataset, GraftStreamingBridge, Row, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
@@ -27,20 +27,29 @@ import graft.icelite.IceliteTable
   *     .option("retainSnapshots", 40)
   *     .option("vacuumAfterExpire", true)
   *     .option("statsCols", "lang")         // column-stats file skipping
+  *     .option("dlqDir", dlq)               // quarantine for rejected rows
+  *     .option("branch", "lane")            // commit to a branch, not main
   *     .start()
   * }}}
+  *
+  * This is the one streaming ingest path: file tails, the `cdc-binlog`
+  * source (through [[graft.streaming.CdcStream.binlogEvents]]) and the
+  * `icelite-feed` source all end here.
   *
   * Exactly-once needs NO sink-side bookkeeping beyond the engine's own:
   * the checkpointed micro-batch id IS the commit epoch, and `applyBatch`
   * is idempotent per epoch (a replayed batch after a crash between sink
-  * write and checkpoint advance is skipped by the epoch ledger — the same
-  * contract the foreachBatch recipe in [[graft.streaming.CdcStream]]
-  * proves, now without the boilerplate). The sink keeps one engine across
-  * batches, so the engine's maintenance state (the chain-length count that
-  * paces retention) carries over; each batch checks the table's current
-  * bucket layout and rebuilds the engine only when a `rebucket` changed
-  * it. Maintenance (`rebucket`, compaction, expiry — e.g. via
-  * `CALL ice.system.*`) can run concurrently with the stream; a CAS
+  * write and checkpoint advance is skipped by the epoch ledger). With
+  * `branch` set every batch commits to that existing branch through
+  * `applyBatchToBranch` (a streaming quarantine lane: main and its feeds
+  * see nothing until `publishBranch`), exactly-once per ref. The engine
+  * pins each batch while it applies it, so the source is read once, and
+  * quarantines rejected rows under `dlqDir`. The sink keeps one engine
+  * across batches, so the engine's maintenance state (the chain-length
+  * count that paces retention) carries over; each batch checks the
+  * table's current bucket layout and rebuilds the engine only when a
+  * `rebucket` changed it. Maintenance (`rebucket`, compaction, expiry —
+  * e.g. via `CALL ice.system.*`) can run concurrently with the stream; a CAS
   * conflict on a genuinely racing commit fails the batch and Spark's retry
   * replays it onto the new head.
   *
@@ -85,6 +94,7 @@ class IceliteSink(sqlContext: SQLContext, params: Map[String, String]) extends S
   }
 
   private val table = IceliteTable.load(root)
+  private val branch = params.get("branch")
   private var engine: Option[CdcEngine] = None
 
   override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
@@ -94,8 +104,23 @@ class IceliteSink(sqlContext: SQLContext, params: Map[String, String]) extends S
     val e = engine.filter(_.conf.buckets == table.currentBuckets).getOrElse(
       new CdcEngine(sqlContext.sparkSession, table, EngineConf.fromOptions(table, params)))
     engine = Some(e)
-    e.applyBatch(batchId, batch)
+    branch match {
+      case Some(n) => e.applyBatchToBranch(batchId, batch, n)
+      case None => e.applyBatch(batchId, batch)
+    }
   }
 
   override def toString: String = s"IceliteSink[$root]"
+}
+
+object IceliteSink {
+  /** Stream `stream` into the table at `root` through this sink,
+    * checkpointed at `ckpt`, until the source has nothing more
+    * (Trigger.AvailableNow, which keeps the source's admission control);
+    * `options` are the sink's. Returns once the query has stopped. */
+  def drain(stream: DataFrame, root: String, ckpt: String,
+      options: Map[String, String] = Map.empty): Unit =
+    stream.writeStream.format("icelite").option("path", root)
+      .option("checkpointLocation", ckpt).options(options)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
 }

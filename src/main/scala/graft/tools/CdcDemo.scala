@@ -2,14 +2,16 @@ package graft.tools
 
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
+import graft.model.ChangeEvent
 import graft.streaming.CdcStream
+import graft.streaming.sink.IceliteSink.drain
 import graft.synth.Synth
 
 /** End-to-end demo/smoke driver for the CDC engine: generates a change
-  * stream as parquet files, tails it with Structured Streaming into an
-  * icelite table, prints the resulting state, then delivers MORE files —
-  * including a full re-delivery of old ones — and resumes from checkpoint,
-  * demonstrating exactly-once + incremental merge.
+  * stream as parquet files, tails it with Structured Streaming through the
+  * `icelite` sink into an icelite table, prints the resulting state, then
+  * delivers MORE files — including a full re-delivery of old ones — and
+  * resumes from checkpoint, demonstrating exactly-once + incremental merge.
   *
   * Run: sbt "runMain graft.tools.CdcDemo [workDir]"
   */
@@ -31,6 +33,12 @@ object CdcDemo {
     // can show manifest-level file skipping on this very table
     val engine = new CdcEngine(spark, table,
       EngineConf(buckets = table.currentBuckets, statsCols = Seq("lang")))
+    // the stream feeds the same table with the same settings
+    def tail(maxFilesPerTrigger: Int = 0): Unit = {
+      val r = spark.readStream.schema(ChangeEvent.schema)
+      drain((if (maxFilesPerTrigger > 0) r.option("maxFilesPerTrigger", maxFilesPerTrigger)
+        else r).parquet(input), tableDir, ckpt, Map("statsCols" -> "lang"))
+    }
 
     println(s"== work dir: $work")
     if (resumed) {
@@ -42,10 +50,10 @@ object CdcDemo {
         s"buckets=${table.currentBuckets} rows=$preRows")
       Synth.events(spark, 20000, seed = 7, repos = 50, hotPct = 40)
         .coalesce(1).write.mode("append").parquet(input)
-      CdcStream.runAvailableNow(spark, engine, input, ckpt)
+      tail()
       val postRows = engine.currentState().count()
       val snapAfter = table.currentSnapshotId
-      CdcStream.runAvailableNow(spark, engine, input, ckpt)
+      tail()
       println(s"== redelivery probe: rows $preRows -> $postRows " +
         (if (postRows == preRows) "(unchanged, LWW absorbed the replay)" else "(BUG!)") +
         s"; no-input re-run: snapshot $snapAfter -> ${table.currentSnapshotId}" +
@@ -58,7 +66,7 @@ object CdcDemo {
     val ev = Synth.events(spark, 20000, seed = 7, repos = 50, hotPct = 40)
     ev.filter("commit_lsn < 10000").coalesce(1).write.mode("append").parquet(input)
     ev.filter("commit_lsn >= 10000").coalesce(1).write.mode("append").parquet(input)
-    CdcStream.runAvailableNow(spark, engine, input, ckpt, maxFilesPerTrigger = 1)
+    tail(maxFilesPerTrigger = 1)
     val s1 = engine.currentState()
     println(s"== after wave 1: snapshot=${table.currentSnapshotId} rows=${s1.count()}")
     s1.orderBy("repo", "path").show(5, truncate = false)
@@ -66,13 +74,13 @@ object CdcDemo {
     // wave 2: 5k more events (later LSNs) + resume
     Synth.events(spark, 25000, seed = 7, repos = 50, hotPct = 40)
       .filter("commit_lsn >= 20000").coalesce(1).write.mode("append").parquet(input)
-    CdcStream.runAvailableNow(spark, engine, input, ckpt)
+    tail()
     val s2 = engine.currentState()
     println(s"== after wave 2: snapshot=${table.currentSnapshotId} rows=${s2.count()}")
 
     // re-run with NO new input: must be a no-op (no new snapshot)
     val before = table.currentSnapshotId
-    CdcStream.runAvailableNow(spark, engine, input, ckpt)
+    tail()
     println(s"== idempotent re-run: snapshot ${before} -> ${table.currentSnapshotId}" +
       (if (before == table.currentSnapshotId) " (no-op, exactly-once holds)" else " (BUG!)"))
 
@@ -149,7 +157,7 @@ object CdcDemo {
     // a sparse late wave touches few keys; the refresh reads only those
     Synth.events(spark, 26000, seed = 7, repos = 50, hotPct = 40)
       .filter("commit_lsn >= 25000").coalesce(1).write.mode("append").parquet(input)
-    CdcStream.runAvailableNow(spark, engine, input, ckpt)
+    tail()
     val touched = iv.refresh()
     def canonView(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
@@ -252,12 +260,12 @@ object CdcDemo {
 
         val netT = IceliteTable.create(s"$work/nettable", Seq("repo", "path"), 16)
         val netE = new CdcEngine(spark, netT, EngineConf(buckets = 16))
-        CdcStream.runBinlogAvailableNow(spark, netE, server.address, server.port,
-          s"$work/netckpt", maxRecordsPerTrigger = 3000)
+        drain(CdcStream.binlogEvents(spark, server.address, server.port,
+          maxRecordsPerTrigger = 3000), netT.root.toString, s"$work/netckpt")
         val netRows = netE.currentState().count()
         val (snapB, servedB) = (netT.currentSnapshotId, server.recordsServed)
-        CdcStream.runBinlogAvailableNow(spark, netE, server.address, server.port,
-          s"$work/netckpt")
+        drain(CdcStream.binlogEvents(spark, server.address, server.port),
+          netT.root.toString, s"$work/netckpt")
         val netExactlyOnce = netT.currentSnapshotId == snapB &&
           server.recordsServed == servedB
 
@@ -266,8 +274,8 @@ object CdcDemo {
         val net2 = new CdcEngine(spark,
           IceliteTable.create(s"$work/nettable2", Seq("repo", "path"), 16),
           EngineConf(buckets = 16))
-        CdcStream.runBinlogAvailableNow(spark, net2, server.address, server.port,
-          s"$work/netckpt2")
+        drain(CdcStream.binlogEvents(spark, server.address, server.port),
+          net2.table.root.toString, s"$work/netckpt2")
         val replayEqual = net2.currentState().count() == netRows
         println(s"== network source: tailed ${rows.length} events over TCP -> " +
           s"$netRows rows; no-input re-run " +
@@ -425,20 +433,14 @@ object CdcDemo {
       val sinkIn = s"$work/sink-in"; val sinkT = s"$work/sink-t"
       Synth.events(spark, 2000, seed = 77).coalesce(2)
         .write.mode("overwrite").parquet(sinkIn)
-      def drain(): Unit = {
-        val q = spark.readStream.schema(graft.model.ChangeEvent.schema).parquet(sinkIn)
-          .writeStream.format("icelite").option("path", sinkT)
-          .option("keyCols", "repo,path").option("buckets", "16")
-          .option("checkpointLocation", s"$work/sink-ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      drain()
+      def sink(): Unit = drain(spark.readStream.schema(ChangeEvent.schema).parquet(sinkIn),
+        sinkT, s"$work/sink-ckpt", Map("keyCols" -> "repo,path", "buckets" -> "16"))
+      sink()
       val t = IceliteTable.load(sinkT)
       val rows = new CdcEngine(spark, t, EngineConf(buckets = t.currentBuckets))
         .currentState().count()
       val snapBefore = t.currentSnapshotId
-      drain()
+      sink()
       println(s"== streaming sink: format(\"icelite\") created the table and merged " +
         s"2000 events -> $rows visible rows; idle re-run committed " +
         s"${t.currentSnapshotId - snapBefore} snapshots " +
@@ -450,17 +452,17 @@ object CdcDemo {
     // new commits must deliver nothing (exactly-once at the source side).
     locally {
       val feedOut = s"$work/feedstream-out"; val feedCkpt = s"$work/feedstream-ckpt"
-      def drain(): Unit = {
+      def drainFeed(): Unit = {
         val q = spark.readStream.format("icelite-feed")
           .option("path", engine32.table.root.toString).load()
           .writeStream.format("parquet").option("path", feedOut)
           .option("checkpointLocation", feedCkpt).start()
         try q.processAllAvailable() finally q.stop()
       }
-      drain()
+      drainFeed()
       val bootstrap = spark.read.parquet(feedOut).count()
       val expected = engine32.changesSince(-1L).count()
-      drain()
+      drainFeed()
       val after = spark.read.parquet(feedOut).count()
       println(s"== feed stream: bootstrap drained $bootstrap change rows " +
         (if (bootstrap == expected) "(= the full visible feed)" else "(MISMATCH — BUG!)") +

@@ -1,5 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.storage.StorageLevel
+
 /** The one internal hook the V1 streaming Source contract needs: a batch
   * DataFrame handed back from `Source.getBatch` must carry
   * `isStreaming = true` (MicroBatchExecution asserts it), and the only way
@@ -24,5 +28,16 @@ object GraftStreamingBridge {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
+  }
+
+  /** The same wrap over `df`'s rows persisted as the first job over them
+    * computes them: a batch frame whose later actions read the kept rows,
+    * plus the persisted RDD, for the caller to unpersist. Unlike
+    * `Dataset.persist` it builds no columnar cache, which adaptive
+    * execution materializes in a job of its own. */
+  def pinRows(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val rows = df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    (spark.internalCreateDataFrame(rows, df.schema, isStreaming = false), rows)
   }
 }

@@ -5,20 +5,32 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
+import graft.model.ChangeEvent
 import graft.streaming.CdcStream
 import graft.streaming.binlog.{BinlogClient, BinlogServer}
 import graft.synth.Synth
 
 /** The network (Kafka-shaped) source end-to-end: a [[BinlogServer]] on
   * loopback TCP, tailed through the `cdc-binlog` DataSource V2
-  * MicroBatchStream into the engine's MERGE. Every record crosses a real
-  * socket; the server counts records served, so the specs can assert each
-  * offset range was fetched exactly once (replayable source + checkpointed
-  * offsets + idempotent sink = exactly-once, measured, not argued). */
+  * MicroBatchStream and `CdcStream.binlogEvents` into the `icelite` sink.
+  * Every record crosses a real socket; the server counts records served,
+  * so the specs can assert each offset range was fetched exactly once
+  * (replayable source + checkpointed offsets + idempotent sink that pins
+  * its batch = exactly-once, measured, not argued). */
 class BinlogSourceSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
   private val PARTS = 3
+
+  /** Drain `server` through the sink into the table at `root`. */
+  private def tail(server: BinlogServer, root: String, ckpt: String,
+      maxRecordsPerTrigger: Long = 0L, options: Map[String, String] = Map.empty): Unit =
+    SparkTestBase.runSink(
+      CdcStream.binlogEvents(spark, server.address, server.port, maxRecordsPerTrigger),
+      ckpt, root, options)
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
 
   /** Publish events to the server partitioned by key hash (a producer's
     * partitioner), in (commit_lsn, seq) order within the publishing loop. */
@@ -51,8 +63,7 @@ class BinlogSourceSpec extends AnyFunSuite {
 
       // Admission control: 700 records/trigger over 2000 published -> >= 3
       // micro-batches, each its own epoch-keyed snapshot commit.
-      CdcStream.runBinlogAvailableNow(spark, engine, server.address, server.port,
-        s"$work/ckpt", maxRecordsPerTrigger = 700)
+      tail(server, table.root.toString, s"$work/ckpt", maxRecordsPerTrigger = 700)
       assert(table.currentSnapshotId >= 2, "admission control should split the drain")
       assert(server.recordsServed === w1.size.toLong,
         "each wave-1 record must cross the wire exactly once")
@@ -60,7 +71,7 @@ class BinlogSourceSpec extends AnyFunSuite {
       // Publish the delta; resume from the same checkpoint: the source must
       // fetch ONLY the new offsets (recordsServed grows by exactly |w2|).
       publish(server, w2)
-      CdcStream.runBinlogAvailableNow(spark, engine, server.address, server.port, s"$work/ckpt")
+      tail(server, table.root.toString, s"$work/ckpt")
       assert(server.recordsServed === all.size.toLong,
         "resume must fetch only the published delta")
 
@@ -82,7 +93,7 @@ class BinlogSourceSpec extends AnyFunSuite {
 
       // Clean re-run with no new input: no fetch, no snapshot.
       val (snapBefore, servedBefore) = (table.currentSnapshotId, server.recordsServed)
-      CdcStream.runBinlogAvailableNow(spark, engine, server.address, server.port, s"$work/ckpt")
+      tail(server, table.root.toString, s"$work/ckpt")
       assert(table.currentSnapshotId === snapBefore, "empty re-run must not commit")
       assert(server.recordsServed === servedBefore, "empty re-run must not fetch")
     } finally server.stop()
@@ -134,29 +145,28 @@ class BinlogSourceSpec extends AnyFunSuite {
       server.append(0, "this is not json {")
       server.append(0, ev(1))
       val table = IceliteTable.create(s"$work/t", Seq("repo", "path"), 8)
-      val engine = new CdcEngine(spark, table,
-        EngineConf(buckets = 8, dlqDir = s"$work/dlq"))
-      CdcStream.runBinlogAvailableNow(spark, engine, server.address, server.port,
-        s"$work/ckpt")
-      // the parsed rows merged; the garbage landed in wire-epoch quarantine
-      // with partition, offset, and the raw payload for replay-after-fix
-      assert(engine.currentState().count() === 2)
-      val wire = spark.read.parquet(s"${work}/dlq/wire-epoch=0")
-      val r = wire.collect()
+      val engine = new CdcEngine(spark, table, EngineConf(buckets = 8))
+      tail(server, table.root.toString, s"$work/ckpt",
+        options = Map("dlqDir" -> s"$work/dlq"))
+      // the parsed rows merged; the garbage landed in the engine's epoch
+      // quarantine with partition, offset, and the raw text for
+      // replay-after-fix; source metadata is never payload
+      val state = engine.currentState()
+      assert(state.count() === 2)
+      assert(!state.columns.exists(_.startsWith(ChangeEvent.SourcePrefix)),
+        s"source metadata stored as payload: ${state.columns.mkString(", ")}")
+      val r = spark.read.parquet(s"$work/dlq/epoch=0").collect()
       assert(r.length === 1)
       val row = r.head
-      assert(row.getAs[Int]("partition") === 0)
-      assert(row.getAs[Long]("offset") === 1L)
-      assert(row.getAs[String]("payload") === "this is not json {")
+      assert(row.getAs[Int]("__src_partition") === 0)
+      assert(row.getAs[Long]("__src_offset") === 1L)
+      assert(row.getAs[String](ChangeEvent.RawCol) === "this is not json {")
       assert(row.getAs[String]("_reason") === "unparseable")
       // redelivery from a fresh checkpoint overwrites idempotently
-      val e2 = new CdcEngine(spark,
-        IceliteTable.create(s"$work/t2", Seq("repo", "path"), 8),
-        EngineConf(buckets = 8, dlqDir = s"$work/dlq2"))
-      CdcStream.runBinlogAvailableNow(spark, e2, server.address, server.port,
-        s"$work/ckpt2")
-      assert(spark.read.parquet(s"$work/dlq2/wire-epoch=0").count() === 1)
-      assert(e2.currentState().count() === 2)
+      val t2 = IceliteTable.create(s"$work/t2", Seq("repo", "path"), 8)
+      tail(server, t2.root.toString, s"$work/ckpt2", options = Map("dlqDir" -> s"$work/dlq2"))
+      assert(spark.read.parquet(s"$work/dlq2/epoch=0").count() === 1)
+      assert(new CdcEngine(spark, t2, EngineConf(buckets = 8)).currentState().count() === 2)
     } finally server.stop()
   }
 
@@ -265,7 +275,7 @@ class BinlogSourceSpec extends AnyFunSuite {
       def drain(dir: String): Map[(String, String), (Long, String)] = {
         val t = IceliteTable.create(s"$dir/t", Seq("repo", "path"), 8)
         val e = new CdcEngine(spark, t, EngineConf(buckets = 8))
-        CdcStream.runBinlogAvailableNow(spark, e, server.address, server.port, s"$dir/ckpt")
+        tail(server, t.root.toString, s"$dir/ckpt")
         e.currentState().collect().map { r =>
           (r.getString(r.fieldIndex("repo")), r.getString(r.fieldIndex("path"))) ->
             (r.getLong(r.fieldIndex("_lsn")),
@@ -296,22 +306,21 @@ class BinlogSourceSpec extends AnyFunSuite {
       // Drain wave 1, then retention truncates a prefix of every partition.
       val table = IceliteTable.create(s"$work/t", Seq("repo", "path"), 8)
       val engine = new CdcEngine(spark, table, EngineConf(buckets = 8))
-      CdcStream.runBinlogAvailableNow(spark, engine, server.address, server.port, s"$work/ckpt")
+      tail(server, table.root.toString, s"$work/ckpt")
       val applied = engine.currentState().count()
       (0 until PARTS).foreach(p => server.truncate(p, server.latest(p) / 2))
 
       // The consumer's checkpoint is AT the high-water mark (>= log-start),
       // so resume after publishing more is unaffected by the truncation.
       publish(server, all.drop(800))
-      CdcStream.runBinlogAvailableNow(spark, engine, server.address, server.port, s"$work/ckpt")
+      tail(server, table.root.toString, s"$work/ckpt")
       assert(engine.currentState().count() >= applied)
 
       // A FRESH stream must start at earliest (not 0): it drains without an
       // out-of-range fetch and sees only the retained suffix.
       val t2 = IceliteTable.create(s"$work/t2", Seq("repo", "path"), 8)
-      val e2 = new CdcEngine(spark, t2, EngineConf(buckets = 8))
       val servedBefore = server.recordsServed
-      CdcStream.runBinlogAvailableNow(spark, e2, server.address, server.port, s"$work/ckpt2")
+      tail(server, t2.root.toString, s"$work/ckpt2")
       val retained = (0 until PARTS).map(p => server.latest(p) - server.earliest(p)).sum
       assert(server.recordsServed - servedBefore === retained,
         "fresh stream must fetch exactly the retained records")
@@ -321,10 +330,8 @@ class BinlogSourceSpec extends AnyFunSuite {
       publish(server, all.take(10)) // ensure there is new input to trigger a batch
       (0 until PARTS).foreach(p => server.truncate(p, server.latest(p)))
       val err = intercept[Exception] {
-        CdcStream.runBinlogAvailableNow(spark, e2, server.address, server.port, s"$work/ckpt2")
+        tail(server, t2.root.toString, s"$work/ckpt2")
       }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
       assert(messages(err).exists(_.contains("data loss")), s"got: ${messages(err)}")
     } finally server.stop()
   }
@@ -369,17 +376,16 @@ class BinlogSourceSpec extends AnyFunSuite {
       val work = SparkTestBase.tmpDir("binlog-shard")
       val t = IceliteTable.create(s"$work/t", Seq("repo", "path"), 8)
       val engine = new CdcEngine(spark, t, EngineConf(buckets = 8))
-      CdcStream.runBinlogAvailableNowBrokers(spark, engine,
-        s"${shard0.address}:${shard0.port},${shard1.address}:${shard1.port}",
-        s"$work/ckpt")
+      SparkTestBase.runSink(CdcStream.shardedBinlogEvents(spark,
+        s"${shard0.address}:${shard0.port},${shard1.address}:${shard1.port}"),
+        s"$work/ckpt", t.root.toString)
       // oracle: single unsharded server, fresh table
       val single = new BinlogServer(PARTS)
       try {
         all.foreach { case (p, j) => single.append(p, j) }
         val t2 = IceliteTable.create(s"$work/t2", Seq("repo", "path"), 8)
         val e2 = new CdcEngine(spark, t2, EngineConf(buckets = 8))
-        CdcStream.runBinlogAvailableNow(spark, e2, single.address, single.port,
-          s"$work/ckpt2")
+        tail(single, t2.root.toString, s"$work/ckpt2")
         val cols = Seq("repo", "path", "commit", "lang", "content", "_lsn")
         val a = engine.currentState().selectExpr(cols: _*)
         val b = e2.currentState().selectExpr(cols: _*)
@@ -390,5 +396,28 @@ class BinlogSourceSpec extends AnyFunSuite {
         assert(shard0.recordsServed > 0 && shard1.recordsServed > 0)
       } finally single.stop()
     } finally { shard0.stop(); shard1.stop() }
+  }
+
+  test("brokers that disagree on the partition count fail loudly, batch and stream alike") {
+    val work = SparkTestBase.tmpDir("binlog-shape")
+    val two = new BinlogServer(2)
+    val three = new BinlogServer(3)
+    try {
+      (0 until 2).foreach(p => two.append(p, s"two-$p"))
+      (0 until 3).foreach(p => three.append(p, s"three-$p"))
+      val brokers = s"${two.address}:${two.port},${three.address}:${three.port}"
+      // a merged offset vector would silently lose the third partition
+      val batch = intercept[Exception] {
+        spark.read.format("cdc-binlog").option("brokers", brokers).load().count()
+      }
+      assert(messages(batch).exists(_.contains("disagree on partition count")),
+        s"got: ${messages(batch)}")
+      val stream = intercept[Exception] {
+        SparkTestBase.runSink(CdcStream.shardedBinlogEvents(spark, brokers),
+          s"$work/ckpt", s"$work/t", Map("keyCols" -> "repo,path", "buckets" -> "4"))
+      }
+      assert(messages(stream).exists(_.contains("disagree on partition count")),
+        s"got: ${messages(stream)}")
+    } finally { two.stop(); three.stop() }
   }
 }

@@ -236,7 +236,7 @@ class BranchSpec extends AnyFunSuite {
     assert(feedSet(engine.changesSince(fork)) === preview)
   }
 
-  test("streaming quarantine lane: CdcStream tails into a branch, exactly-once per ref") {
+  test("streaming quarantine lane: the sink tails into a branch, exactly-once per ref") {
     val work = SparkTestBase.tmpDir("streambranch")
     val input = s"$work/in"
     val ev = Synth.events(spark, N, seed = 99)
@@ -254,13 +254,15 @@ class BranchSpec extends AnyFunSuite {
     rest.filter(s"commit_lsn >= ${3 * N / 4}").coalesce(1).write.mode("append").parquet(input)
 
     val mainBefore = engine.table.currentSnapshotId
-    graft.streaming.CdcStream.runAvailableNow(spark, engine, input, s"$work/ckpt",
-      maxFilesPerTrigger = 1, branch = Some("lane"))
+    val root = engine.table.root.toString
+    val lane = Map("branch" -> "lane")
+    SparkTestBase.runSink(SparkTestBase.fileTail(input, 1), s"$work/ckpt", root, lane)
     assert(engine.table.currentSnapshotId === mainBefore, "main moved during lane streaming")
+    assert(engine.table.branchEpochs("lane") === Set(0L, 1L, 100L),
+      "each micro-batch is one lane commit")
     // restart with no new input: per-ref exactly-once, no new lane commits
     val laneBefore = engine.table.branchHead("lane")
-    graft.streaming.CdcStream.runAvailableNow(spark, engine, input, s"$work/ckpt",
-      branch = Some("lane"))
+    SparkTestBase.runSink(SparkTestBase.fileTail(input), s"$work/ckpt", root, lane)
     assert(engine.table.branchHead("lane") === laneBefore)
 
     engine.publishBranch("lane")

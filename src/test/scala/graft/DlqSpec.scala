@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
+import graft.model.ChangeEvent
 import graft.synth.Synth
 
 /** Dead-letter quarantine: malformed change events (null key/op/lsn/seq)
@@ -47,6 +48,27 @@ class DlqSpec extends AnyFunSuite {
       "null_key" -> 10L, "null_op" -> 10L, "null_lsn" -> 10L, "null_seq" -> 10L))
     // quarantined rows keep their full original payload for replay-after-fix
     assert(q.columns.toSet === bad.columns.toSet + "_reason")
+  }
+
+  test("__src_* columns are source metadata: never payload, kept on quarantined rows") {
+    val dlq = SparkTestBase.tmpDir("dlqsrc") + "/q"
+    val engine = newEngine(dlq)
+    // every row carries a source coordinate; ids 0-4 stand for records
+    // that did not parse: their text is set and their envelope is null
+    val ev = Synth.events(spark, 300, seed = 34)
+      .withColumn("__src_offset", col("commit_lsn"))
+      .withColumn(ChangeEvent.RawCol, when(col("commit_lsn") < 5, lit("{garbage")))
+      .withColumn("repo", when(col("commit_lsn") < 5, lit(null: String)).otherwise(col("repo")))
+    val r = engine.applyBatch(0, ev)
+    assert(r.rejected === 5L && r.events === 295L)
+    assert(!engine.currentState().columns.exists(_.startsWith(ChangeEvent.SourcePrefix)))
+    val q = spark.read.parquet(s"$dlq/epoch=0")
+    // `unparseable` is checked before `null_key`
+    assert(q.groupBy(col("_reason")).count().collect().map(x => x.getString(0) -> x.getLong(1))
+      .toMap === Map("unparseable" -> 5L))
+    assert(q.columns.toSet === ev.columns.toSet + "_reason")
+    assert(q.filter(col(ChangeEvent.RawCol) === "{garbage" && col("__src_offset") < 5)
+      .count() === 5L)
   }
 
   test("clean batch pays no quarantine write at all; disabled DLQ writes nothing") {

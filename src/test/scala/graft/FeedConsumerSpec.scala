@@ -151,6 +151,7 @@ class FeedConsumerSpec extends AnyFunSuite {
   }
 
   test("streaming pipeline: file tail -> MERGE -> feed -> mirror, per trigger") {
+    import SparkTestBase.{fileTail, runSink}
     val dir = SparkTestBase.tmpDir("streammirror")
     val input = s"$dir/in"
     val ev = Synth.events(spark, 2000, seed = 34, repos = 20, pathsPerRepo = 50)
@@ -160,16 +161,27 @@ class FeedConsumerSpec extends AnyFunSuite {
       IceliteTable.create(s"$dir/src", Seq("repo", "path"), 8), EngineConf(buckets = 8))
     val mir = new CdcEngine(spark,
       IceliteTable.create(s"$dir/mirror", Seq("repo", "path"), 8), EngineConf(buckets = 8))
-    val consumer = new FeedConsumer(src, mir)
-    graft.streaming.CdcStream.runAvailableNow(spark, src, input, s"$dir/ckpt",
-      maxFilesPerTrigger = 1, mirror = Some(consumer))
+    // the chain: file tail -> icelite sink (src); then src's change feed,
+    // one source snapshot per trigger, stamped with its window end as the
+    // LWW order -> icelite sink (mirror). The feed pins src's schema when
+    // it is built, so it is built once src has a snapshot.
+    def feed = spark.readStream.format("icelite-feed")
+      .option("path", s"$dir/src").option("stampWindowEnd", true)
+      .option("maxSnapshotsPerTrigger", 1).load()
+      .select(col("repo"), col("path"), col("commit"), col("lang"), col("content"),
+        col("_op").as("op"), col("_window_end").as("commit_lsn"),
+        lit(0).as("seq"), col("_ts").as("ts"))
+    def pipeline(): Unit = {
+      runSink(fileTail(input, 1), s"$dir/ckpt", s"$dir/src")
+      runSink(feed, s"$dir/feed-ckpt", s"$dir/mirror", availableNow = false)
+    }
+    pipeline()
     assertMirrored(src, mir)
-    // the mirror advanced once per micro-batch, not once at the end
+    // the mirror advanced once per source snapshot, not once at the end
     assert(mir.table.snapshotChain.count(_.batchEpoch >= 0) >= 2)
     // empty re-run: neither table moves (exactly-once through the chain)
     val (s0, m0) = (src.table.currentSnapshotId, mir.table.currentSnapshotId)
-    graft.streaming.CdcStream.runAvailableNow(spark, src, input, s"$dir/ckpt",
-      mirror = Some(consumer))
+    pipeline()
     assert(src.table.currentSnapshotId === s0 && mir.table.currentSnapshotId === m0)
   }
 

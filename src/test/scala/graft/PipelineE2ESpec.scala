@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, hash, lit, pmod, struct, to_json}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,8 +12,8 @@ import graft.synth.Synth
 /** The COMPLETE production topology in one spec, every link a real
   * Structured Streaming query over a real transport:
   *
-  *   TCP binlog --(`cdc-binlog` DSv2 stream)--> MERGE engine (lake table)
-  *     --(`icelite-feed` stream)--> foreachBatch MERGE --> mirror table
+  *   TCP binlog --(`cdc-binlog` DSv2 stream)--> icelite sink (lake table)
+  *     --(`icelite-feed` stream)--> icelite sink --> mirror table
   *
   * i.e. wire -> lake -> downstream, each stage checkpointed and idempotent,
   * run twice (bootstrap + incremental wave) with the mirror held equal to
@@ -49,24 +48,17 @@ class PipelineE2ESpec extends AnyFunSuite {
       val mirror = new CdcEngine(spark,
         IceliteTable.create(s"$work/mirror", Seq("repo", "path"), 8), EngineConf(buckets = 8))
 
-      def ingest(): Unit = CdcStream.runBinlogAvailableNow(
-        spark, lake, server.address, server.port, s"$work/ingest-ckpt")
-      def replicate(): Unit = {
-        val q = spark.readStream.format("icelite-feed")
-          .option("path", s"$work/lake").load()
-          .writeStream.option("checkpointLocation", s"$work/feed-ckpt")
-          .foreachBatch { (df: DataFrame, id: Long) =>
-            val envelope = Set("_op", "_lsn", "_seq", "_ts", "content_sha256")
-            val payload = df.columns.filterNot(c =>
-              envelope.contains(c) || c == "repo" || c == "path")
-            mirror.applyBatch(id, df.select(
-              Seq(col("repo"), col("path")) ++ payload.map(col) ++ Seq(
-                col("_op").as("op"), lit(id).as("commit_lsn"),
-                lit(0).as("seq"), col("_ts").as("ts")): _*))
-            ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      def ingest(): Unit = SparkTestBase.runSink(
+        CdcStream.binlogEvents(spark, server.address, server.port),
+        s"$work/ingest-ckpt", s"$work/lake")
+      // the window-end snapshot id is the mirror MERGE's LWW order
+      def replicate(): Unit = SparkTestBase.runSink(
+        spark.readStream.format("icelite-feed")
+          .option("path", s"$work/lake").option("stampWindowEnd", true).load()
+          .select(col("repo"), col("path"), col("commit"), col("lang"), col("content"),
+            col("_op").as("op"), col("_window_end").as("commit_lsn"),
+            lit(0).as("seq"), col("_ts").as("ts")),
+        s"$work/feed-ckpt", s"$work/mirror", availableNow = false)
 
       // wave 1: bootstrap both stages
       wave1.foreach { case (p, j) => server.append(p, j) }

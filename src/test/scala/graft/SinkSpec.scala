@@ -1,11 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
+import graft.SparkTestBase.{fileTail, runSink}
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
-import graft.model.ChangeEvent
 import graft.streaming.sink.IceliteSinkProvider
 import graft.synth.Synth
 
@@ -15,19 +15,6 @@ import graft.synth.Synth
   * and mid-stream maintenance adoption. */
 class SinkSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
-
-  private def runSink(input: String, ckpt: String, tableRoot: String,
-      extra: Map[String, String] = Map.empty, maxFilesPerTrigger: Int = 0): Unit = {
-    var reader = spark.readStream.schema(ChangeEvent.schema)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    var w = reader.parquet(input).writeStream.format("icelite")
-      .option("path", tableRoot).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-    extra.foreach { case (k, v) => w = w.option(k, v) }
-    val q = w.start()
-    q.awaitTermination()
-  }
 
   private def assertMatchesOracle(engine: CdcEngine,
       all: org.apache.spark.sql.DataFrame): Unit = {
@@ -54,8 +41,8 @@ class SinkSpec extends AnyFunSuite {
     ev.filter(s"commit_lsn >= ${N / 2}").coalesce(1).write.mode("append").parquet(input)
 
     // no table yet: keyCols creates it
-    runSink(input, ckpt, root,
-      Map("keyCols" -> "repo,path", "buckets" -> "8"), maxFilesPerTrigger = 1)
+    runSink(fileTail(input, 1), ckpt, root,
+      Map("keyCols" -> "repo,path", "buckets" -> "8"))
     val table = IceliteTable.load(root)
     assert(table.meta.keyCols === List("repo", "path"))
     assert(table.currentBuckets === 8)
@@ -63,7 +50,7 @@ class SinkSpec extends AnyFunSuite {
 
     // empty re-run from the same checkpoint: no new snapshot
     val before = table.currentSnapshotId
-    runSink(input, ckpt, root)
+    runSink(fileTail(input), ckpt, root)
     assert(table.currentSnapshotId === before, "exactly-once violated on empty re-run")
 
     // a replayed epoch (crash between sink write and checkpoint advance)
@@ -76,7 +63,7 @@ class SinkSpec extends AnyFunSuite {
     // wave 2 resumes from the checkpoint
     val all = Synth.events(spark, N + 1000, seed = 121, repos = 20, pathsPerRepo = 50)
     all.filter(s"commit_lsn >= $N").coalesce(1).write.mode("append").parquet(input)
-    runSink(input, ckpt, root)
+    runSink(fileTail(input), ckpt, root)
     assertMatchesOracle(engine, all)
   }
 
@@ -88,10 +75,9 @@ class SinkSpec extends AnyFunSuite {
     (0 until 3).foreach(i =>
       ev.filter(s"commit_lsn >= ${i * N / 3} and commit_lsn < ${(i + 1) * N / 3}")
         .coalesce(1).write.mode("append").parquet(input))
-    runSink(input, s"$work/ckpt", root,
+    runSink(fileTail(input, 1), s"$work/ckpt", root,
       Map("keyCols" -> "repo,path", "buckets" -> "4", "mergeOnRead" -> "true",
-        "morCompactThreshold" -> "2"),
-      maxFilesPerTrigger = 1)
+        "morCompactThreshold" -> "2"))
     val table = IceliteTable.load(root)
     assert(table.meta.mergeOnRead)
     // threshold 2 with 3 delta batches: every bucket stays under the pile cap
@@ -114,10 +100,9 @@ class SinkSpec extends AnyFunSuite {
     (0 until 5).foreach(i =>
       churn.filter(s"commit_lsn % 5 = $i").coalesce(1)
         .write.mode("append").parquet(input))
-    runSink(input, s"$work/ckpt", root,
+    runSink(fileTail(input, 1), s"$work/ckpt", root,
       Map("keyCols" -> "repo,path", "buckets" -> "4", "mergeOnRead" -> "true",
-        "morCompactThreshold" -> "2", "morMinorRatio" -> "0.5"),
-      maxFilesPerTrigger = 1)
+        "morCompactThreshold" -> "2", "morMinorRatio" -> "0.5"))
     val table = IceliteTable.load(root)
     val head = table.currentSnapshot.get
     val files = table.bucketFilesOf(head)
@@ -143,13 +128,13 @@ class SinkSpec extends AnyFunSuite {
     val N = 3000L
     val ev = Synth.events(spark, N, seed = 131, repos = 20, pathsPerRepo = 50)
     ev.filter(s"commit_lsn < ${N / 2}").coalesce(1).write.mode("append").parquet(input)
-    runSink(input, ckpt, root, Map("keyCols" -> "repo,path", "buckets" -> "4"))
+    runSink(fileTail(input), ckpt, root, Map("keyCols" -> "repo,path", "buckets" -> "4"))
     val table = IceliteTable.load(root)
     new CdcEngine(spark, table, EngineConf(buckets = 4)).rebucket(16)
     // wave 2 through the SAME checkpoint: the sink reloads the table per
     // batch and must adopt the evolved layout, not crash on it
     ev.filter(s"commit_lsn >= ${N / 2}").coalesce(1).write.mode("append").parquet(input)
-    runSink(input, ckpt, root)
+    runSink(fileTail(input), ckpt, root)
     val after = IceliteTable.load(root)
     assert(after.currentBuckets === 16)
     assertMatchesOracle(new CdcEngine(spark, after, EngineConf(buckets = 16)), ev)

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.model.ChangeEvent
+import graft.streaming.sink.IceliteSink
 
 /** One shared local SparkSession for the whole test JVM. */
 object SparkTestBase {
@@ -31,4 +34,30 @@ object SparkTestBase {
     created.synchronized(created += p)
     p.toString
   }
+
+  /** A file tail of change-event parquet under `input`, at most
+    * `maxFilesPerTrigger` files a micro-batch (0 = all available). */
+  def fileTail(input: String, maxFilesPerTrigger: Int = 0): DataFrame = {
+    val r = spark.readStream.schema(ChangeEvent.schema)
+    (if (maxFilesPerTrigger > 0) r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r)
+      .parquet(input)
+  }
+
+  /** The one way a spec drains a stream into a table: `stream` through
+    * `writeStream.format("icelite")` into the table at `root`,
+    * checkpointed at `ckpt`, with the sink's `options`, until the source
+    * has nothing more ([[IceliteSink.drain]], Trigger.AvailableNow).
+    * `availableNow = false` runs the default trigger until the query is
+    * idle instead, for the `icelite-feed` source: it does not implement
+    * AvailableNow, under which its per-trigger windows would collapse
+    * into one batch. */
+  def runSink(stream: DataFrame, ckpt: String, root: String,
+      options: Map[String, String] = Map.empty, availableNow: Boolean = true): Unit =
+    if (availableNow) IceliteSink.drain(stream, root, ckpt, options)
+    else {
+      val q = stream.writeStream.format("icelite")
+        .option("path", root).option("checkpointLocation", ckpt).options(options)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
 }

@@ -2,13 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestBase.{fileTail, runSink}
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
-import graft.streaming.CdcStream
 import graft.synth.Synth
 
-/** End-to-end Structured Streaming: file-source tail -> foreachBatch MERGE ->
-  * icelite, with checkpoint resume and exactly-once no-op re-runs. */
+/** End-to-end Structured Streaming: file-source tail -> icelite sink MERGE,
+  * with checkpoint resume and exactly-once no-op re-runs. */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -24,18 +24,18 @@ class StreamingSpec extends AnyFunSuite {
     ev.filter(s"commit_lsn >= ${N / 2}").coalesce(1).write.mode("append").parquet(input)
     val table = IceliteTable.create(s"$work/t", Seq("repo", "path"), 8)
     val engine = new CdcEngine(spark, table, EngineConf(buckets = 8))
-    CdcStream.runAvailableNow(spark, engine, input, ckpt, maxFilesPerTrigger = 1)
+    runSink(fileTail(input, 1), ckpt, table.root.toString)
     assert(table.currentSnapshotId >= 1) // at least two batch commits
 
     // no new input: stream restart must not produce a new snapshot
     val before = table.currentSnapshotId
-    CdcStream.runAvailableNow(spark, engine, input, ckpt)
+    runSink(fileTail(input), ckpt, table.root.toString)
     assert(table.currentSnapshotId === before, "exactly-once violated on empty re-run")
 
     // wave 2: later lsn range, resume from the same checkpoint
     Synth.events(spark, N + 1000, seed = 21, repos = 20, pathsPerRepo = 50)
       .filter(s"commit_lsn >= $N").coalesce(1).write.mode("append").parquet(input)
-    CdcStream.runAvailableNow(spark, engine, input, ckpt)
+    runSink(fileTail(input), ckpt, table.root.toString)
 
     val all = Synth.events(spark, N + 1000, seed = 21, repos = 20, pathsPerRepo = 50)
     val oracle = TestOracle.finalState(all.collect().toSeq, Seq("commit", "lang", "content"))
@@ -60,11 +60,11 @@ class StreamingSpec extends AnyFunSuite {
     ev.filter(s"commit_lsn >= ${N / 2}").coalesce(1).write.mode("append").parquet(input)
     val table = IceliteTable.create(s"$work/t", Seq("repo", "path"), 8, mergeOnRead = true)
     val engine = new CdcEngine(spark, table, EngineConf(buckets = 8))
-    CdcStream.runAvailableNow(spark, engine, input, s"$work/ckpt", maxFilesPerTrigger = 1)
+    runSink(fileTail(input, 1), s"$work/ckpt", table.root.toString)
     // two streamed batches appended deltas (no bucket rewrites)
     assert(table.bucketFilesOf(table.currentSnapshot.get).values.exists(_.size >= 2))
     val before = table.currentSnapshotId
-    CdcStream.runAvailableNow(spark, engine, input, s"$work/ckpt")
+    runSink(fileTail(input), s"$work/ckpt", table.root.toString)
     assert(table.currentSnapshotId === before, "exactly-once violated on empty re-run")
     val oracle = TestOracle.finalState(ev.collect().toSeq, Seq("commit", "lang", "content"))
     val got = engine.currentState().collect().map { r =>
