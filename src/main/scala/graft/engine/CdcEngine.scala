@@ -950,20 +950,13 @@ class CdcEngine(
     * runs the maintenance the lane deferred: merge-on-read threshold
     * compaction over every bucket the lane touched, and auto-retention. */
   def publishBranch(name: String): Long = {
-    val head = table.branchHead(name)
-    // buckets the lane touched = manifest deltas strictly above the fork
-    // (walk stops at the first snapshot main can already see)
-    val laneBuckets = scala.collection.mutable.Set.empty[Int]
-    var id = head
-    val mainId = table.currentSnapshotId
-    var laneLen = 0
-    while (id >= 0 && id != mainId && !table.isAncestor(id)) {
-      val s = table.snapshot(id)
-      laneBuckets ++= s.bucketDelta.keysIterator.map(_.toInt)
-      laneLen += 1
-      id = s.parentId
-    }
-    maintain(table.fastForward(name), laneBuckets, laneLen)
+    // the lane = the branch chain above main's head: the walk that reaches
+    // the head is also the fast-forward's proof (one that misses it runs
+    // to the root, and fastForward then conflicts)
+    val main = table.currentSnapshotId
+    val lane = table.walk(table.branchHead(name), _ == main).toList
+    maintain(table.fastForward(name), lane.flatMap(_.bucketDelta.keys.map(_.toInt)).toSet,
+      lane.size)
     table.currentSnapshotId
   }
 
@@ -984,22 +977,17 @@ class CdcEngine(
     // means reachable from NO other ref: a branch forked from another
     // branch shares its parent lane's snapshots, and abandoning the child
     // must not delete quarantine dirs the still-live parent lane needs for
-    // replay-after-fix — so every other branch head and tag bounds the
-    // walk, not just the main chain.
+    // replay-after-fix — so main, every other branch head and every tag
+    // bound the walk. Each of them is walked once, down to the first id an
+    // earlier walk covered; the lane walk stops at the first shared id.
     val laneEpochs = scala.util.Try {
-      val otherHeads =
-        table.branches.collect { case (n, h) if n != name => h } ++
-          table.tags.values
-      def sharedElsewhere(id: Long): Boolean =
-        table.isAncestor(id) || otherHeads.exists(table.isAncestorFrom(id, _))
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var id = table.branchHead(name)
-      while (id >= 0 && !sharedElsewhere(id)) {
-        val s = table.snapshot(id)
-        if (s.batchEpoch >= 0) out += s.batchEpoch
-        id = s.parentId
-      }
-      out.toList
+      val shared = scala.collection.mutable.Set.empty[Long]
+      val otherHeads = table.currentSnapshotId ::
+        (table.branches.collect { case (n, h) if n != name => h } ++ table.tags.values).toList
+      otherHeads.filter(table.hasSnapshot).foreach(h =>
+        shared ++= table.walk(h, shared.contains).map(_.snapshotId))
+      table.walk(table.branchHead(name), shared.contains)
+        .map(_.batchEpoch).filter(_ >= 0).toList
     }.getOrElse(Nil)
     if (!table.dropBranch(name)) return Seq.empty
     dropDlqEpochs(laneEpochs)
@@ -1010,87 +998,33 @@ class CdcEngine(
   /** Highest source LSN applied up to and including `snapshotId` (from the
     * per-bucket lineage records plus any watermark carried across
     * expireSnapshots re-roots; -1 for an empty chain prefix). */
-  def highWatermark(snapshotId: Long): Long = {
-    var id = snapshotId
-    var hwm = -1L
-    while (id >= 0) {
-      val s = table.snapshot(id)
-      if (s.carriedWatermark > hwm) hwm = s.carriedWatermark
-      for (l <- s.lineage) if (l.lsnMax > hwm) hwm = l.lsnMax
-      id = s.parentId
-    }
-    hwm
-  }
-
-  /** Buckets whose values may have changed after `sinceSnapshotId`, from the
-    * lineage of the chain segment (since, current]; None when the set cannot
-    * be proven complete — the chain was re-rooted past `since` (expired), OR
-    * the walk ran to a root that carries expired history (carriedEpochs /
-    * carriedWatermark): buckets written only by the expired commits are
-    * absent from the surviving lineage, so a bootstrap walk
-    * (sinceSnapshotId < 0) over such a chain would silently under-prune.
-    * Compaction snapshots carry no lineage and rewrite values 1:1, so they
-    * add nothing to the set. */
-  private[engine] def bucketsTouchedSince(sinceSnapshotId: Long,
-      toSnapshotId: Long): Option[Set[Int]] = {
-    // a bucket-count change inside the window puts the segment's lineage
-    // ids in a different hash regime than the window end's layout — no
-    // consistent bucket set exists, so pruning must be abandoned entirely
-    if (toSnapshotId >= 0 && table.windowCrossesRebucket(sinceSnapshotId, toSnapshotId))
-      return None
-    var id = toSnapshotId
-    val b = Set.newBuilder[Int]
-    var rootCarries = false
-    while (id >= 0 && id != sinceSnapshotId) {
-      val s = table.snapshot(id)
-      b ++= s.lineage.map(_.bucket)
-      if (s.parentId < 0) rootCarries = s.carriedEpochs.nonEmpty || s.carriedWatermark >= 0
-      id = s.parentId
-    }
-    if (id >= 0 && id == sinceSnapshotId) Some(b.result()) // reached `since`: segment complete
-    else if (sinceSnapshotId < 0 && !rootCarries) Some(b.result()) // full-chain walk, no expired history
-    else None // `since` expired / not an ancestor, or bootstrap over a re-rooted chain
-  }
-
-  /** Does the chain segment (since, to] contain a commit that can REMOVE
-    * keys from the cell-level state without any added file carrying them —
-    * a RESTORE (reverts values, adds nothing) or a tombstone-GC PURGE
-    * (drops tombstone rows)? Both suspend two shortcuts `changesSince`
-    * otherwise relies on, and both require synthesizing deletes for
-    * vanished keys (see there). */
-  private def windowRemovesKeys(sinceSnapshotId: Long, toSnapshotId: Long): Boolean = {
-    var id = toSnapshotId
-    while (id >= 0 && id != sinceSnapshotId) {
-      val s = table.snapshot(id)
-      if (s.restoreOf >= 0 || s.purge) return true
-      id = s.parentId
-    }
-    false
-  }
+  def highWatermark(snapshotId: Long): Long =
+    table.walk(snapshotId).foldLeft(-1L)((hwm, s) =>
+      (s.carriedWatermark :: s.lineage.map(_.lsnMax)).foldLeft(hwm)(math.max))
 
   /** Shared pruning resolution for the incremental readers over a window
-    * (since, to]. Returns (crosses, bsel, unbounded):
+    * (since, to], from ONE walk of it ([[IceliteTable.window]]). Returns
+    * (crosses, bsel, unbounded):
     *   - crosses — the window straddles a rebucket: same keys and cells,
     *     relocated files, MIXED hash regimes, so bucket pruning must be
     *     abandoned entirely (the caller's `buckets`, interpreted in the
     *     window-END layout, is re-applied as a row filter downstream);
-    *   - bsel — effective bucket selection: lineage-touched ∩ the caller's;
+    *   - bsel — effective bucket selection: lineage-touched ∩ the caller's
+    *     (compaction snapshots carry no lineage and rewrite values 1:1, so
+    *     they add nothing to the touched set);
     *   - unbounded — the touched set could not be proven complete (`since`
     *     expired / re-rooted chain): readers must fall back to conservative
     *     full redelivery. */
-  private def diffPruning(sinceSnapshotId: Long, buckets: Option[Set[Int]],
-      toId: Long): (Boolean, Option[Set[Int]], Boolean) = {
-    val crosses = sinceSnapshotId >= 0 && toId >= 0 &&
-      table.isAncestorFrom(sinceSnapshotId, toId) &&
-      table.windowCrossesRebucket(sinceSnapshotId, toId)
-    val touched = if (crosses) None else bucketsTouchedSince(sinceSnapshotId, toId)
+  private def diffPruning(w: Icelite.ChainWindow,
+      buckets: Option[Set[Int]]): (Boolean, Option[Set[Int]], Boolean) = {
+    val crosses = w.reachesSince && w.crossesRebucket
     val bsel = if (crosses) None
-      else (touched, buckets) match {
+      else (w.touched, buckets) match {
         case (Some(t), Some(u)) => Some(t intersect u)
         case (Some(t), None) => Some(t)
         case (None, u) => u
       }
-    (crosses, bsel, touched.isEmpty)
+    (crosses, bsel, w.touched.isEmpty)
   }
 
   /** Incremental change feed as a SNAPSHOT DIFF: every row whose visible
@@ -1119,21 +1053,28 @@ class CdcEngine(
     * mirror after a restore. */
   def changesSince(sinceSnapshotId: Long, buckets: Option[Set[Int]] = None,
       toSnapshotId: Long = -1L): DataFrame = {
-    checkLayout()
     // window end: current by default, or any chain snapshot (Iceberg's
     // incremental scan (from, to]) — feeds become replayable history steps
     // and a consumer can pin `to` to the snapshot it observed, making the
     // read race-free against concurrent commits
     val toId = if (toSnapshotId >= 0) toSnapshotId else table.currentSnapshotId
+    changesIn(table.window(sinceSnapshotId, toId), buckets, explicitTo = toSnapshotId >= 0)
+  }
+
+  /** [[changesSince]] over a resolved window; `explicitTo` = the caller
+    * named the window end (a reversed window is then an error). */
+  private[engine] def changesIn(w: Icelite.ChainWindow, buckets: Option[Set[Int]],
+      explicitTo: Boolean): DataFrame = {
+    checkLayout()
+    val (sinceSnapshotId, toId) = (w.since, w.to)
     // a reversed window (live `since` that is NOT an ancestor of `to`)
     // would silently diff in the wrong direction — fail loudly instead;
     // an EXPIRED `since` stays legal (conservative full redelivery below)
-    if (sinceSnapshotId >= 0 && toSnapshotId >= 0)
-      require(table.isAncestorFrom(sinceSnapshotId, toId) ||
-          !table.isAncestor(sinceSnapshotId),
+    if (sinceSnapshotId >= 0 && explicitTo)
+      require(w.reachesSince || !table.isAncestor(sinceSnapshotId),
         s"changesSince window is reversed or crosses branches: " +
-          s"snapshot $sinceSnapshotId is not an ancestor of $toSnapshotId")
-    val (crosses, bsel, unbounded) = diffPruning(sinceSnapshotId, buckets, toId)
+          s"snapshot $sinceSnapshotId is not an ancestor of $toId")
+    val (crosses, bsel, unbounded) = diffPruning(w, buckets)
     // payload schema is the one pinned by the window END, not the current
     // one — a windowed feed to a pre-evolution snapshot has no later columns
     val payload = payloadAt(Some(toId).filter(_ >= 0))
@@ -1150,7 +1091,7 @@ class CdcEngine(
         // purge only removes rows), and keys CAN vanish outright (inserted
         // in the rolled-back window, or tombstone rows GC'd — no tombstone
         // cell remains for them, so one is synthesized below).
-        val removes = windowRemovesKeys(sinceSnapshotId, toId)
+        val removes = w.removesKeys
         // Merge-on-read: files are append-only, so any key whose merged
         // value changed after `since` MUST appear in a file added after
         // `since` (delta or compaction). Reading JUST those files' keys
@@ -1161,13 +1102,13 @@ class CdcEngine(
         // buckets and the semi-join would prune nothing.)
         val (curSel, oldSel) =
           if (!table.meta.mergeOnRead || removes || crosses) (cur, old)
-          else table.fileGroupsAddedSince(sinceSnapshotId, bsel, toId) match {
-            case Some(groups) =>
-              val deltaKeys = readAligned(groups, payload)
-                .select(keyColumns: _*).distinct()
-              (cur.join(deltaKeys, keyCols, "left_semi"),
-                old.join(deltaKeys, keyCols, "left_semi"))
-            case None => (cur, old)
+          else {
+            // a bounded, non-crossing window reached `since`: the diff of
+            // the two endpoints' file sets is exactly the added files
+            val deltaKeys = readAligned(table.fileGroupsAdded(sinceSnapshotId, toId, bsel),
+              payload).select(keyColumns: _*).distinct()
+            (cur.join(deltaKeys, keyCols, "left_semi"),
+              old.join(deltaKeys, keyCols, "left_semi"))
           }
         val cond = keyCols.map(k => col(s"c.$k") === col(s"o.$k")).reduce(_ && _) &&
           cellCols.map(c => col(s"c.$c") <=> col(s"o.$c")).reduce(_ && _)
@@ -1217,14 +1158,14 @@ class CdcEngine(
     * retention horizon rebuilds its mirror. */
   def changelogSince(sinceSnapshotId: Long, buckets: Option[Set[Int]] = None,
       toSnapshotId: Long = -1L): DataFrame = {
-    checkLayout()
     // pin the window end NOW so the post diff and the preimage read cannot
     // straddle a concurrent commit
     val toId = if (toSnapshotId >= 0) toSnapshotId else table.currentSnapshotId
-    val post = changesSince(sinceSnapshotId, buckets, toId)
+    val w = table.window(sinceSnapshotId, toId)
+    val post = changesIn(w, buckets, explicitTo = toId >= 0)
     val payload = payloadAt(Some(toId).filter(_ >= 0))
     val pcols = payload.fieldNames.toSeq
-    val (crosses, bsel, unbounded) = diffPruning(sinceSnapshotId, buckets, toId)
+    val (crosses, bsel, unbounded) = diffPruning(w, buckets)
     if (sinceSnapshotId < 0 || (unbounded && !crosses))
       return post.filter(col("_op") =!= lit("D")).select(
         (keyColumns ++ pcols.map(col) ++ Seq(lit("insert").as("_change_type"),
@@ -1805,8 +1746,8 @@ class CdcEngine(
     * values did not change, so a pure rebucket feeds NOTHING — with bucket
     * pruning suspended (mixed hash regimes) and the caller's bucket
     * restriction re-applied in the window-end layout; incremental views
-    * and mirrors follow via the same suspension (`bucketsTouchedSince`
-    * returns None across the boundary).
+    * and mirrors follow via the same suspension (a window's `touched`
+    * set is None across the boundary).
     *
     * One COW-style rewrite of the full state, O(table) once — the same
     * cost class as Iceberg's rewrite_data_files after a partition-spec

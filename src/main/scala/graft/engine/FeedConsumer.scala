@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.icelite.ChainStepper
+
 /** Downstream consumer of a table's logical change feed — the analog of the
   * reference's warehouse loader tailing the ETL's upserts
   * (/root/reference/etl/fact_changed.py:821-875): pulls `changesSince(last
@@ -30,10 +32,13 @@ import org.apache.spark.sql.functions._
   */
 class FeedConsumer(val source: CdcEngine, val mirror: CdcEngine) {
 
+  // steps syncBacklog through the source chain, walking each snapshot once
+  private val stepper = new ChainStepper
+
   /** Manifest reads spent walking the source chain to enumerate a backlog
     * (observability: asserts the drain's walk is O(backlog) total, not
     * O(backlog²/step) from re-walking the remainder on every step). */
-  private[graft] var backlogWalkReads: Long = 0L
+  private[graft] def backlogWalkReads: Long = stepper.walkReads
 
   def lastSynced: Long = mirror.table.lastEpoch
 
@@ -50,46 +55,22 @@ class FeedConsumer(val source: CdcEngine, val mirror: CdcEngine) {
     * bounded per-step work and earlier durable progress. An expired
     * `lastSynced` makes the FIRST step a conservative full redelivery
     * (same rule as `changesSince`), after which stepping is incremental.
-    * The backlog chain is walked ONCE up front (re-extended only when the
-    * source head advances mid-drain), so enumerating an N-snapshot backlog
-    * costs O(N) manifest reads total regardless of step size.
-    * Returns total rows applied. */
+    * The backlog chain is walked once (a [[ChainStepper]]; re-extended
+    * only by the suffix a source head advancing mid-drain adds), so
+    * enumerating an N-snapshot backlog costs O(N) manifest reads total
+    * regardless of step size. Returns total rows applied. */
   def syncBacklog(maxSnapshotsPerStep: Int): Long = {
     require(maxSnapshotsPerStep >= 1, "step must be at least one snapshot")
-    // Walk the source chain ONCE (head down to `since`; if since was
-    // expired the walk reaches the root and the backlog is the chain),
-    // then step through the cached id slice — O(backlog) manifest reads
-    // total, not O(backlog²/step) from re-walking the remaining chain on
-    // every step. The walk is re-extended only when the source head
-    // ADVANCES past the cached one (commits landing mid-drain).
     var total = 0L
     var done = false
-    // backlog ids ordered oldest -> newest, strictly above lastSynced
-    var ids = Vector.empty[Long]
-    var walkedHead = -1L
-    def extendTo(upTo: Long, since: Long): Unit = {
-      val fresh = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var id = upTo
-      val stopAt = if (walkedHead >= 0) walkedHead else since
-      while (id >= 0 && id != stopAt) {
-        fresh += id
-        backlogWalkReads += 1
-        id = source.table.snapshot(id).parentId
-      }
-      ids = ids ++ fresh.reverseIterator
-      walkedHead = upTo
-    }
     while (!done) {
       val upTo = source.table.currentSnapshotId
       val since = lastSynced
-      if (upTo < 0 || upTo == since) done = true
-      else {
-        if (upTo != walkedHead) extendTo(upTo, since)
-        val take = math.min(maxSnapshotsPerStep, ids.size)
-        val stepEnd = ids(take - 1)
+      done = upTo < 0 || upTo == since
+      if (!done) {
+        val stepEnd = stepper.next(source.table, since, upTo, maxSnapshotsPerStep)
         total += syncTo(stepEnd)
-        ids = ids.drop(take)
-        if (stepEnd == upTo) done = true
+        done = stepEnd == upTo
       }
     }
     total

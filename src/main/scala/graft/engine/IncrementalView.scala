@@ -106,16 +106,18 @@ class IncrementalView(
     if (upTo < 0) return 0L
     val since = lastRefreshed
     if (upTo == since) return 0L
-    val incremental = since >= 0 && engine.table.isAncestor(since)
-    val (next, changedGroups) =
-      if (!incremental) {
+    // one walk of (since, upTo] proves the window incremental and prunes
+    // both the feed and the pre-image read
+    val window = Option.when(since >= 0)(engine.table.window(since, upTo))
+      .filter(_.reachesSince)
+    val (next, changedGroups) = window match {
+      case None =>
         val full = aggregate(engine.stateAt(upTo))
         (full, -1L) // count after write, below
-      } else {
-        val feed = engine.changesSince(since, toSnapshotId = upTo)
+      case Some(w) =>
+        val feed = engine.changesIn(w, None, explicitTo = true)
         val changedKeys = feed.select(keyCols.map(col): _*).distinct()
-        val touched = engine.bucketsTouchedSince(since, upTo)
-        val preImage = engine.stateAt(since, touched)
+        val preImage = engine.stateAt(since, w.touched)
           .join(changedKeys, keyCols, "left_semi")
         val add = project(feed.filter(col("_op") =!= lit("D")))
           .withColumn("__sign", lit(1L))

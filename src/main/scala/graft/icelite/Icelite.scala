@@ -191,6 +191,21 @@ object Icelite {
     * the table, not of one engine instance, so it lives in table metadata. */
   case class TableMeta(keyCols: List[String], buckets: Int, mergeOnRead: Boolean = false)
 
+  /** What one walk of the chain window (since, to] tells an incremental
+    * reader (see [[IceliteTable.window]]):
+    *   - `reachesSince` — `since` is an ancestor of (or equal to) `to`;
+    *   - `crossesRebucket` — the bucket count changes somewhere in the walked
+    *     span (the window plus `since` itself when reached, else the whole
+    *     chain down to the root);
+    *   - `touched` — buckets the window's lineage wrote; None when that set
+    *     cannot be proven complete (`since` expired or not an ancestor, a
+    *     bootstrap walk over a root carrying expired history, or a layout
+    *     crossing that puts the ids in two hash regimes);
+    *   - `removesKeys` — the window holds a restore or a tombstone purge,
+    *     which remove keys without any added file carrying them. */
+  case class ChainWindow(since: Long, to: Long, reachesSince: Boolean,
+      crossesRebucket: Boolean, touched: Option[Set[Int]], removesKeys: Boolean)
+
   /** Optimistic-concurrency conflict: the table moved past the snapshot the
     * writer prepared against. The writer must re-read, re-prepare (for
     * append-mode delta commits simply re-issue; for replace commits re-merge
@@ -270,6 +285,17 @@ object Icelite {
   }
 }
 
+/** One icelite table at `root`: its pointer, manifests, refs and commits.
+  *
+  * The snapshot chain is a parent-pointer list of `snap-N.json` manifests,
+  * and [[walk]] is the one place that follows it: every ancestry, epoch,
+  * lineage, layout, ref and garbage question is a fold over a walk from
+  * some head toward the root. A walk parses one manifest per step, lazily,
+  * and stops before a given id without reading it, so a question about
+  * the window (since, to] reads the window's manifests and nothing below.
+  * [[window]] answers all of an incremental reader's questions from one
+  * walk; [[ChainStepper]] steps a consumer through a backlog walking each
+  * snapshot once. [[manifestReads]] counts the parses. */
 class IceliteTable private (val root: Path) {
   import Icelite._
 
@@ -336,18 +362,41 @@ class IceliteTable private (val root: Path) {
     * does, bucket ids from the two sides live in different hash regimes and
     * NO bucket-level pruning computed in one regime may be applied to reads
     * in the other. `since < 0` checks the whole chain up to `to`. */
-  def windowCrossesRebucket(sinceSnapshotId: Long, toSnapshotId: Long): Boolean = {
+  def windowCrossesRebucket(sinceSnapshotId: Long, toSnapshotId: Long): Boolean =
+    window(sinceSnapshotId, toSnapshotId).crossesRebucket
+
+  /** Resolve the window (since, to] with ONE walk from `to` down to `since`
+    * (or the root when `since` is not an ancestor): ancestry, layout
+    * crossing, lineage-touched buckets, carried root history and
+    * restore/purge presence, all from the same manifests (see
+    * [[Icelite.ChainWindow]]). Reads the window's manifests plus `since`'s
+    * own when the layout check needs it. */
+  def window(sinceSnapshotId: Long, toSnapshotId: Long): ChainWindow = {
     val metaBuckets = meta.buckets
     def eff(s: Snapshot) = if (s.buckets > 0) s.buckets else metaBuckets
-    val to = snapshot(toSnapshotId)
-    val target = eff(to)
-    var id = to.parentId
-    while (id >= 0 && id != sinceSnapshotId) {
-      val s = snapshot(id)
-      if (eff(s) != target) return true
-      id = s.parentId
+    // one pass, keeping only bucket ids: a bootstrap window can span the
+    // whole chain
+    val w = walk(toSnapshotId, _ == sinceSnapshotId)
+    var layouts = Set.empty[Int]
+    var touched = Set.empty[Int]
+    var removesKeys = false
+    var oldest: Option[Snapshot] = None
+    w.foreach { s =>
+      layouts += eff(s)
+      touched ++= s.lineage.map(_.bucket)
+      removesKeys ||= s.restoreOf >= 0 || s.purge
+      oldest = Some(s)
     }
-    if (id >= 0 && id == sinceSnapshotId) eff(snapshot(id)) != target else false
+    val reaches = sinceSnapshotId >= 0 && w.end() == sinceSnapshotId
+    if (reaches && oldest.nonEmpty) layouts += eff(snapshot(sinceSnapshotId))
+    val crosses = layouts.size > 1
+    // a walk that ran to the root proves nothing about buckets written only
+    // by commits expired beneath it
+    val rootCarries = !reaches &&
+      oldest.exists(s => s.carriedEpochs.nonEmpty || s.carriedWatermark >= 0)
+    val provable = reaches || (sinceSnapshotId < 0 && !rootCarries)
+    ChainWindow(sinceSnapshotId, toSnapshotId, reaches, crosses,
+      if (crosses || !provable) None else Some(touched), removesKeys)
   }
 
   /** Rewrite the creation bucket count — legal ONLY while the chain is
@@ -377,6 +426,32 @@ class IceliteTable private (val root: Path) {
     Serialization.read[Snapshot](Files.readString(metaDir.resolve(s"snap-$id.json")))
   }
 
+  /** The chain walk: snapshots from `fromId` toward the root, newest first,
+    * one [[snapshot]] parse per step, lazily. It stops BEFORE the first id
+    * `stop` accepts (that manifest is never read) or past the root. Once
+    * drained, [[Walk.end]] is the id it stopped before, so ancestry comes
+    * from the same walk that collected the snapshots. */
+  def walk(fromId: Long, stop: Long => Boolean = _ => false): Walk = new Walk(fromId, stop, null)
+
+  /** [[walk]] from an already-parsed snapshot, which it yields first
+    * without reading it again. */
+  def walkFrom(s: Snapshot, stop: Long => Boolean = _ => false): Walk =
+    new Walk(s.snapshotId, stop, s)
+
+  final class Walk private[IceliteTable] (private var id: Long, stop: Long => Boolean,
+      private var seed: Snapshot) extends Iterator[Snapshot] {
+    def hasNext: Boolean = id >= 0 && !stop(id)
+    def next(): Snapshot = {
+      val s = if (seed != null) seed else snapshot(id)
+      seed = null
+      id = s.parentId
+      s
+    }
+
+    /** Drain the walk; the id it stopped before (negative past the root). */
+    def end(): Long = { while (hasNext) next(); id }
+  }
+
   /** Is `id`'s manifest still on disk? A ref (tag/branch head) can outlive
     * its manifest when another instance drops the ref and vacuums between a
     * reader's ref listing and its manifest walk — read-only consumers guard
@@ -394,38 +469,32 @@ class IceliteTable private (val root: Path) {
 
   def currentSchema: Option[StructType] = currentSnapshot.map(s => schema(s.schemaId))
 
-  // Cumulative committed-epoch set, cached per snapshot id. Without the
-  // cache every commit re-walked the whole chain (one JSON read per prior
-  // snapshot, per batch = O(batches^2) driver I/O over a long replay — a
-  // driver-side scale-killer at ~10^5 micro-batches). The cache is extended
-  // INCREMENTALLY: walk down from the current snapshot only until the cached
-  // id (or the root) is met. Safe because snapshots are immutable — the one
-  // in-place rewrite (expireSnapshots' re-root) preserves the cumulative
-  // epoch set by construction (expired epochs move into carriedEpochs).
-  private var epochCache: (Long, Set[Long]) = (-2L, Set.empty)
+  // Cumulative committed-epoch set per ref ("main" or a branch name; no
+  // branch may be called "main"), cached with the head it was read at.
+  // Without the cache every commit re-walked the whole chain (one JSON read
+  // per prior snapshot, per batch = O(batches^2) driver I/O over a long
+  // replay). The cache is extended INCREMENTALLY: walk down from the head
+  // only until the cached head (or the root) is met. Safe because snapshots
+  // are immutable — the one in-place rewrite (expireSnapshots' re-root)
+  // preserves the cumulative epoch set by construction (expired epochs
+  // move into carriedEpochs); a head that does not descend from the cached
+  // one walks to the root and replaces the entry.
+  private var epochCache: Map[String, (Long, Set[Long])] = Map.empty
+
+  private def epochsAt(ref: String, head: Long): Set[Long] = rootLock.synchronized {
+    if (head < 0) return Set.empty
+    val (cachedHead, cached) = epochCache.getOrElse(ref, (-2L, Set.empty[Long]))
+    if (head == cachedHead) return cached
+    val w = walk(head, _ == cachedHead)
+    val fresh = w.flatMap(s => s.carriedEpochs ++ Some(s.batchEpoch).filter(_ >= 0)).toSet
+    val all = if (w.end() == cachedHead) cached ++ fresh else fresh
+    epochCache += ref -> (head, all)
+    all
+  }
 
   /** All epochs in the current snapshot chain (root -> current). Amortized
     * O(new snapshots since last call), driver-side. */
-  def committedEpochs: Set[Long] = rootLock.synchronized {
-    val cur = currentSnapshotId
-    if (cur < 0) return Set.empty
-    if (cur == epochCache._1) return epochCache._2
-    var id = cur
-    val fresh = Set.newBuilder[Long]
-    var hitCache = false
-    while (id >= 0 && !hitCache) {
-      if (id == epochCache._1) hitCache = true
-      else {
-        val s = snapshot(id)
-        if (s.batchEpoch >= 0) fresh += s.batchEpoch
-        fresh ++= s.carriedEpochs
-        id = s.parentId
-      }
-    }
-    val set = if (hitCache) epochCache._2 ++ fresh.result() else fresh.result()
-    epochCache = (cur, set)
-    set
-  }
+  def committedEpochs: Set[Long] = epochsAt("main", currentSnapshotId)
 
   /** Highest committed epoch, or -1. The resume point of a consumer whose
     * epochs only grow (FeedConsumer's source snapshot ids). */
@@ -572,46 +641,12 @@ class IceliteTable private (val root: Path) {
 
   /** Chain from `headId` back to its root (root first), mirroring
     * [[snapshotChain]] for an arbitrary ref head. */
-  def chainFrom(headId: Long): List[Snapshot] = {
-    var id = headId
-    var out = List.empty[Snapshot]
-    while (id >= 0) { val s = snapshot(id); out = s :: out; id = s.parentId }
-    out
-  }
-
-  // Per-branch committed-epoch cache, same incremental discipline as the
-  // main chain's epochCache: first use pays one O(chain) walk from the
-  // branch head, every later commit extends from the cached head.
-  private var branchEpochCache: Map[String, (Long, Set[Long])] = Map.empty
+  def chainFrom(headId: Long): List[Snapshot] = walk(headId).toList.reverse
 
   /** All epochs committed on `name`'s chain (fork ancestry included). */
-  def branchEpochs(name: String): Set[Long] = rootLock.synchronized {
-    val head = branchHead(name)
-    val cached = branchEpochCache.getOrElse(name, (-2L, Set.empty[Long]))
-    if (head == cached._1) return cached._2
-    var id = head
-    val fresh = Set.newBuilder[Long]
-    var hitCache = false
-    while (id >= 0 && !hitCache) {
-      if (id == cached._1) hitCache = true
-      else {
-        val s = snapshot(id)
-        if (s.batchEpoch >= 0) fresh += s.batchEpoch
-        fresh ++= s.carriedEpochs
-        id = s.parentId
-      }
-    }
-    val all = fresh.result() ++ (if (hitCache) cached._2 else Set.empty)
-    branchEpochCache += name -> (head, all)
-    all
-  }
+  def branchEpochs(name: String): Set[Long] = epochsAt(name, branchHead(name))
 
-  def snapshotChain: List[Snapshot] = {
-    var id = currentSnapshotId
-    var out = List.empty[Snapshot]
-    while (id >= 0) { val s = snapshot(id); out = s :: out; id = s.parentId }
-    out
-  }
+  def snapshotChain: List[Snapshot] = chainFrom(currentSnapshotId)
 
   // Resolved full bucket -> file-list maps, LRU-cached per snapshot id.
   // Manifests are delta-only (see Snapshot.bucketDelta); resolution walks
@@ -632,20 +667,13 @@ class IceliteTable private (val root: Path) {
   def bucketFilesOf(s: Snapshot): Map[String, List[DataFile]] = rootLock.synchronized {
     val hit = resolveCache.get(s.snapshotId)
     if (hit != null) return hit
-    var stack = List(s) // deepest unresolved snapshot first
-    var base = Map.empty[String, List[DataFile]]
-    var cur = s
-    var searching = true
-    while (searching) {
-      if (cur.full || cur.parentId < 0) searching = false
-      else {
-        val p = snapshot(cur.parentId)
-        val c = resolveCache.get(p.snapshotId)
-        if (c != null) { base = c; searching = false }
-        else { stack = p :: stack; cur = p }
-      }
-    }
-    var acc = base
+    // walk until a cached ancestor (never read) or a full manifest
+    val w = walkFrom(s, resolveCache.containsKey)
+    var stack = List(w.next()) // deepest unresolved snapshot first
+    while (!stack.head.full && w.hasNext) stack = w.next() :: stack
+    var acc =
+      if (stack.head.full || w.end() < 0) Map.empty[String, List[DataFile]]
+      else resolveCache.get(w.end())
     for (sn <- stack) {
       acc = acc ++ sn.bucketDelta
       resolveCache.put(sn.snapshotId, acc)
@@ -658,16 +686,9 @@ class IceliteTable private (val root: Path) {
     * The point-lookup fast path: driver-side metadata, O(segment) reads. */
   def bucketListOf(s: Snapshot, bucket: Int): List[DataFile] = {
     val key = bucket.toString
-    var cur = s
-    while (true) {
-      cur.bucketDelta.get(key) match {
-        case Some(fs) => return fs
-        case None =>
-          if (cur.full || cur.parentId < 0) return Nil
-          cur = snapshot(cur.parentId)
-      }
-    }
-    Nil
+    walkFrom(s).collectFirst {
+      case sn if sn.full || sn.bucketDelta.contains(key) => sn.bucketDelta.getOrElse(key, Nil)
+    }.getOrElse(Nil)
   }
 
   /** Absolute data file paths of the current snapshot, optionally restricted
@@ -687,13 +708,15 @@ class IceliteTable private (val root: Path) {
     * pruning, the manifest analog of the reference's as-of index). */
   def currentFileGroups(buckets: Option[Set[Int]] = None,
       lsnRange: Option[(Long, Long)] = None): Map[Int, Seq[String]] =
-    currentSnapshot.map(fileGroupsOf(_, buckets, lsnRange)).getOrElse(Map.empty)
+    currentSnapshot.map(fileGroupsOf(_, buckets, f => lsnRange.forall {
+      case (lo, hi) => f.maxLsn >= lo && f.minLsn <= hi
+    })).getOrElse(Map.empty)
 
   /** Time travel: file groups of ANY snapshot in the chain (Iceberg's
     * `VERSION AS OF`). Snapshots are immutable, so reading an old id is
     * always consistent regardless of later commits. */
   def fileGroupsAt(snapshotId: Long, buckets: Option[Set[Int]] = None): Map[Int, Seq[String]] =
-    fileGroupsOf(snapshot(snapshotId), buckets, None)
+    fileGroupsOf(snapshot(snapshotId), buckets)
 
   /** Manifest DIFF: data files in the current snapshot but not in
     * `sinceSnapshotId` (by path — files are immutable, so path identity is
@@ -713,41 +736,36 @@ class IceliteTable private (val root: Path) {
     // `to` (default: current) must itself be in the chain, and `since`
     // must be an ancestor of `to`.
     val toId = if (toSnapshotId >= 0) toSnapshotId else currentSnapshotId
-    if (toId < 0) return Some(Map.empty)
-    if (!isAncestor(toId)) return None
-    if (sinceSnapshotId >= 0 && !isAncestorFrom(sinceSnapshotId, toId)) return None
+    if (toId < 0) Some(Map.empty)
+    else if (!isAncestor(toId) ||
+      sinceSnapshotId >= 0 && !isAncestorFrom(sinceSnapshotId, toId)) None
+    else Some(fileGroupsAdded(sinceSnapshotId, toId, buckets))
+  }
+
+  /** The diff behind [[fileGroupsAddedSince]], for a caller that already
+    * proved `since` (< 0: none) an ancestor of `to` — e.g. by a
+    * [[window]]. Reads only the two endpoints' resolved file sets. */
+  def fileGroupsAdded(sinceSnapshotId: Long, toSnapshotId: Long,
+      buckets: Option[Set[Int]]): Map[Int, Seq[String]] = {
     val oldPaths: Set[String] =
       if (sinceSnapshotId < 0) Set.empty
       else bucketFilesOf(snapshot(sinceSnapshotId)).valuesIterator.flatten.map(_.path).toSet
-    val groups = bucketFilesOf(snapshot(toId)).iterator
-      .filter { case (b, _) => buckets.forall(_.contains(b.toInt)) }
-      .flatMap { case (_, files) => files }
-      .filterNot(f => oldPaths.contains(f.path))
-      .toSeq
-      .groupBy(_.schemaId)
-      .map { case (sid, fs) => sid -> fs.map(f => root.resolve(f.path).toString) }
-    Some(groups)
+    fileGroupsOf(snapshot(toSnapshotId), buckets, f => !oldPaths.contains(f.path))
   }
 
   /** Is `id` an ancestor of (or equal to) the current snapshot? */
   def isAncestor(id: Long): Boolean = isAncestorFrom(id, currentSnapshotId)
 
   /** Is `id` an ancestor of (or equal to) `from`? */
-  def isAncestorFrom(id: Long, from: Long): Boolean = {
-    var cur = from
-    while (cur >= 0) {
-      if (cur == id) return true
-      cur = snapshot(cur).parentId
-    }
-    false
-  }
+  def isAncestorFrom(id: Long, from: Long): Boolean =
+    id >= 0 && walk(from, _ == id).end() == id
 
   private def fileGroupsOf(s: Snapshot, buckets: Option[Set[Int]],
-      lsnRange: Option[(Long, Long)]): Map[Int, Seq[String]] =
+      keep: DataFile => Boolean = _ => true): Map[Int, Seq[String]] =
     bucketFilesOf(s).iterator
       .filter { case (b, _) => buckets.forall(_.contains(b.toInt)) }
       .flatMap { case (_, files) => files }
-      .filter(f => lsnRange.forall { case (lo, hi) => f.maxLsn >= lo && f.minLsn <= hi })
+      .filter(keep)
       .toSeq
       .groupBy(_.schemaId)
       .map { case (sid, fs) => sid -> fs.map(f => root.resolve(f.path).toString) }
@@ -879,15 +897,9 @@ class IceliteTable private (val root: Path) {
     // a branch lane must keep detecting duplicates of batches committed
     // below its (now absorbed) fork history.
     val expiredIds = expired.map(_.snapshotId).toSet
-    val branchPins: Set[Long] = branches.values.flatMap { head =>
-      var id = head
-      var pin = -1L
-      while (id >= 0 && pin < 0) {
-        if (expiredIds.contains(id)) pin = id
-        else id = snapshot(id).parentId
-      }
-      if (pin >= 0) Some(pin) else None
-    }.toSet
+    val branchPins: Set[Long] = branches.values
+      .map(head => walk(head, expiredIds.contains).end())
+      .filter(_ >= 0).toSet
     val pinned = tags.values.toSet ++ branchPins
     expired.zipWithIndex.filter { case (s, _) => pinned.contains(s.snapshotId) }
       .foreach { case (s, i) =>
@@ -985,18 +997,20 @@ class IceliteTable private (val root: Path) {
     * off-chain (expired) tag was re-materialized FULL at expiry, so its
     * raw bucketDelta IS its complete file set. */
   private def garbageScan(cutoff: Long): (List[String], List[String]) = {
-    val tagRefs = tags.values.toList.distinct
-      .filter(id => Files.exists(metaDir.resolve(s"snap-$id.json")))
-      .flatMap(id => snapshot(id).bucketDelta.valuesIterator.flatten.map(_.path))
-    // branch chains keep every file they can resolve live — including the
-    // shared prefix below the fork (covered by the chain union anyway) and
-    // the lane's own unpublished commits
-    val branchRefs = branches.values.toList.distinct
-      .filter(id => Files.exists(metaDir.resolve(s"snap-$id.json")))
-      .flatMap(id => chainFrom(id).flatMap(_.bucketDelta.valuesIterator.flatten.map(_.path)))
-    val referenced: Set[String] =
-      (snapshotChain.flatMap(_.bucketDelta.valuesIterator.flatten.map(_.path)) ++
-        tagRefs ++ branchRefs).toSet
+    // ONE walk per ref: main's chain, then each branch down to the first
+    // snapshot an earlier walk already covered (its fork) — branch lanes
+    // keep their own unpublished commits live, the shared prefix is main's
+    val liveIds = scala.collection.mutable.Set.empty[Long]
+    val referenced = scala.collection.mutable.Set.empty[String]
+    (currentSnapshotId :: branches.values.toList.filter(hasSnapshot)).foreach { head =>
+      walk(head, liveIds.contains).foreach { s =>
+        liveIds += s.snapshotId
+        referenced ++= s.bucketDelta.valuesIterator.flatten.map(_.path)
+      }
+    }
+    tags.values.toSet.filterNot(liveIds.contains).filter(hasSnapshot)
+      .foreach(id => referenced ++= snapshot(id).bucketDelta.valuesIterator.flatten.map(_.path))
+    liveIds ++= tags.values
     val dataDir = root.resolve("data")
     if (!Files.exists(dataDir)) return (Nil, Nil)
     val stream = Files.walk(dataDir)
@@ -1015,11 +1029,6 @@ class IceliteTable private (val root: Path) {
     // Live = main chain + tag pins + every branch chain. The grace cutoff
     // protects freshly-STAGED (WAP) manifests awaiting audit, same contract
     // as their data files above.
-    val liveIds: Set[Long] =
-      (snapshotChain.map(_.snapshotId) ++ tags.values ++
-        branches.values.toList.distinct
-          .filter(id => Files.exists(metaDir.resolve(s"snap-$id.json")))
-          .flatMap(id => chainFrom(id).map(_.snapshotId))).toSet
     val metaStream = Files.list(metaDir)
     val deadManifests =
       try metaStream.iterator().asScala
@@ -1200,8 +1209,8 @@ class IceliteTable private (val root: Path) {
     val epochsSeen = toBranch.map(branchEpochs).getOrElse(committedEpochs)
     if (batchEpoch >= 0 && epochsSeen.contains(batchEpoch)) {
       // already applied — exactly-once via idempotent no-op
-      val chain = toBranch.map(n => chainFrom(branchHead(n))).getOrElse(snapshotChain)
-      return chain.find(_.batchEpoch == batchEpoch).orElse(parent).get
+      return parent.flatMap(walkFrom(_).find(_.batchEpoch == batchEpoch))
+        .orElse(parent).get
     }
     val parentId = parent.map(_.snapshotId).getOrElse(-1L)
     if (expectedParentId != -2L && expectedParentId != parentId)
@@ -1289,7 +1298,7 @@ class IceliteTable private (val root: Path) {
     require(Files.exists(snapPath), s"no staged snapshot $stagedId")
     val staged = snapshot(stagedId)
     if (staged.batchEpoch >= 0 && committedEpochs.contains(staged.batchEpoch))
-      return snapshotChain.find(_.batchEpoch == staged.batchEpoch)
+      return walk(currentSnapshotId).find(_.batchEpoch == staged.batchEpoch)
         .orElse(currentSnapshot).get
     if (isAncestor(stagedId)) {
       // already published — possibly by another process that died between
@@ -1363,4 +1372,47 @@ object IceliteTable {
   def createOrLoad(root: String, keyCols: Seq[String], buckets: Int,
       mergeOnRead: Boolean = false): IceliteTable =
     if (exists(root)) load(root) else create(root, keyCols, buckets, mergeOnRead)
+}
+
+/** Steps a consumer through the chain above its floor in windows of at
+  * most `k` snapshots, walking each snapshot once: the first call walks
+  * (floor, head], a later call walks only the suffix a moved head added
+  * (down to the head walked last), so enumerating an N-snapshot backlog
+  * costs N manifest parses at any step size, where re-walking the
+  * remainder per step costs O(N²/k). If `floor` is not on the chain
+  * (expired) the backlog is the whole retained chain, as for the feed's
+  * conservative redelivery; a walk that misses the head walked last, or a
+  * cached backlog whose oldest id was expired meanwhile, starts over from
+  * the retained chain. Holds only ids: the caller passes the table it
+  * reads. Shared by `FeedConsumer.syncBacklog` and the `icelite-feed`
+  * source's `maxSnapshotsPerTrigger`. */
+final class ChainStepper {
+  // chain ids above the last floor, oldest first, up to walkedHead
+  private var ids = Vector.empty[Long]
+  private var walkedHead = -1L
+
+  /** Manifests parsed by this stepper's walks (observability: a drain's
+    * walk is O(backlog) total). */
+  @volatile private[graft] var walkReads = 0L
+
+  /** The end of the next window above `floor` toward `head`: the `k`-th
+    * chain snapshot above `floor`, or `head` when fewer lie between. */
+  def next(table: IceliteTable, floor: Long, head: Long, k: Int): Long = synchronized {
+    def walkDown(stop: Long => Boolean): (Vector[Long], Long) = {
+      val w = table.walk(head, stop)
+      val fresh = w.map(_.snapshotId).toVector.reverse
+      walkReads += fresh.size
+      (fresh, w.end())
+    }
+    if (head != walkedHead) {
+      val (fresh, end) = walkDown(id => id == walkedHead || id == floor)
+      ids = if (end == walkedHead) ids ++ fresh else fresh
+      walkedHead = head
+    }
+    ids = ids.drop(ids.indexOf(floor) + 1)
+    // expiry deletes a chain prefix: if the oldest cached id is gone the
+    // cache may hold more expired ids — walk (floor, head] again
+    if (ids.headOption.exists(id => !table.hasSnapshot(id))) ids = walkDown(_ == floor)._1
+    ids.take(k).lastOption.getOrElse(head)
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
 import graft.engine.{CdcEngine, EngineConf}
-import graft.icelite.IceliteTable
+import graft.icelite.{ChainStepper, IceliteTable}
 
 /** `icelite-feed`: the table itself as a Structured Streaming SOURCE — the
   * Delta `readChangeFeed` / Iceberg incremental-streaming-read analog, and
@@ -35,7 +35,9 @@ import graft.icelite.IceliteTable
   * incremental read makes. Retention must therefore cover the longest
   * expected consumer lag, exactly like Kafka.
   *
-  * Scale notes: getOffset is one pointer read; each batch's work is the
+  * Scale notes: getOffset is one pointer read (plus, under
+  * maxSnapshotsPerTrigger, a walk of only the snapshots committed since
+  * the previous trigger); each batch's work is the
   * feed's — lineage bucket pruning + (merge-on-read) added-file key
   * refinement keep it change-proportional. The engine wrapper is rebuilt
   * per call (metadata-only) so a mid-stream `rebucket` of the source table
@@ -130,6 +132,12 @@ class CdfSource(sqlContext: SQLContext, params: Map[String, String]) extends Sou
 
   override val schema: StructType = CdfSource.feedSchema(sqlContext, params)
 
+  // walks the backlog once across triggers, then only each new suffix
+  private val stepper = new ChainStepper
+
+  /** Manifests read walking the backlog for admission control. */
+  private[graft] def backlogWalkReads: Long = stepper.walkReads
+
   // the newest snapshot already handed out as an offset (volatile across
   // the streaming thread and recovery); after a restart it is re-learned
   // from the checkpoint via the recovery getBatch call
@@ -147,18 +155,10 @@ class CdfSource(sqlContext: SQLContext, params: Map[String, String]) extends Sou
     val target = maxSnapshotsPerTrigger match {
       case None => head
       case Some(k) =>
-        val floor = lastSeen.getOrElse(startSnapshot)
-        if (head == floor) head
-        else {
-          // chain ids in (floor, head], oldest first; if `floor` is no
-          // longer on the chain (expired) the walk reaches the root and
-          // the backlog is the whole retained chain — the first window
-          // is then the conservative redelivery changesSince makes anyway
-          var id = head
-          var ids = List.empty[Long]
-          while (id >= 0 && id != floor) { ids = id :: ids; id = table.snapshot(id).parentId }
-          ids.take(k).last
-        }
+        // if the floor expired the backlog is the whole retained chain —
+        // the first window is then the conservative redelivery
+        // changesSince makes anyway
+        stepper.next(table, lastSeen.getOrElse(startSnapshot), head, k)
     }
     lastSeen = Some(target)
     Some(CdfOffset(target))

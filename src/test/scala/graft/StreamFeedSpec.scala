@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.engine.{CdcEngine, EngineConf}
 import graft.icelite.IceliteTable
+import graft.streaming.feed.CdfSource
 import graft.synth.Synth
 
 /** The table as a Structured Streaming SOURCE (`icelite-feed`): snapshot-id
@@ -247,6 +248,65 @@ class StreamFeedSpec extends AnyFunSuite {
     def visible(e: CdcEngine): Seq[String] = rowsOf(e.currentState()
       .select("repo", "path", "commit", "lang", "content", "_op", "_ts", "content_sha256"))
     assert(visible(mirror) === visible(source), "paced mirror diverged")
+  }
+
+  test("maxSnapshotsPerTrigger walks the backlog once: walk reads equal the backlog at k = 1") {
+    val dir = SparkTestBase.tmpDir("feedstream-walk")
+    val root = s"$dir/src"
+    val source = new CdcEngine(spark,
+      IceliteTable.create(root, Seq("repo", "path"), 8), EngineConf(buckets = 8))
+    (0 until 12).foreach(i => source.applyBatch(i, shifted(40, seed = 300 + i, by = 40L * i)))
+    val chain = source.table.snapshotChain.map(_.snapshotId)
+    assert(chain.size >= 12)
+    val feed = new CdfSource(spark.sqlContext,
+      Map("path" -> root, "maxSnapshotsPerTrigger" -> "1"))
+    def offset(): Long = feed.getOffset.get.json.toLong
+    // one trigger per snapshot, oldest first — each walk re-walking the
+    // remaining backlog would read chain.size * (chain.size + 1) / 2
+    assert(chain.map(_ => offset()) === chain)
+    assert(feed.backlogWalkReads === chain.size.toLong,
+      s"the walk should read each of the ${chain.size} backlog manifests once, " +
+        s"read ${feed.backlogWalkReads}")
+    // commits after the drain extend the walk by their own suffix only
+    source.applyBatch(12, shifted(40, seed = 312, by = 480L))
+    source.applyBatch(13, shifted(40, seed = 313, by = 520L))
+    val head = source.table.currentSnapshotId
+    assert(Seq(offset(), offset()).last === head)
+    assert(feed.backlogWalkReads === chain.size + 2L)
+  }
+
+  test("maxSnapshotsPerTrigger behind an expiring source: the next offset is a retained snapshot") {
+    val dir = SparkTestBase.tmpDir("feedstream-expire")
+    val root = s"$dir/src"
+    val source = new CdcEngine(spark,
+      IceliteTable.create(root, Seq("repo", "path"), 8), EngineConf(buckets = 8))
+    (0 until 10).foreach(i => source.applyBatch(i, shifted(40, seed = 400 + i, by = 40L * i)))
+    val feed = new CdfSource(spark.sqlContext,
+      Map("path" -> root, "maxSnapshotsPerTrigger" -> "1"))
+    var last = feed.getOffset.get
+    last = feed.getOffset.get
+    // the offset handed out next must name a manifest that still exists,
+    // and its window must resolve (getBatch walks it on the driver)
+    def step(): Unit = {
+      val next = feed.getOffset.get
+      val id = next.json.toLong
+      assert(source.table.hasSnapshot(id), s"offset $id names an expired snapshot")
+      assert(feed.getBatch(Some(last), next).schema === feed.schema)
+      last = next
+    }
+    // expiry with no commit: the head is unchanged, so the stepper does not
+    // walk again, yet the backlog it cached starts at an expired id
+    source.table.expireSnapshots(7)
+    step()
+    // a commit, then expiry: the walk from the new head stops at the head
+    // walked last, above ids expiry deleted
+    source.applyBatch(10, shifted(40, seed = 410, by = 400L))
+    source.table.expireSnapshots(3)
+    step()
+    // the drain still ends at the head
+    val head = source.table.currentSnapshotId
+    (0 until 3).foreach(_ => if (last.json.toLong != head) step())
+    assert(last.json.toLong === head)
   }
 
   test("stream over a never-written table fails loudly at start") {
