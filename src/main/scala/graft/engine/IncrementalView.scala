@@ -167,7 +167,7 @@ class IncrementalView(
         (merged, dAgg.count())
       }
     val dir = root.resolve(s"v$upTo")
-    next.write.mode("overwrite").parquet(dir.toString)
+    next.write.options(LocalWrite.options).mode("overwrite").parquet(dir.toString)
     Icelite.write(ckpt, upTo.toString)
     prune(keep = Set(upTo, since))
     if (changedGroups >= 0) changedGroups

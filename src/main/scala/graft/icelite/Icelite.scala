@@ -650,13 +650,15 @@ class IceliteTable private (val root: Path) {
 
   // Resolved full bucket -> file-list maps, LRU-cached per snapshot id.
   // Manifests are delta-only (see Snapshot.bucketDelta); resolution walks
-  // parents until a cached / full snapshot, then overlays back up, caching
-  // each level (iterative — a 10^5-long chain must not recurse). Sequential
-  // access keeps the parent in cache, so steady-state commits and reads
-  // resolve in O(delta); a cold open of a long keep-all chain pays one
-  // O(chain) walk, same as the committed-epoch cache's first fill.
-  // Overlay shares unchanged List instances structurally, so the cached
-  // maps cost O(distinct lists), not O(entries x levels).
+  // parents until a cached / full snapshot, then overlays back up
+  // (iterative — a 10^5-long chain must not recurse), and caches only the
+  // snapshot asked for: caching every level a cold walk passes let a walk
+  // of 8 or more levels evict its own endpoints. Sequential access keeps
+  // the parent in cache, so steady-state commits and reads resolve in
+  // O(delta); a cold open of a long keep-all chain pays one O(chain) walk,
+  // same as the committed-epoch cache's first fill. Overlay shares
+  // unchanged List instances structurally, so the cached maps cost
+  // O(distinct lists), not O(entries x levels).
   private val resolveCache =
     new java.util.LinkedHashMap[Long, Map[String, List[DataFile]]](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -674,10 +676,8 @@ class IceliteTable private (val root: Path) {
     var acc =
       if (stack.head.full || w.end() < 0) Map.empty[String, List[DataFile]]
       else resolveCache.get(w.end())
-    for (sn <- stack) {
-      acc = acc ++ sn.bucketDelta
-      resolveCache.put(sn.snapshotId, acc)
-    }
+    for (sn <- stack) acc = acc ++ sn.bucketDelta
+    resolveCache.put(s.snapshotId, acc)
     acc
   }
 

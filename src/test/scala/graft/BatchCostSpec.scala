@@ -1,13 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Using
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{ExecutorMetricsWarm, ListenerBusDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, StageInfo}
 
@@ -17,9 +23,9 @@ import graft.synth.Synth
 
 /** A batch's fixed Spark cost follows its data and the session's slots, not
   * the table's bucket count: the write runs in at most
-  * `spark.sql.shuffle.partitions` tasks, reads plan from the manifest's file
-  * list without a listing job, and key bloom filters are sized for the keys
-  * a file can hold. */
+  * `spark.sql.shuffle.partitions` tasks and starts no process per file,
+  * reads plan from the manifest's file list without a listing job, and key
+  * bloom filters are sized for the keys a file can hold. */
 class BatchCostSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -57,6 +63,43 @@ class BatchCostSpec extends AnyFunSuite {
     val files = engine.table.bucketFilesOf(engine.table.currentSnapshot.get)
     assert(files.size === 64)
     assert(files.values.forall(_.size == 1), s"files per bucket: ${files.values.map(_.size)}")
+  }
+
+  /** Operating-system processes this JVM started while `body` ran (JFR). */
+  def processStarts(body: => Unit): Seq[String] = {
+    val file = Paths.get(SparkTestBase.tmpDir("jfr"), "process-starts.jfr")
+    Using.resource(new Recording()) { rec =>
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(file)
+    }
+    RecordingFile.readAllEvents(file).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command"))
+  }
+
+  test("a 64-bucket batch starts no operating-system process") {
+    val engine = newEngine(EngineConf(buckets = 64))
+    val batches = Synth.batches(Synth.events(spark, 8000, seed = 64), 2, 4000)
+    ExecutorMetricsWarm()
+    val started = processStarts(batches.zipWithIndex.foreach { case (b, i) =>
+      engine.applyBatch(i, b)
+    })
+    assert(started.size === 0, s"e.g. ${started.take(3).mkString("; ")}")
+    // the modes Hadoop's local file system gives under the session's umask
+    val umask = FsPermission.getUMask(spark.sessionState.newHadoopConf())
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toString
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toString
+    def mode(p: java.nio.file.Path) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val files = engine.table.currentFiles().map(Paths.get(_))
+    assert(files.size === 64)
+    files.foreach { f =>
+      assert(mode(f) === fileMode, s"mode of $f")
+      assert(f.getParent.getFileName.toString.startsWith("__b="))
+      assert(mode(f.getParent) === dirMode, s"mode of ${f.getParent}")
+    }
   }
 
   test("reads over more than 32 files plan from the manifest: no listing job") {

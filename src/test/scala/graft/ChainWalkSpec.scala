@@ -75,6 +75,13 @@ class ChainWalkSpec extends AnyFunSuite {
     assert(r(1) - r(0) <= 2 * 8, s"changelogSince read $r manifests at W = 8, 16")
   }
 
+  test("a warm fileGroupsAddedSince reads its window walk and two endpoints") {
+    val ids = main.table.snapshotChain.map(_.snapshotId)
+    val since = ids(ids.size - 1 - 8)
+    val r = warmReads(main)(main.table.fileGroupsAddedSince(since))
+    assert(r <= 12, s"fileGroupsAddedSince read $r manifests at W = 8")
+  }
+
   test("publishing a lane reads the same count on a short and a long main") {
     def publishReads(e: CdcEngine): Long = {
       e.createBranch("lane")
