@@ -81,7 +81,9 @@ case class EngineConf(
     // are collected). Point lookups use it to open only the delta files
     // that may contain the key: O(1) file opens per lookup instead of
     // O(delta files in the bucket). Bitmaps are dropped when a bucket's
-    // batch-key load would push the false-positive rate past 25%.
+    // batch-key load would push the false-positive rate past 25%. 0 or a
+    // positive multiple of 8; a lookup tests each bitmap at the width it
+    // was written with, so engines of different widths share a table.
     keyFpBits: Int = 4096,
     // payload columns whose per-file [min, max] bounds are harvested into
     // the manifest whenever MERGED (final-state) files are written — the
@@ -137,7 +139,11 @@ case class EngineConf(
     // garbage must be VISIBLE, not silently thinner; the quarantine rides
     // the batch's own Spark job budget (one extra filtered write, only
     // when enabled) and counts come from parquet footers driver-side.
-    dlqDir: String = "")
+    dlqDir: String = "") {
+  // fpBitmap packs the bits into whole bytes
+  require(keyFpBits == 0 || keyFpBits > 0 && keyFpBits % 8 == 0,
+    s"keyFpBits must be 0 or a positive multiple of 8, got $keyFpBits")
+}
 
 object EngineConf {
 
@@ -220,9 +226,10 @@ class CdcEngine(
 
   /** Layout guard re-checked on every bucket-dependent operation: a
     * rebucket (possibly by another engine instance) invalidates this
-    * instance's pruning and write partitioning. */
-  private def checkLayout(): Unit = {
-    val cur = table.currentBuckets
+    * instance's pruning and write partitioning. A head read passes the
+    * head it resolved, so the check and the read see one snapshot. */
+  private def checkLayout(head: Option[Icelite.Snapshot] = table.currentSnapshot): Unit = {
+    val cur = head.fold(table.meta.buckets)(table.effectiveBuckets)
     require(cur == conf.buckets,
       s"table ${table.root} is bucketed at $cur but this engine was built " +
         s"for ${conf.buckets} (rebucketed?); construct a new CdcEngine for the current layout")
@@ -288,20 +295,23 @@ class CdcEngine(
       f.name.startsWith(ChangeEvent.SourcePrefix)))
   }
 
-  /** Payload fields of a (cell-form) table schema. */
-  private def payloadOfSchema(schema: Option[StructType]): StructType =
-    StructType(schema.map(_.fields).getOrElse(Array.empty[StructField]).collect {
+  /** The snapshot a read plans from: `id`, or the head when None (None
+    * for an empty table). A read resolves it once and takes its payload
+    * schema, its file lists and (at the head) its layout check from it. */
+  private def snapshotAt(id: Option[Long]): Option[Icelite.Snapshot] =
+    id.fold(table.currentSnapshot)(i => Some(table.snapshot(i)))
+
+  /** Snapshot `id`; None when `id` is negative (no snapshot). */
+  private def snapshotOf(id: Long): Option[Icelite.Snapshot] =
+    if (id >= 0) Some(table.snapshot(id)) else None
+
+  /** Payload fields of the (cell-form) schema `snap` pins; none for an
+    * empty table. */
+  private def payloadAt(snap: Option[Icelite.Snapshot]): StructType =
+    StructType(snap.fold(Array.empty[StructField])(s => table.schema(s.schemaId).fields).collect {
       case f if !keyCols.contains(f.name) && f.name != OpCell && f.name != TsCell =>
         StructField(f.name, f.dataType.asInstanceOf[StructType]("v").dataType, nullable = true)
     })
-
-  /** Payload fields recorded in the table's current (cell-form) schema. */
-  private def tablePayload: StructType = payloadOfSchema(table.currentSchema)
-
-  /** Payload fields of the schema pinned by a snapshot (None = the head). */
-  private def payloadAt(snapshotId: Option[Long]): StructType =
-    snapshotId.fold(tablePayload)(id =>
-      payloadOfSchema(Some(table.schema(table.snapshot(id).schemaId))))
 
   // ---------------------------------------------------------------- cells
 
@@ -363,21 +373,21 @@ class CdcEngine(
       .select((keyColumns ++ envelope ++ cells): _*)
   }
 
-  /** Read (sid -> files) groups in cell form, each group aligned
-    * (cast/null-fill) to the target payload schema — files are grouped by
-    * writer schema id so widened columns are up-cast explicitly and old
-    * data files are never rewritten on schema evolution. The scan is built
-    * from the listed files alone (see [[ManifestScan]]). */
-  private def readAligned(groups: Map[Int, Seq[String]], targetPayload: StructType): DataFrame = {
+  /** Cell-form rows of `files`, aligned (cast/null-fill) to the target
+    * payload schema: one scan per writer schema, so widened columns are
+    * up-cast explicitly and old data files are never rewritten on schema
+    * evolution. The scan is built from the listed files alone (see
+    * [[ManifestScan]]). */
+  private def readAligned(files: Iterable[Icelite.DataFile], targetPayload: StructType): DataFrame = {
     val target = stateSchema(targetPayload)
-    val aligned = groups.toSeq.map { case (sid, files) =>
+    val aligned = table.fileGroups(files).toSeq.map { case (sid, paths) =>
       val written = table.schema(sid)
       val writtenNames = written.fieldNames.toSet
       val cols = target.fields.toSeq.map { f =>
         if (writtenNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }
-      ManifestScan.parquet(spark, written, files).select(cols: _*)
+      ManifestScan.parquet(spark, written, paths).select(cols: _*)
     }
     aligned.reduceOption(_ unionByName _).getOrElse {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
@@ -402,45 +412,34 @@ class CdcEngine(
     else flat
   }
 
-  /** Read current state (cell form) for some buckets, aligned to the target
-    * payload schema.
-    *
-    * Merge-on-read tables: bucket file lists hold per-batch DELTA files, so
-    * the visible state is the LWW cell merge across them — the same ACI
-    * reduction the write path uses, applied at read time (Hudi/Iceberg MOR
-    * semantics). The merge (a shuffle) is paid ONLY for buckets that
-    * actually hold more than one file: a single-file bucket is the output
-    * of one batch's reduction or of compaction, both key-unique, so it is
-    * read raw — after compaction a merge-on-read table reads exactly as
-    * cheaply as copy-on-write. A multi-file bucket whose files are ALL
-    * `merged` (a compaction split by maxFileRows) is equally key-disjoint
-    * and reads raw too; any un-merged (delta) file forces the LWW merge. */
-  private def readStateCells(buckets: Option[Set[Int]], targetPayload: StructType,
-      asOfSnapshot: Option[Long] = None): DataFrame = {
-    val snapOpt = asOfSnapshot.map(id => Some(table.snapshot(id)))
-      .getOrElse(table.currentSnapshot)
-    def groupsFor(sel: Option[Set[Int]]) = (asOfSnapshot, sel) match {
-      case (Some(id), s) => table.fileGroupsAt(id, s)
-      case (None, s) => table.currentFileGroups(s)
+  /** The one state reader: cell-form state of some buckets of ONE snapshot,
+    * each given by its file list (possibly pruned), aligned to the target
+    * payload schema. It alone decides how a bucket is read, by the
+    * final-state rule ([[Icelite.DataFile]]): final buckets as written,
+    * every other bucket through the LWW merge — the same ACI reduction the
+    * write path uses, applied at read time (Hudi/Iceberg MOR semantics).
+    * Each class is one scan per writer schema. `keyFilter` lands below the
+    * merge, on the parquet scan. */
+  private def readCells(buckets: Iterable[Seq[Icelite.DataFile]], targetPayload: StructType,
+      keyFilter: Option[Column] = None): DataFrame = {
+    val meta = table.meta
+    val (raw, merge) = buckets.partition(meta.finalState)
+    def scan(files: Iterable[Icelite.DataFile]): DataFrame = {
+      val df = readAligned(files, targetPayload)
+      keyFilter.fold(df)(df.filter)
     }
-    if (!table.meta.mergeOnRead) return readAligned(groupsFor(buckets), targetPayload)
-    val snapFiles = snapOpt.map(table.bucketFilesOf).getOrElse(Map.empty)
-    val multiFile: Set[Int] = snapFiles.collect {
-      case (b, files) if files.size > 1 && !files.forall(_.merged) &&
-        buckets.forall(_.contains(b.toInt)) => b.toInt
-    }.toSet
-    val singleSel = buckets match {
-      case Some(bs) => Some(bs -- multiFile)
-      case None => Some(snapFiles.keySet.map(_.toInt) -- multiFile)
-    }
-    val singles = readAligned(groupsFor(singleSel), targetPayload)
-    if (multiFile.isEmpty) singles
+    val mergeFiles = merge.flatten
+    if (mergeFiles.isEmpty) scan(raw.flatten)
     else {
-      val merged = lwwAgg(readAligned(groupsFor(Some(multiFile)), targetPayload),
-        Seq(OpCell, TsCell) ++ targetPayload.fieldNames)
-      singles.unionByName(merged)
+      val merged = lwwAgg(scan(mergeFiles), targetPayload)
+      if (raw.forall(_.isEmpty)) merged else scan(raw.flatten).unionByName(merged)
     }
   }
+
+  /** `snap`'s file list of each bucket in `buckets` (None = all). */
+  private def bucketsAt(snap: Option[Icelite.Snapshot],
+      buckets: Option[Set[Int]]): Iterable[List[Icelite.DataFile]] =
+    snap.fold(Iterable.empty[List[Icelite.DataFile]])(table.bucketLists(_, buckets))
 
   /** The ACI last-writer-wins reduction: per key, per cell column, keep the
     * struct with the greatest (l, s) — null cells (column absent = carry
@@ -455,10 +454,14 @@ class CdcEngine(
     * before they reach one reducer), no per-row lookups. (max_by was tried:
     * same SortAggregate, with a second buffer column for the ordering —
     * strictly fatter than max(struct).) */
-  private def lwwAgg(df: DataFrame, cellCols: Seq[String]): DataFrame = {
-    val aggs = cellCols.map(c => max(col(c)).as(c))
+  private def lwwAgg(df: DataFrame, payload: StructType): DataFrame = {
+    val aggs = cellCols(payload).map(c => max(col(c)).as(c))
     df.groupBy(keyColumns: _*).agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The cell columns of a state row: the envelope cells, then the payload. */
+  private def cellCols(payload: StructType): Seq[String] =
+    Seq(OpCell, TsCell) ++ payload.fieldNames
 
   // ---------------------------------------------------------------- apply
 
@@ -584,9 +587,6 @@ class CdcEngine(
     val t0 = System.nanoTime()
     def ms(since: Long): Long = (System.nanoTime() - since) / 1000000
 
-    // the state (and schema) a branch commit merges against is the BRANCH
-    // head's, not main's — the lane may have evolved the schema on its own
-    val asOfHead: Option[Long] = branch.map(table.branchHead)
     // multi-writer CAS pin (main-chain copy-on-write only): the snapshot
     // this merge reads is the snapshot the commit must still be on top of —
     // committing a merge computed against snapshot S onto a parent != S
@@ -594,8 +594,11 @@ class CdcEngine(
     // buckets. The conflict raises and applyBatchImpl re-merges fresh.
     val observedParent: Long =
       if (branch.isEmpty) table.currentSnapshotId else -2L
-    val targetPayload = SchemaEvolve.reconcile(payloadAt(asOfHead), payloadOf(batchRaw))
-    val cellCols = Seq(OpCell, TsCell) ++ targetPayload.fieldNames
+    // the state (and schema) a branch commit merges against is the BRANCH
+    // head's, not main's — the lane may have evolved the schema on its own
+    val baseId = branch.fold(observedParent)(table.branchHead)
+    val base = snapshotOf(baseId)
+    val targetPayload = SchemaEvolve.reconcile(payloadAt(base), payloadOf(batchRaw))
 
     // Per-bucket source-offset lineage straight off the raw batch (one cheap
     // aggregation; also yields the affected-bucket set for manifest pruning
@@ -667,17 +670,15 @@ class CdcEngine(
     // result as delta files (write work O(batch rows) — the sparse-batch
     // write-amplification fix); the cross-batch merge happens at read time.
     val batchCells = batchToCells(batchRaw, targetPayload, fallible, applyPred)
-    val readAt = asOfHead.orElse(if (observedParent >= 0) Some(observedParent) else None)
     val merged =
-      if (mor) lwwAgg(batchCells, cellCols)
+      if (mor) lwwAgg(batchCells, targetPayload)
       else lwwAgg(batchCells.unionByName(
-        readStateCells(Some(affected), targetPayload, asOfSnapshot = readAt)), cellCols)
+        readCells(bucketsAt(base, Some(affected)), targetPayload)), targetPayload)
     // distinct keys of a bucket's new file: at most its applied events,
     // plus (copy-on-write) the rows it already holds
     val stateFiles: Map[String, List[Icelite.DataFile]] =
       if (mor) Map.empty
-      else readAt.fold(Map.empty[String, List[Icelite.DataFile]])(id =>
-        table.bucketFilesOf(table.snapshot(id)))
+      else base.fold(Map.empty[String, List[Icelite.DataFile]])(table.bucketFilesOf)
     val keysPerFile = appliedRows.iterator.map { r =>
       r.getLong(3) + stateFiles.getOrElse(r.getInt(0).toString, Nil).map(_.rows).sum
     }.max
@@ -774,17 +775,15 @@ class CdcEngine(
     // list, its schema, and the metadata-aggregate tag all describe the
     // same table version — a held DataFrame must not answer count(*) from
     // a snapshot newer than the files it scans (None = empty table).
-    val pinned = asOfSnapshot.orElse {
-      val id = table.currentSnapshotId
-      if (id >= 0) Some(id) else None
-    }
-    val payload = payloadAt(pinned)
-    val out = visibleRows(readStateCells(buckets, payload, pinned), payload)
+    val snap = snapshotAt(asOfSnapshot)
+    val payload = payloadAt(snap)
+    val out = visibleRows(readCells(bucketsAt(snap, buckets), payload), payload)
     // full-table reads advertise themselves to the metadata-only aggregate
     // rewrite (bucket-pruned reads don't: manifest sums cover ALL buckets);
     // the tag carries the PINNED snapshot, not "head"
     if (buckets.isEmpty)
-      out.queryExecution.analyzed.setTagValue(CdcEngine.MetaScanTag, (this, pinned))
+      out.queryExecution.analyzed.setTagValue(CdcEngine.MetaScanTag,
+        (this, snap.map(_.snapshotId)))
     out
   }
 
@@ -794,8 +793,10 @@ class CdcEngine(
   def inspect: Inspect = new Inspect(spark, table)
 
   /** Raw cell-form state (for tests / debugging). */
-  def currentCells(buckets: Option[Set[Int]] = None): DataFrame =
-    readStateCells(buckets, tablePayload)
+  def currentCells(buckets: Option[Set[Int]] = None): DataFrame = {
+    val head = table.currentSnapshot
+    readCells(bucketsAt(head, buckets), payloadAt(head))
+  }
 
   // ------------------------------------------- metadata-only aggregates
 
@@ -803,32 +804,31 @@ class CdcEngine(
     * metadata alone — no file is opened, no Spark job runs (the Iceberg
     * `SupportsPushDownAggregates` count analog; at 100 TB this turns
     * `SELECT count(*)` from a full scan into a metadata read). Answerable
-    * — `Some(n)` — only when every live file holds merged state with a
-    * footer-decided live-row count ([[Icelite.DataFile.liveRows]]); a
-    * merge-on-read table with pending deltas, or a file whose row groups
+    * — `Some(n)` — only when every bucket holds final state (the rule on
+    * [[Icelite.DataFile]]) in files with a footer-decided live-row count
+    * ([[Icelite.DataFile.liveRows]]); a merge-on-read bucket with pending
+    * deltas over a base or another delta, or a file whose row groups
     * interleave tombstones with live rows, returns None and the caller
     * falls back to the scan. `Some(0)` for an empty table. */
-  def metaCount(asOfSnapshot: Long = -1L): Option[Long] = {
-    val snap = if (asOfSnapshot >= 0) Some(table.snapshot(asOfSnapshot))
-      else table.currentSnapshot
-    snap match {
+  def metaCount(asOfSnapshot: Long = -1L): Option[Long] =
+    snapshotAt(Some(asOfSnapshot).filter(_ >= 0)) match {
       case None => Some(0L)
       case Some(s) =>
-        val allMerged = !table.meta.mergeOnRead // COW files are merged state
+        val meta = table.meta
         var sum = 0L
-        val ok = table.bucketFilesOf(s).valuesIterator.forall(_.forall { f =>
-          val usable = (allMerged || f.merged) && f.liveRows >= 0L
-          if (usable) sum += f.liveRows
-          usable
-        })
+        val ok = table.bucketFilesOf(s).valuesIterator.forall(fs =>
+          meta.finalState(fs) && fs.forall { f =>
+            if (f.liveRows >= 0L) sum += f.liveRows
+            f.liveRows >= 0L
+          })
         if (ok) Some(sum) else None
     }
-  }
 
   /** Exact global (min, max) of payload column `column` over the VISIBLE
     * state at `asOfSnapshot` (-1 = head), from manifest column stats alone
-    * (Iceberg's lower/upper_bounds). Answerable only when every live file
-    * is merged state carrying bounds for the column AND is tombstone-free
+    * (Iceberg's lower/upper_bounds). Answerable only when every bucket
+    * holds final state in files carrying bounds for the column (only
+    * merged files harvest them) AND every file is tombstone-free
     * (`liveRows == rows`) — a retained tombstone's preimage values sit in
     * the file's footer stats but are invisible to readers, so any
     * tombstone poisons the metadata answer. `Some((None, None))` = the
@@ -836,29 +836,29 @@ class CdcEngine(
     * external types `currentState` exposes. */
   def metaBounds(column: String, asOfSnapshot: Long = -1L)
       : Option[(Option[Any], Option[Any])] = {
-    val snap = if (asOfSnapshot >= 0) Some(table.snapshot(asOfSnapshot))
-      else table.currentSnapshot
+    val snap = snapshotAt(Some(asOfSnapshot).filter(_ >= 0))
     snap match {
       case None => Some((None, None))
       case Some(s) =>
-        val payload = payloadAt(Some(s.snapshotId))
+        val payload = payloadAt(snap)
         val field = payload.fields.find(_.name == column).getOrElse(return None)
         val dt = field.dataType
         if (!StatsSkip.supported(dt)) return None
-        val allMerged = !table.meta.mergeOnRead
+        val meta = table.meta
         var lo: Option[String] = None
         var hi: Option[String] = None
-        val ok = table.bucketFilesOf(s).valuesIterator.forall(_.forall { f =>
-          if (!(allMerged || f.merged) || f.liveRows != f.rows) false
-          else f.colStats.flatMap(_.get(column)) match {
-            case Some(mn :: mx :: Nil) =>
-              if (lo.forall(StatsSkip.cmp(dt, mn, _) < 0)) lo = Some(mn)
-              if (hi.forall(StatsSkip.cmp(dt, mx, _) > 0)) hi = Some(mx)
-              true
-            case Some(Nil) => true // column all-null in this file
-            case _ => false // no stats harvested: unknown
-          }
-        })
+        val ok = table.bucketFilesOf(s).valuesIterator.forall(fs =>
+          meta.finalState(fs) && fs.forall { f =>
+            if (f.liveRows != f.rows) false
+            else f.colStats.flatMap(_.get(column)) match {
+              case Some(mn :: mx :: Nil) =>
+                if (lo.forall(StatsSkip.cmp(dt, mn, _) < 0)) lo = Some(mn)
+                if (hi.forall(StatsSkip.cmp(dt, mx, _) > 0)) hi = Some(mx)
+                true
+              case Some(Nil) => true // column all-null in this file
+              case _ => false // no stats harvested: unknown
+            }
+          })
         if (ok) Some((lo.map(StatsSkip.decode(dt, _)), hi.map(StatsSkip.decode(dt, _))))
         else None
     }
@@ -1065,8 +1065,10 @@ class CdcEngine(
     * named the window end (a reversed window is then an error). */
   private[engine] def changesIn(w: Icelite.ChainWindow, buckets: Option[Set[Int]],
       explicitTo: Boolean): DataFrame = {
-    checkLayout()
     val (sinceSnapshotId, toId) = (w.since, w.to)
+    val toSnap = snapshotOf(toId)
+    // a window that ends at the head it read checks the layout there
+    if (explicitTo) checkLayout() else checkLayout(toSnap)
     // a reversed window (live `since` that is NOT an ancestor of `to`)
     // would silently diff in the wrong direction — fail loudly instead;
     // an EXPIRED `since` stays legal (conservative full redelivery below)
@@ -1077,14 +1079,13 @@ class CdcEngine(
     val (crosses, bsel, unbounded) = diffPruning(w, buckets)
     // payload schema is the one pinned by the window END, not the current
     // one — a windowed feed to a pre-evolution snapshot has no later columns
-    val payload = payloadAt(Some(toId).filter(_ >= 0))
-    val cellCols = Seq(OpCell, TsCell) ++ payload.fieldNames
-    val cur = readStateCells(bsel, payload,
-      if (toId >= 0) Some(toId) else None)
+    val payload = payloadAt(toSnap)
+    val cur = readCells(bucketsAt(toSnap, bsel), payload)
     val changed =
       if (sinceSnapshotId < 0 || (unbounded && !crosses)) cur
       else {
-        val old = readStateCells(bsel, payload, Some(sinceSnapshotId))
+        val sinceSnap = Some(table.snapshot(sinceSnapshotId))
+        val old = readCells(bucketsAt(sinceSnap, bsel), payload)
         // A restore (or tombstone purge) in the window suspends two
         // invariants of normal CDC operation: changed keys need NOT appear
         // in any added file (a restore reverts values while adding none; a
@@ -1101,17 +1102,17 @@ class CdcEngine(
         // applied on copy-on-write, where added files are whole rewritten
         // buckets and the semi-join would prune nothing.)
         val (curSel, oldSel) =
-          if (!table.meta.mergeOnRead || removes || crosses) (cur, old)
+          if (removes || crosses || !table.meta.mergeOnRead) (cur, old)
           else {
             // a bounded, non-crossing window reached `since`: the diff of
             // the two endpoints' file sets is exactly the added files
-            val deltaKeys = readAligned(table.fileGroupsAdded(sinceSnapshotId, toId, bsel),
+            val deltaKeys = readAligned(table.filesAdded(sinceSnap, toSnap.get, bsel),
               payload).select(keyColumns: _*).distinct()
             (cur.join(deltaKeys, keyCols, "left_semi"),
               old.join(deltaKeys, keyCols, "left_semi"))
           }
         val cond = keyCols.map(k => col(s"c.$k") === col(s"o.$k")).reduce(_ && _) &&
-          cellCols.map(c => col(s"c.$c") <=> col(s"o.$c")).reduce(_ && _)
+          cellCols(payload).map(c => col(s"c.$c") <=> col(s"o.$c")).reduce(_ && _)
         val diff = curSel.as("c").join(oldSel.as("o"), cond, "left_anti")
         if (!removes) diff
         else {
@@ -1128,7 +1129,7 @@ class CdcEngine(
     if (crosses && buckets.nonEmpty) {
       // the caller's bucket restriction, re-expressed as a row predicate in
       // the window-END layout (consistent with the payload schema pinning)
-      val toBuckets = table.effectiveBuckets(table.snapshot(toId))
+      val toBuckets = table.effectiveBuckets(toSnap.get)
       out.filter(pmod(xxhash64(keyColumns: _*), lit(toBuckets)).cast(IntegerType)
         .isin(buckets.get.toSeq: _*))
     } else out
@@ -1163,7 +1164,7 @@ class CdcEngine(
     val toId = if (toSnapshotId >= 0) toSnapshotId else table.currentSnapshotId
     val w = table.window(sinceSnapshotId, toId)
     val post = changesIn(w, buckets, explicitTo = toId >= 0)
-    val payload = payloadAt(Some(toId).filter(_ >= 0))
+    val payload = payloadAt(snapshotOf(toId))
     val pcols = payload.fieldNames.toSeq
     val (crosses, bsel, unbounded) = diffPruning(w, buckets)
     if (sinceSnapshotId < 0 || (unbounded && !crosses))
@@ -1172,7 +1173,7 @@ class CdcEngine(
           col("_lsn").as("_change_lsn"), col("_ts"))): _*)
     // preimages: rows visible at `since`, bucket-pruned like the diff's own
     // old side; the left join below keeps only the diff's keys
-    val oldCells = readStateCells(bsel, payload, Some(sinceSnapshotId))
+    val oldCells = readCells(bucketsAt(Some(table.snapshot(sinceSnapshotId)), bsel), payload)
     val preVis = visibleRows(oldCells, payload)
     val preR = preVis.select((keyColumns ++ pcols.map(c => col(c).as(s"__pre_$c")) :+
       lit(true).as("__pre")): _*)
@@ -1201,23 +1202,28 @@ class CdcEngine(
     * range); the residual per-row predicate lands on the parquet `_op.l`
     * column for row-group pruning. */
   def scanLsnRange(lo: Long, hi: Long, buckets: Option[Set[Int]] = None): DataFrame = {
-    checkLayout()
-    val payload = tablePayload
-    val unioned = readAligned(table.currentFileGroups(buckets, lsnRange = Some((lo, hi))), payload)
-    val cellCols = Seq(OpCell, TsCell) ++ payload.fieldNames
-    val merged = if (table.meta.mergeOnRead) lwwAgg(unioned, cellCols) else unioned
-    flattenCells(merged.filter(col(s"$OpCell.l").between(lo, hi)), payload)
+    val head = table.currentSnapshot
+    checkLayout(head)
+    val payload = payloadAt(head)
+    val cells = readCells(lsnRangeFiles(head, lo, hi, buckets), payload)
+    flattenCells(cells.filter(col(s"$OpCell.l").between(lo, hi)), payload)
   }
+
+  /** Each selected bucket's files at `snap` whose LSN range meets [lo, hi]. */
+  private def lsnRangeFiles(snap: Option[Icelite.Snapshot], lo: Long, hi: Long,
+      buckets: Option[Set[Int]]): Iterable[List[Icelite.DataFile]] =
+    bucketsAt(snap, buckets).map(_.filter(f => f.maxLsn >= lo && f.minLsn <= hi))
 
   /** Data files the current snapshot would read for an LSN-range scan after
     * manifest-level stats pruning (exposed for tests/inspection). */
   def prunedFilesForLsnRange(lo: Long, hi: Long): Seq[String] =
-    table.currentFileGroups(None, lsnRange = Some((lo, hi))).values.flatten.toSeq
+    table.fileGroups(lsnRangeFiles(table.currentSnapshot, lo, hi, None).flatten)
+      .values.flatten.toSeq
 
   /** How scanRange would plan a predicate: total data files in the
     * snapshot, files skipped by the harvested bounds, and buckets read
-    * whole because a live delta file makes payload pruning unsound there
-    * (see [[scanRange]]). Metadata-only — no Spark job. */
+    * whole because the final-state rule sends them to the LWW merge (see
+    * [[scanRange]]). Metadata-only — no Spark job. */
   case class ScanPlan(filesTotal: Int, filesSkipped: Int, unprunableBuckets: Int)
 
   /** Manifest-level stats-pruned scan (Iceberg scan planning on
@@ -1226,12 +1232,9 @@ class CdcEngine(
     * optional; pass the same value twice for equality), opening only the
     * data files whose per-file bounds (`EngineConf.statsCols`, harvested
     * at merged-file write time) can satisfy the predicate. Sound by the
-    * per-bucket rule documented on `DataFile.merged`: a file is skippable
-    * only when every file in its bucket holds merged final state — on a
-    * merge-on-read bucket with live deltas a matching key's row is
-    * assembled from cells ACROSS files (carry-forward), so skipping any
-    * one of them could null out unrelated columns of a surviving row;
-    * such buckets are read whole (pruning resumes after compaction).
+    * final-state rule documented on `Icelite.DataFile`: only a final
+    * bucket's files are skipped; any other bucket is read whole (pruning
+    * resumes after compaction).
     * Tight when compaction sorted by the column: `compact(sortBy,
     * maxFileRows)` makes per-file ranges disjoint, so selectivity
     * translates directly into files never opened. */
@@ -1248,37 +1251,36 @@ class CdcEngine(
   def scanWhere(preds: Seq[(String, Option[Any], Option[Any])],
       buckets: Option[Set[Int]] = None,
       asOfSnapshot: Option[Long] = None): DataFrame = {
-    checkLayout()
-    val payload = payloadAt(asOfSnapshot)
-    val (groups, mergeBuckets, _) = planScan(preds, buckets, payload, asOfSnapshot)
-    val pruned = readAligned(groups, payload) // merged files: final state, key-disjoint
-    val cells =
-      if (mergeBuckets.isEmpty) pruned
-      else pruned.unionByName(
-        readStateCells(Some(mergeBuckets), payload, asOfSnapshot))
+    val snap = snapshotAt(asOfSnapshot)
+    checkLayout(if (asOfSnapshot.isEmpty) snap else table.currentSnapshot)
+    val payload = payloadAt(snap)
+    val (files, _) = planScan(preds, bucketsAt(snap, buckets), payload)
     val resid = preds.flatMap { case (column, lo, hi) =>
       val dt = payload.fields.find(_.name == column).get.dataType
       Seq(lo.map(v => col(column) >= lit(v).cast(dt)),
         hi.map(v => col(column) <= lit(v).cast(dt))).flatten
     }.reduceOption(_ && _).getOrElse(lit(true))
-    visibleRows(cells, payload).filter(resid)
+    visibleRows(readCells(files, payload), payload).filter(resid)
   }
 
   /** The [[ScanPlan]] scanRange would use (for tests and observability). */
   def scanRangePlan(column: String, lo: Option[Any], hi: Option[Any],
       buckets: Option[Set[Int]] = None): ScanPlan =
-    planScan(Seq((column, lo, hi)), buckets, tablePayload, None)._3
+    scanWherePlan(Seq((column, lo, hi)), buckets)
 
   /** The [[ScanPlan]] scanWhere would use. */
   def scanWherePlan(preds: Seq[(String, Option[Any], Option[Any])],
       buckets: Option[Set[Int]] = None,
-      asOfSnapshot: Option[Long] = None): ScanPlan =
-    planScan(preds, buckets, payloadAt(asOfSnapshot), asOfSnapshot)._3
+      asOfSnapshot: Option[Long] = None): ScanPlan = {
+    val snap = snapshotAt(asOfSnapshot)
+    planScan(preds, bucketsAt(snap, buckets), payloadAt(snap))._2
+  }
 
+  /** The bucket file lists scanWhere reads: a final bucket's files minus
+    * those whose bounds rule the predicates out, any other bucket whole. */
   private def planScan(preds: Seq[(String, Option[Any], Option[Any])],
-      buckets: Option[Set[Int]], payload: StructType,
-      asOfSnapshot: Option[Long])
-      : (Map[Int, Seq[String]], Set[Int], ScanPlan) = {
+      buckets: Iterable[List[Icelite.DataFile]], payload: StructType)
+      : (Iterable[List[Icelite.DataFile]], ScanPlan) = {
     require(preds.nonEmpty, "scanWhere: at least one predicate")
     // (column, type, canonical lo, canonical hi)
     val canon = preds.map { case (column, lo, hi) =>
@@ -1287,35 +1289,19 @@ class CdcEngine(
       val dt = field.dataType
       (column, dt, lo.map(v => StatsSkip.canon(dt, v)), hi.map(v => StatsSkip.canon(dt, v)))
     }
-    val snap = asOfSnapshot.map(id => Some(table.snapshot(id)))
-      .getOrElse(table.currentSnapshot).getOrElse(
-        return (Map.empty, Set.empty, ScanPlan(0, 0, 0)))
-    val byBucket = table.bucketFilesOf(snap).iterator
-      .filter { case (b, _) => buckets.forall(_.contains(b.toInt)) }.toSeq
-    // A COW table's files are all merged state by construction (every
-    // commit rewrites whole buckets), including files from manifests
-    // written before the `merged` flag existed.
-    val allMerged = !table.meta.mergeOnRead
-    var skipped = 0
-    val kept = scala.collection.mutable.ListBuffer.empty[Icelite.DataFile]
-    val mergeBuckets = scala.collection.mutable.Set.empty[Int]
-    byBucket.foreach { case (b, files) =>
-      if (allMerged || files.forall(_.merged)) {
-        files.foreach { f =>
-          val overlap = canon.forall { case (column, dt, loC, hiC) =>
-            f.colStats.flatMap(_.get(column)) match {
-              case Some(bounds) => StatsSkip.overlaps(dt, bounds, loC, hiC)
-              case None => true // no stats for this column: cannot rule out
-            }
-          }
-          if (overlap) kept += f else skipped += 1
+    val meta = table.meta
+    val (prunable, whole) = buckets.partition(meta.finalState)
+    val kept = prunable.map(_.filter { f =>
+      canon.forall { case (column, dt, loC, hiC) =>
+        f.colStats.flatMap(_.get(column)) match {
+          case Some(bounds) => StatsSkip.overlaps(dt, bounds, loC, hiC)
+          case None => true // no stats for this column: cannot rule out
         }
-      } else mergeBuckets += b.toInt
-    }
-    val groups = kept.toSeq.groupBy(_.schemaId)
-      .map { case (sid, fs) => sid -> fs.map(f => table.root.resolve(f.path).toString) }
-    val total = byBucket.iterator.map(_._2.size).sum
-    (groups, mergeBuckets.toSet, ScanPlan(total, skipped, mergeBuckets.size))
+      }
+    })
+    val skipped = prunable.iterator.map(_.size).sum - kept.iterator.map(_.size).sum
+    val total = buckets.iterator.map(_.size).sum
+    (kept ++ whole, ScanPlan(total, skipped, whole.size))
   }
 
   /** Incremental APPEND feed: the cell versions physically written after
@@ -1333,12 +1319,16 @@ class CdcEngine(
     * up-cast) rather than pinned to the window end. */
   def appendedSince(sinceSnapshotId: Long, buckets: Option[Set[Int]] = None,
       toSnapshotId: Long = -1L): DataFrame = {
-    checkLayout() // caller-supplied bucket ids are meaningless across a rebucket
-    val payload = tablePayload
-    val groups = table.fileGroupsAddedSince(sinceSnapshotId, buckets, toSnapshotId)
-      .getOrElse(table.currentFileGroups(buckets))
-    val merged = lwwAgg(readAligned(groups, payload), Seq(OpCell, TsCell) ++ payload.fieldNames)
-    flattenCells(merged, payload)
+    val head = table.currentSnapshot
+    checkLayout(head) // caller-supplied bucket ids are meaningless across a rebucket
+    val payload = payloadAt(head)
+    val files = table.filesAddedSince(sinceSnapshotId, buckets, toSnapshotId)
+      .getOrElse(bucketsAt(head, buckets).flatten)
+    // merged unconditionally rather than through readCells: the added files
+    // are a manifest diff over a window, not one snapshot's bucket lists,
+    // so the final-state rule does not judge them; where they happen to be
+    // key-unique the merge changes no row
+    flattenCells(lwwAgg(readAligned(files, payload), payload), payload)
   }
 
   /** Files `appendedSince(sinceSnapshotId)` would read (tests/inspection). */
@@ -1355,57 +1345,42 @@ class CdcEngine(
     * provably misses the key (O(1) file opens per lookup instead of O(delta
     * files); see `EngineConf.keyFpBits`), and the equality predicates push
     * down to the parquet scan where the key-column bloom filters skip
-    * non-matching row groups inside the surviving files. The LWW merge runs
-    * only over this key's surviving cells. Tombstoned keys return zero rows,
-    * like `currentState`. */
+    * non-matching row groups inside the surviving files. The surviving
+    * files are read by the final-state rule, with the key filter below any
+    * merge. Tombstoned keys return zero rows, like `currentState`. */
   def pointLookup(repo: String, path: String): DataFrame = {
-    checkLayout()
-    val payload = tablePayload
-    val groups = keyLookupGroups(repo, path)
-    // key filter BEFORE the merge: equality lands on the parquet scan
-    val cells = readAligned(groups, payload)
-      .filter(col("repo") === repo && col("path") === path)
-    val nFiles = groups.valuesIterator.map(_.size).sum
-    // >1 surviving merge-on-read file => cross-delta LWW merge; a single
-    // file is one batch's in-batch reduction or a compaction output, both
-    // key-unique (same fast path readStateCells takes). Copy-on-write never
-    // merges: each key lives in exactly one file of its bucket.
-    val cellCols = Seq(OpCell, TsCell) ++ payload.fieldNames
-    visibleRows(
-      if (table.meta.mergeOnRead && nFiles > 1) lwwAgg(cells, cellCols) else cells, payload)
+    val head = table.currentSnapshot
+    checkLayout(head)
+    val payload = payloadAt(head)
+    visibleRows(readCells(Seq(keyLookupFiles(head, repo, path)), payload,
+      keyFilter = Some(col("repo") === repo && col("path") === path)), payload)
   }
 
-  /** Manifest file selection for a point lookup: the key's hash bucket minus
-    * every file whose fingerprint bitmap proves the key absent. Bitmaps have
-    * no false negatives, so a file containing the key always survives;
-    * fingerprint-less files (copy-on-write, compaction outputs, over-full
-    * batches) are always read. Driver-side metadata only. */
-  private def keyLookupFiles(repo: String, path: String): Seq[Icelite.DataFile] = {
+  /** Manifest file selection for a point lookup: the key's hash bucket at
+    * `snap` minus every file whose fingerprint bitmap proves the key
+    * absent. Bitmaps have no false negatives, so a file containing the key
+    * always survives; fingerprint-less files (copy-on-write, compaction
+    * outputs, over-full batches) are always read. Driver-side metadata
+    * only. */
+  private def keyLookupFiles(snap: Option[Icelite.Snapshot], repo: String,
+      path: String): List[Icelite.DataFile] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit, XxHash64}
     // seed 42 = the fixed seed of the SQL xxhash64 function (bucketCol)
-    val h = XxHash64(Seq(CatLit.create(repo, StringType), CatLit.create(path, StringType)), 42L)
-      .eval(null).asInstanceOf[Long]
+    def hash(parts: String*): Long =
+      XxHash64(parts.map(CatLit.create(_, StringType)), 42L).eval(null).asInstanceOf[Long]
+    val h = hash(repo, path)
     val bucket = (((h % conf.buckets) + conf.buckets) % conf.buckets).toInt
-    val fp: Int = if (conf.keyFpBits <= 0) 0 else {
-      // must replicate keyFpCol exactly: xxhash64('kfp', repo, path) % bits
-      val hf = XxHash64(Seq(CatLit.create("kfp", StringType),
-        CatLit.create(repo, StringType), CatLit.create(path, StringType)), 42L)
-        .eval(null).asInstanceOf[Long]
-      (((hf % conf.keyFpBits) + conf.keyFpBits) % conf.keyFpBits).toInt
-    }
-    table.currentSnapshot.toSeq
-      .flatMap(s => table.bucketListOf(s, bucket)) // targeted: no full-map walk
-      .filter(f => conf.keyFpBits <= 0 || f.keyFp.forall(Icelite.fpMayContain(_, fp)))
+    // keyFpCol's hash, unreduced: each bitmap reduces it modulo its own
+    // width, the writer's keyFpBits, which need not be this engine's
+    val fp = hash("kfp", repo, path)
+    snap.toList.flatMap(table.bucketListOf(_, bucket)) // targeted: no full-map walk
+      .filter(_.keyFp.forall(Icelite.fpMayContain(_, fp)))
   }
-
-  private def keyLookupGroups(repo: String, path: String): Map[Int, Seq[String]] =
-    keyLookupFiles(repo, path).groupBy(_.schemaId)
-      .map { case (sid, fs) => sid -> fs.map(f => table.root.resolve(f.path).toString) }
 
   /** Files `pointLookup(repo, path)` would open after bucket + fingerprint
     * pruning (tests/inspection, like `prunedFilesForLsnRange`). */
   def prunedFilesForKey(repo: String, path: String): Seq[String] =
-    keyLookupGroups(repo, path).values.flatten.toSeq
+    keyLookupFiles(table.currentSnapshot, repo, path).map(f => table.root.resolve(f.path).toString)
 
   // ---------------------------------------------------------------- maintenance
 
@@ -1466,17 +1441,19 @@ class CdcEngine(
     * the Iceberg table-sort-order contract): a merge-on-read table never
     * pays the sort on its delta hot path, yet every file that survives
     * maintenance comes out clustered and stats-prunable. */
-  private def autoCompact(buckets: Set[Int]): Long =
+  private def autoCompact(buckets: Set[Int]): Long = {
+    val payload = payloadAt(table.currentSnapshot).fieldNames
     compact(Some(buckets),
       sortBy =
         if (conf.zorderCols.nonEmpty) Nil
-        else conf.writeSortCols.filter(tablePayload.fieldNames.contains),
-      zorderBy = conf.zorderCols.filter(tablePayload.fieldNames.contains),
+        else conf.writeSortCols.filter(payload.contains),
+      zorderBy = conf.zorderCols.filter(payload.contains),
       maxFileRows = conf.writeMaxFileRows,
       purgeTombstonesBelowLsn =
         if (conf.tombstonePurgeLagLsn < 0) -1L
         else math.max(0L,
           highWatermark(table.currentSnapshotId) - conf.tombstonePurgeLagLsn))
+  }
 
   /** The Z-order (Morton) clustering key for `compact(zorderBy = cols)` —
     * Delta's OPTIMIZE ZORDER / Iceberg's z-order rewrite strategy. Each
@@ -1548,9 +1525,9 @@ class CdcEngine(
     * same columns, that turns the harvested per-file bounds into a tight
     * skip index: `scanRange` on the sorted column opens ~selectivity
     * × files instead of all of them. The split files are all `merged`
-    * (key-unique and key-disjoint — a sequential cut of one key-unique
-    * sorted partition), so reads stay raw (no LWW re-merge) and point
-    * lookups still prune by bucket + parquet key blooms.
+    * (a sequential cut of one key-unique sorted partition), so readers
+    * take the bucket as written (the final-state rule on `DataFile`) and
+    * point lookups still prune by bucket + parquet key blooms.
     *
     * `zorderBy` (mutually exclusive with `sortBy`): cluster on the MORTON
     * key of 2-4 payload columns instead — see [[zorderKey]] — so after the
@@ -1567,24 +1544,25 @@ class CdcEngine(
   def compact(buckets: Option[Set[Int]] = None, sortBy: Seq[String] = Nil,
       maxFileRows: Long = 0L, purgeTombstonesBelowLsn: Long = -1L,
       zorderBy: Seq[String] = Nil): Long = {
-    checkLayout()
-    require(sortBy.isEmpty || zorderBy.isEmpty,
-      "compact: sortBy and zorderBy are mutually exclusive cluster orders")
     // CAS pin: compaction is a read-modify-write of whole buckets, so a
     // concurrent append between the read and the replace-commit would be
     // silently folded away — conflict instead (caller/auto-compact simply
-    // re-runs later; the orphaned output is vacuum-reclaimable)
-    val observedParent = table.currentSnapshotId
-    val payload = tablePayload
-    val groups = table.currentFileGroups(buckets)
-    if (groups.isEmpty) return table.currentSnapshotId
-    val selected: Set[Int] = buckets.getOrElse(
-      table.currentSnapshot.map(s => table.bucketFilesOf(s).keySet.map(_.toInt))
-        .getOrElse(Set.empty))
-    // read pinned to the SAME snapshot the CAS expects (read + commit form
-    // one atomic unit or conflict)
-    val allCells = readStateCells(Some(selected), payload,
-      asOfSnapshot = Some(observedParent))
+    // re-runs later; the orphaned output is vacuum-reclaimable). The read
+    // is pinned to the SAME snapshot the CAS expects (read + commit form
+    // one atomic unit or conflict).
+    val head = table.currentSnapshot
+    checkLayout(head)
+    require(sortBy.isEmpty || zorderBy.isEmpty,
+      "compact: sortBy and zorderBy are mutually exclusive cluster orders")
+    val observedParent = head.fold(-1L)(_.snapshotId)
+    val all = head.fold(Map.empty[String, List[Icelite.DataFile]])(table.bucketFilesOf)
+    val oldSelected: Map[Int, List[Icelite.DataFile]] = all.collect {
+      case (b, fs) if buckets.forall(_.contains(b.toInt)) && fs.nonEmpty => b.toInt -> fs
+    }
+    if (oldSelected.isEmpty) return observedParent
+    val selected: Set[Int] = buckets.getOrElse(all.keySet.map(_.toInt))
+    val payload = payloadAt(head)
+    val allCells = readCells(oldSelected.values, payload)
     // tombstone GC: coalesce(false) so a (theoretical) null op cell is
     // KEPT, never silently purged
     val cells =
@@ -1601,10 +1579,6 @@ class CdcEngine(
       if (zorderBy.size >= 2) Seq(zorderKey(cells, zorderBy, payload))
       // one z column degenerates to a plain range sort on it
       else (sortBy ++ zorderBy).map(c => col(s"$c.v"))
-    val oldSelected: Map[Int, List[Icelite.DataFile]] =
-      table.bucketFilesOf(table.snapshot(observedParent))
-        .collect { case (b, fs) if selected.contains(b.toInt) && fs.nonEmpty =>
-          b.toInt -> fs }
     val written = writeBuckets(cells, payload, "compact", selected.size,
       merged = true, keysPerFile = maxBucketRows(oldSelected.values),
       cluster = Some(clusterCols), maxFileRows = maxFileRows)
@@ -1613,8 +1587,7 @@ class CdcEngine(
     // replace-commit only replaces buckets present in the map — an absent
     // bucket would silently KEEP its old (tombstone-only) files. Emit an
     // explicit empty file list for every SELECTED bucket that had files at
-    // the pinned snapshot and produced none. (`groups` is schemaId-keyed —
-    // using it here once wiped an unselected bucket.)
+    // the pinned snapshot and produced none.
     val bucketFiles =
       if (purgeTombstonesBelowLsn < 0) collected
       else collected ++ oldSelected.keySet
@@ -1624,17 +1597,15 @@ class CdcEngine(
     // merge-on-read) abandon the added-files key refinement — flagging a
     // no-op purge would degrade incremental reads forever. Manifest math
     // decides: no old file's LSN range reaches below the line => nothing
-    // could drop; all-merged inputs are key-disjoint final rows, so a
+    // could drop; final buckets hold key-disjoint final rows, so a
     // row-count delta IS the purge count; live deltas collapse under the
     // merge, so a no-op cannot be proven — stay conservative there.
     val purgedSomething = purgeTombstonesBelowLsn >= 0 && {
       val oldFiles = oldSelected.values.flatten
-      oldFiles.exists(_.minLsn < purgeTombstonesBelowLsn) && {
-        val allMerged = !table.meta.mergeOnRead || oldFiles.forall(_.merged)
-        if (allMerged)
-          oldFiles.map(_.rows).sum != collected.values.flatten.map(_.rows).sum
-        else true
-      }
+      val meta = table.meta
+      oldFiles.exists(_.minLsn < purgeTombstonesBelowLsn) &&
+        (!oldSelected.values.forall(meta.finalState) ||
+          oldFiles.map(_.rows).sum != collected.values.flatten.map(_.rows).sum)
     }
     // replace-commit (append=false) even on merge-on-read tables: compaction
     // folds a bucket's delta pile back into one merged file. A purging
@@ -1672,28 +1643,23 @@ class CdcEngine(
     * qualified). */
   def compactDeltas(buckets: Option[Set[Int]] = None,
       minInputFiles: Int = 2): Long = {
-    checkLayout()
+    val head = table.currentSnapshot
+    checkLayout(head)
     require(table.meta.mergeOnRead, "compactDeltas: merge-on-read tables only")
     require(minInputFiles >= 2, s"minInputFiles must be >= 2, got $minInputFiles")
-    val observedParent = table.currentSnapshotId
-    if (observedParent < 0) return observedParent
-    val payload = tablePayload
+    val observedParent = head.fold(-1L)(_.snapshotId)
     val selected: Map[Int, List[Icelite.DataFile]] =
-      table.bucketFilesOf(table.snapshot(observedParent)).collect {
+      head.fold(Map.empty[String, List[Icelite.DataFile]])(table.bucketFilesOf).collect {
         case (b, fs) if buckets.forall(_.contains(b.toInt)) &&
           fs.count(!_.merged) >= minInputFiles => b.toInt -> fs
       }
     if (selected.isEmpty) return observedParent
+    val payload = payloadAt(head)
     val deltas: Map[Int, List[Icelite.DataFile]] =
       selected.map { case (b, fs) => b -> fs.filterNot(_.merged) }
-    // (schemaId -> absolute paths) over JUST the delta files — the read
-    // never opens a base file
-    val groups: Map[Int, Seq[String]] = deltas.values.flatten.toSeq
-      .groupBy(_.schemaId)
-      .map { case (sid, fs) =>
-        sid -> fs.map(f => table.root.resolve(f.path).toString) }
-    val cells = lwwAgg(readAligned(groups, payload),
-      Seq(OpCell, TsCell) ++ payload.fieldNames)
+    // JUST the delta files (the read never opens a base file): two or more
+    // per bucket, so each bucket is merged
+    val cells = readCells(deltas.values, payload)
     // key-sorted like every other maintenance output: combined deltas live
     // until the next rewrite, so they earn page stats + dictionary runs
     val written = writeBuckets(cells, payload, "minor", selected.size, merged = false,
@@ -1755,29 +1721,29 @@ class CdcEngine(
     * bound to the new layout; THIS instance becomes invalid and every
     * bucket-dependent operation on it fails loudly (checkLayout). */
   def rebucket(newBuckets: Int): CdcEngine = {
-    checkLayout()
+    val head = table.currentSnapshot
+    checkLayout(head)
     require(newBuckets > 0, "bucket count must be positive")
     if (newBuckets == conf.buckets) return this
     val newConf = conf.copy(buckets = newBuckets)
-    if (table.currentSnapshotId < 0) { // empty chain: creation meta is the layout
-      table.updateBucketsHint(newBuckets)
-      return new CdcEngine(spark, table, newConf)
-    }
-    val payload = tablePayload
     // CAS pin: the rewrite reads the WHOLE table at this snapshot and its
     // commit replaces the entire bucket map (manifest forced full), so a
     // concurrent commit landing between the read and the commit would be
     // silently erased — its epoch stays marked committed while its rows
     // vanish. Same protection compact() and rollbackTo carry.
-    val observedParent = table.currentSnapshotId
-    val cells = readStateCells(None, payload) // merged cells, tombstones included
+    val snap = head.getOrElse { // empty chain: creation meta is the layout
+      table.updateBucketsHint(newBuckets)
+      return new CdcEngine(spark, table, newConf)
+    }
+    val payload = payloadAt(head)
+    val all = table.bucketFilesOf(snap)
+    val cells = readCells(all.values, payload) // merged cells, tombstones included
     // key-clustered, like compaction
     val written = writeBuckets(cells, payload, "rebucket", newBuckets, merged = true,
-      keysPerFile = table.bucketFilesOf(table.snapshot(observedParent)).values.flatten
-        .map(_.rows).sum,
+      keysPerFile = all.values.flatten.map(_.rows).sum,
       bucket = pmod(xxhash64(keyColumns: _*), lit(newBuckets)).cast(IntegerType))
     table.commit(-1L, written.schemaId, written.files, Nil, rowDelta = 0,
-      rebucketTo = newBuckets, expectedParentId = observedParent)
+      rebucketTo = newBuckets, expectedParentId = snap.snapshotId)
     new CdcEngine(spark, table, newConf)
   }
 

@@ -89,7 +89,22 @@ object Icelite {
     * opened. Absent (`None`) means "may contain anything — always read":
     * copy-on-write rewrites and compaction outputs hold full bucket state,
     * where a batch-key fingerprint would be a false-negative-prone
-    * under-approximation. */
+    * under-approximation.
+    *
+    * The final-state rule ([[TableMeta.finalState]]) decides, per bucket,
+    * whether a reader may take its files as written or must LWW-merge
+    * them. Every file is key-unique (each is written from one LWW
+    * reduction), so a bucket is FINAL when it has one file, or when every
+    * file is `merged`: merged files of one bucket are also key-disjoint.
+    * A copy-on-write table counts as merged throughout (every commit
+    * rewrites whole buckets, including manifests written before `merged`
+    * existed). Any other bucket (a merge-on-read delta pile, or a base plus
+    * deltas) assembles a row from cells across its files, so it is
+    * LWW-merged, and payload-stats pruning of its files is unsound: a
+    * matching key's other columns may carry forward from a skipped file.
+    * The rule holds for any subset of a bucket's files too, so a reader
+    * that pruned files first (by key fingerprint or LSN range) applies it
+    * to the files it kept. */
   case class DataFile(
       path: String, // relative to table root
       schemaId: Int,
@@ -97,17 +112,12 @@ object Icelite {
       minLsn: Long = Long.MinValue,
       maxLsn: Long = Long.MaxValue,
       keyFp: Option[String] = None,
-      // true = this file holds MERGED final state: key-unique rows, and
-      // key-DISJOINT from every other merged file of its bucket (copy-on-
-      // write rewrites, compaction/rebucket outputs — including compaction
-      // split into several sorted files by maxFileRows). Readers use it two
-      // ways: a bucket whose files are all merged is read RAW (no LWW
-      // re-merge even when compaction split it), and only merged files are
-      // candidates for payload-column stats pruning (skipping a DELTA file
-      // by a payload predicate is unsound — a matching key's other columns
-      // carry forward from the skipped file). false (and the default for
-      // manifests written before this field existed) = treat as a delta:
-      // always merge, never stats-prune. Conservative in both directions.
+      // true = this file holds MERGED final state, key-DISJOINT from every
+      // other merged file of its bucket (copy-on-write rewrites,
+      // compaction/rebucket outputs, including a compaction split into
+      // several sorted files by maxFileRows); see the final-state rule
+      // above. false (and the default for manifests written before this
+      // field existed) = a delta.
       merged: Boolean = false,
       // Rows VISIBLE to readers (rows minus retained tombstones), harvested
       // from the same footer pass as `rows` when every row group's op-column
@@ -189,7 +199,13 @@ object Icelite {
     * merge-on-read (commits append per-batch delta files, reads apply the
     * LWW cell merge; compaction folds deltas back). A read-time property of
     * the table, not of one engine instance, so it lives in table metadata. */
-  case class TableMeta(keyCols: List[String], buckets: Int, mergeOnRead: Boolean = false)
+  case class TableMeta(keyCols: List[String], buckets: Int, mergeOnRead: Boolean = false) {
+
+    /** The final-state rule (see [[DataFile]]): may one bucket's `files`
+      * be read as written, with no LWW merge? */
+    def finalState(files: Seq[DataFile]): Boolean =
+      !mergeOnRead || files.lengthCompare(1) <= 0 || files.forall(_.merged)
+  }
 
   /** What one walk of the chain window (since, to] tells an incremental
     * reader (see [[IceliteTable.window]]):
@@ -228,11 +244,13 @@ object Icelite {
   }
 
   /** Bitmap membership: false = the file PROVABLY does not contain any key
-    * with this fingerprint (no false negatives); true = may contain. */
-  def fpMayContain(b64: String, fp: Int): Boolean = {
+    * with this fingerprint (no false negatives); true = may contain. `fp`
+    * is reduced modulo the bitmap's OWN width, so a key's unreduced hash
+    * tests bitmaps written at any width. */
+  def fpMayContain(b64: String, fp: Long): Boolean = {
     val arr = java.util.Base64.getDecoder.decode(b64)
     val bits = arr.length * 8
-    val i = ((fp % bits) + bits) % bits
+    val i = (((fp % bits) + bits) % bits).toInt
     (arr(i >> 3) & (1 << (i & 7))) != 0
   }
 
@@ -695,40 +713,52 @@ class IceliteTable private (val root: Path) {
     * to a set of buckets (manifest-level partition pruning: the file list is
     * computed from metadata BEFORE any Spark plan is built). */
   def currentFiles(buckets: Option[Set[Int]] = None): Seq[String] =
-    currentSnapshot.toSeq.flatMap { s =>
-      bucketFilesOf(s).iterator.collect {
-        case (b, files) if buckets.forall(_.contains(b.toInt)) => files
-      }.flatten.map(f => root.resolve(f.path).toString)
-    }
+    currentSnapshot.toSeq.flatMap(bucketLists(_, buckets).flatten)
+      .map(f => root.resolve(f.path).toString)
 
-  /** (files, schemaId) groups for the current snapshot restricted to buckets —
-    * readers group by writer schema so widened columns can be up-cast.
+  /** (files, schemaId) groups for the current snapshot restricted to buckets.
     * `lsnRange` additionally SKIPS files whose footer-derived [minLsn,
     * maxLsn] does not overlap the requested range (file-level stats
     * pruning, the manifest analog of the reference's as-of index). */
   def currentFileGroups(buckets: Option[Set[Int]] = None,
       lsnRange: Option[(Long, Long)] = None): Map[Int, Seq[String]] =
-    currentSnapshot.map(fileGroupsOf(_, buckets, f => lsnRange.forall {
-      case (lo, hi) => f.maxLsn >= lo && f.minLsn <= hi
-    })).getOrElse(Map.empty)
+    currentSnapshot.fold(Map.empty[Int, Seq[String]])(s =>
+      fileGroups(bucketLists(s, buckets).flatten.filter(f => lsnRange.forall {
+        case (lo, hi) => f.maxLsn >= lo && f.minLsn <= hi
+      })))
 
   /** Time travel: file groups of ANY snapshot in the chain (Iceberg's
     * `VERSION AS OF`). Snapshots are immutable, so reading an old id is
     * always consistent regardless of later commits. */
   def fileGroupsAt(snapshotId: Long, buckets: Option[Set[Int]] = None): Map[Int, Seq[String]] =
-    fileGroupsOf(snapshot(snapshotId), buckets)
+    fileGroups(bucketLists(snapshot(snapshotId), buckets).flatten)
+
+  /** Files grouped by writer schema id, as absolute paths: readers scan
+    * each writer schema once, so widened columns can be up-cast. */
+  def fileGroups(files: Iterable[DataFile]): Map[Int, Seq[String]] =
+    files.toSeq.groupBy(_.schemaId)
+      .map { case (sid, fs) => sid -> fs.map(f => root.resolve(f.path).toString) }
+
+  /** `s`'s file list of each bucket in `buckets` (None = every bucket). */
+  def bucketLists(s: Snapshot, buckets: Option[Set[Int]]): Iterable[List[DataFile]] =
+    bucketFilesOf(s).collect { case (b, fs) if buckets.forall(_.contains(b.toInt)) => fs }
+
+  /** [[filesAddedSince]], grouped by writer schema ([[fileGroups]]). */
+  def fileGroupsAddedSince(sinceSnapshotId: Long,
+      buckets: Option[Set[Int]] = None,
+      toSnapshotId: Long = -1L): Option[Map[Int, Seq[String]]] =
+    filesAddedSince(sinceSnapshotId, buckets, toSnapshotId).map(fileGroups)
 
   /** Manifest DIFF: data files in the current snapshot but not in
     * `sinceSnapshotId` (by path — files are immutable, so path identity is
-    * content identity), grouped by writer schema id. This is the file set an
+    * content identity). This is the file set an
     * incremental reader must scan: on merge-on-read tables it is exactly the
     * delta files of the intervening batches (I/O proportional to CHANGE
     * volume, not table size); on copy-on-write it is the rewritten buckets.
     * Returns None when `since` was expired out of the chain (caller must
     * fall back to a full read). */
-  def fileGroupsAddedSince(sinceSnapshotId: Long,
-      buckets: Option[Set[Int]] = None,
-      toSnapshotId: Long = -1L): Option[Map[Int, Seq[String]]] = {
+  def filesAddedSince(sinceSnapshotId: Long, buckets: Option[Set[Int]],
+      toSnapshotId: Long): Option[Seq[DataFile]] = {
     // validate by ANCESTRY (walking parent pointers), not manifest-file
     // existence: a crash-orphaned manifest — written but never
     // pointer-committed — exists on disk yet is not an ancestor, and a
@@ -736,21 +766,22 @@ class IceliteTable private (val root: Path) {
     // `to` (default: current) must itself be in the chain, and `since`
     // must be an ancestor of `to`.
     val toId = if (toSnapshotId >= 0) toSnapshotId else currentSnapshotId
-    if (toId < 0) Some(Map.empty)
+    if (toId < 0) Some(Nil)
     else if (!isAncestor(toId) ||
       sinceSnapshotId >= 0 && !isAncestorFrom(sinceSnapshotId, toId)) None
-    else Some(fileGroupsAdded(sinceSnapshotId, toId, buckets))
+    else Some(filesAdded(
+      if (sinceSnapshotId < 0) None else Some(snapshot(sinceSnapshotId)),
+      snapshot(toId), buckets))
   }
 
-  /** The diff behind [[fileGroupsAddedSince]], for a caller that already
-    * proved `since` (< 0: none) an ancestor of `to` — e.g. by a
-    * [[window]]. Reads only the two endpoints' resolved file sets. */
-  def fileGroupsAdded(sinceSnapshotId: Long, toSnapshotId: Long,
-      buckets: Option[Set[Int]]): Map[Int, Seq[String]] = {
+  /** The diff behind [[filesAddedSince]], for a caller that already proved
+    * `since` (None: none) an ancestor of `to` — e.g. by a [[window]].
+    * Reads only the two endpoints' resolved file sets. */
+  def filesAdded(since: Option[Snapshot], to: Snapshot,
+      buckets: Option[Set[Int]]): Seq[DataFile] = {
     val oldPaths: Set[String] =
-      if (sinceSnapshotId < 0) Set.empty
-      else bucketFilesOf(snapshot(sinceSnapshotId)).valuesIterator.flatten.map(_.path).toSet
-    fileGroupsOf(snapshot(toSnapshotId), buckets, f => !oldPaths.contains(f.path))
+      since.fold(Set.empty[String])(bucketFilesOf(_).valuesIterator.flatten.map(_.path).toSet)
+    bucketLists(to, buckets).flatten.filterNot(f => oldPaths.contains(f.path)).toSeq
   }
 
   /** Is `id` an ancestor of (or equal to) the current snapshot? */
@@ -759,16 +790,6 @@ class IceliteTable private (val root: Path) {
   /** Is `id` an ancestor of (or equal to) `from`? */
   def isAncestorFrom(id: Long, from: Long): Boolean =
     id >= 0 && walk(from, _ == id).end() == id
-
-  private def fileGroupsOf(s: Snapshot, buckets: Option[Set[Int]],
-      keep: DataFile => Boolean = _ => true): Map[Int, Seq[String]] =
-    bucketFilesOf(s).iterator
-      .filter { case (b, _) => buckets.forall(_.contains(b.toInt)) }
-      .flatMap { case (_, files) => files }
-      .filter(keep)
-      .toSeq
-      .groupBy(_.schemaId)
-      .map { case (sid, fs) => sid -> fs.map(f => root.resolve(f.path).toString) }
 
   /** RESTORE (Delta `RESTORE TABLE ... TO VERSION`, Iceberg
     * rollback-as-new-commit): commit a NEW snapshot whose visible file set

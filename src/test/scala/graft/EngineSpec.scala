@@ -465,6 +465,22 @@ class EngineSpec extends AnyFunSuite {
     // the read plans over ONE bucket's files, not the table
     val p = got.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") && p.contains("repo"))
+    // the same on a merge-on-read bucket holding a base and a delta: the
+    // key predicate reaches the parquet scan below the LWW aggregate
+    val mor = new CdcEngine(spark, IceliteTable.create(
+      s"${SparkTestBase.tmpDir("icelite")}/t", Seq("repo", "path"), 16, mergeOnRead = true),
+      EngineConf(buckets = 16))
+    mor.applyBatch(0, ev)
+    mor.compact()
+    mor.applyBatch(1, ev.filter(col("repo") === repo && col("path") === path)
+      .withColumn("commit_lsn", col("commit_lsn") + 100000L))
+    assert(mor.prunedFilesForKey(repo, path).size === 2)
+    val merged = mor.pointLookup(repo, path)
+    assert(merged.drop("_lsn").collect().toSeq === got.drop("_lsn").collect().toSeq)
+    assert(merged.queryExecution.optimizedPlan.collectFirst {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }.nonEmpty)
+    val mp = merged.queryExecution.executedPlan.toString
+    assert(mp.contains("PushedFilters") && mp.contains(s"EqualTo(repo,$repo)"), mp)
     // bloom filters present in the written footers for the key columns
     val hc = spark.sessionState.newHadoopConf()
     val f = engine.table.currentFiles().head

@@ -157,6 +157,40 @@ class FingerprintSpec extends AnyFunSuite {
     assert(viaLookup.toSeq === viaState.toSeq)
   }
 
+  test("a reader at another keyFpBits keeps every file that holds the key") {
+    val dir = SparkTestBase.tmpDir("fp")
+    val t = IceliteTable.create(s"$dir/t", Seq("repo", "path"), 4, mergeOnRead = true)
+    val writer = new CdcEngine(spark, t, EngineConf(buckets = 4, keyFpBits = 8192))
+    val n = 1200L
+    Synth.batches(Synth.events(spark, n, seed = 76, repos = 10, pathsPerRepo = 20), 6, n)
+      .zipWithIndex.foreach { case (b, i) => writer.applyBatch(i.toLong, b) }
+    val files = t.bucketFilesOf(t.currentSnapshot.get).valuesIterator.flatten.toSeq
+    assert(files.forall(_.keyFp.exists(java.util.Base64.getDecoder.decode(_).length == 1024)))
+    val reader = new CdcEngine(spark, t, EngineConf(buckets = 4, keyFpBits = 4096))
+    def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    // key -> the data files that actually hold it
+    val holders = spark.read.parquet(files.map(f => t.root.resolve(f.path).toString): _*)
+      .select(col("repo"), col("path"), input_file_name().as("f")).collect()
+      .groupBy(r => (r.getString(0), r.getString(1)))
+      .map { case (k, rs) => k -> rs.map(r => name(r.getString(2))).toSet }
+    assert(holders.size > 100)
+    holders.foreach { case ((repo, path), in) =>
+      val kept = reader.prunedFilesForKey(repo, path).map(name).toSet
+      assert(in.subsetOf(kept), s"($repo,$path) is in ${in -- kept}, pruned away")
+    }
+    holders.keys.toSeq.sorted.take(5).foreach { case (repo, path) =>
+      assert(reader.pointLookup(repo, path).drop("content_sha256").collect().toSeq ===
+        reader.currentState().filter(col("repo") === repo && col("path") === path)
+          .drop("content_sha256").collect().toSeq)
+    }
+  }
+
+  test("keyFpBits must be 0 or a positive multiple of 8") {
+    Seq(-8, 4, 12, 4100).foreach(b =>
+      intercept[IllegalArgumentException](EngineConf(keyFpBits = b)))
+    Seq(0, 8, 4096).foreach(b => assert(EngineConf(keyFpBits = b).keyFpBits === b))
+  }
+
   test("keyFpBits = 0 disables the stat entirely") {
     val conf = EngineConf(buckets = 2, keyFpBits = 0)
     val engine = newEngine(mor = true, conf)
